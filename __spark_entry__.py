@@ -82,36 +82,34 @@ _DRIVER_WINDOW: tuple[str, ...] = (
 )
 
 
+#: every module that registers specs; a module that fails to import
+#: raises instead of silently shrinking the registry (and every gate)
+SPEC_MODULES = (
+    "gcp_dbt_data_engineering_spark.plans.analytics",
+    "gcp_dbt_data_engineering_spark.operators.dq",
+    "gcp_dbt_data_engineering_spark.operators.profile",
+    "gcp_dbt_data_engineering_spark.operators.dedup",
+    "gcp_dbt_data_engineering_spark.operators.similarity",
+    "gcp_dbt_data_engineering_spark.operators.semdedup",
+    "gcp_dbt_data_engineering_spark.operators.text",
+    "gcp_dbt_data_engineering_spark.operators.multimodal",
+    "gcp_dbt_data_engineering_spark.operators.pipeline",
+    "gcp_dbt_data_engineering_spark.operators.sketch",
+    "gcp_dbt_data_engineering_spark.plans.models",
+    "gcp_dbt_data_engineering_spark.plans.windows",
+    "gcp_dbt_data_engineering_spark.plans.stats",
+    "gcp_dbt_data_engineering_spark.plans.tpch_shapes",
+    "gcp_dbt_data_engineering_spark.plans.layout",
+    "gcp_dbt_data_engineering_spark.streaming.events",
+)
+
+
 def _all_specs() -> dict[str, QuerySpec]:
+    import importlib
+
     specs: dict[str, QuerySpec] = {}
-    from gcp_dbt_data_engineering_spark.plans import analytics
-
-    modules = [analytics]
-    for modname in (
-        "gcp_dbt_data_engineering_spark.operators.dq",
-        "gcp_dbt_data_engineering_spark.operators.profile",
-        "gcp_dbt_data_engineering_spark.operators.dedup",
-        "gcp_dbt_data_engineering_spark.operators.similarity",
-        "gcp_dbt_data_engineering_spark.operators.semdedup",
-        "gcp_dbt_data_engineering_spark.operators.text",
-        "gcp_dbt_data_engineering_spark.operators.multimodal",
-        "gcp_dbt_data_engineering_spark.operators.pipeline",
-        "gcp_dbt_data_engineering_spark.operators.sketch",
-        "gcp_dbt_data_engineering_spark.plans.models",
-        "gcp_dbt_data_engineering_spark.plans.windows",
-        "gcp_dbt_data_engineering_spark.plans.stats",
-        "gcp_dbt_data_engineering_spark.plans.tpch_shapes",
-        "gcp_dbt_data_engineering_spark.plans.layout",
-        "gcp_dbt_data_engineering_spark.streaming.events",
-    ):
-        try:
-            import importlib
-
-            modules.append(importlib.import_module(modname))
-        except ImportError:
-            continue  # module not built yet this round
-    for mod in modules:
-        specs.update(getattr(mod, "SPECS", {}))
+    for modname in SPEC_MODULES:
+        specs.update(importlib.import_module(modname).SPECS)
     window = [n for n in _DRIVER_WINDOW if n in specs]
     rest = [n for n in specs if n not in set(_DRIVER_WINDOW)]
     return {name: specs[name] for name in (*window, *rest)}

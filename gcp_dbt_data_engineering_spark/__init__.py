@@ -26,4 +26,12 @@ planning. Designed for 100 TB clusters, tested on local[*] parquet.
 
 __version__ = "0.1.0"
 
+import os as _os
+
+#: the checkout this package runs from, and the directory under it that
+#: holds every derived artifact (staged tables, layouts, warehouses,
+#: stream results) — so two checkouts never write into each other
+REPO_ROOT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+ARTIFACTS_DIR = _os.path.join(REPO_ROOT, ".artifacts")
+
 from .session import clear_caches, get_spark, tune  # noqa: F401

@@ -12,10 +12,14 @@ Spark's execution model:
   per check + one ``count(*)`` — i.e. ONE scan and ONE job regardless
   of check count. At 100 TB that's the difference between N full scans
   and one.
-- Uniqueness checks need a shuffle on their key columns and stay as one
-  ``groupBy`` per key combination (``dq_sql_notes.md:116-117``), unioned
-  into the same lazily-built results DataFrame. Nothing is collected on
-  the driver; the caller decides the action/sink.
+- Uniqueness checks need a shuffle on their key columns: each is one
+  ``groupBy`` per key combination (``dq_sql_notes.md:116-117``) and ONE
+  aggregate over its group counts, which yields both the duplicated
+  groups and the row total (the counts sum to it), so no check re-scans
+  the table. Every branch is unioned into the same lazily-built results
+  DataFrame. Nothing is collected here; the caller decides the action
+  or sink (``orchestration.daily_pipeline`` materializes it once, in
+  the DQ job itself).
 - Results are rows in a fixed schema (tests-as-data idiom,
   ``dq_sql_notes.md:87-97``), one row per check.
 
@@ -45,6 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import REPO_ROOT
 from ..plans.spec import QuerySpec
 from ..security import validate_config
 from ..sources import TABLE_DTYPES, load_table
@@ -240,7 +245,11 @@ class DQEngine:
 
     ``run`` returns the results DataFrame lazily — callers append it to
     a results table / show it, mirroring the reference's results-sink
-    flow (``tests/profiling_example.py:24-31``).
+    flow (``tests/profiling_example.py:24-31``). The plan is one
+    aggregate scan for the single-pass checks plus one grouped
+    aggregate per uniqueness check; a caller that reads the results
+    more than once materializes them itself (``daily_pipeline``
+    checkpoints each suite in its DQ job).
     """
 
     def __init__(self, spark: SparkSession):
@@ -333,15 +342,19 @@ class DQEngine:
                 ).select("r.*")
             )
 
-        # ---- uniqueness: one shuffle per key combo; failed_records is the
-        # number of duplicated key groups (reference: dq_sql_notes.md:117)
-        total_row = base.select("__total")
+        # ---- uniqueness: one shuffle per key combo, then ONE aggregate
+        # over its group counts. failed_records is the number of
+        # duplicated key groups (reference: dq_sql_notes.md:117); the
+        # group counts sum to the row count (NULL keys form groups too),
+        # so the total needs no second scan of the table.
         for u in uniq:
             dup_groups = (
                 df.groupBy(*u["keys"])
                 .agg(F.count(F.lit(1)).alias("__cnt"))
-                .filter(F.col("__cnt") > 1)
-                .agg(F.count(F.lit(1)).alias("__dups"))
+                .selectExpr(
+                    "COUNT(CASE WHEN __cnt > 1 THEN 1 END) AS __dups",
+                    "COALESCE(SUM(__cnt), 0) AS __total",
+                )
             )
             uch = _Check(
                 None,
@@ -351,8 +364,7 @@ class DQEngine:
                 severity=u["severity"],
             )
             parts.append(
-                dup_groups.crossJoin(total_row)
-                .selectExpr(result_struct_sql(uch, "__dups") + " AS r")
+                dup_groups.selectExpr(result_struct_sql(uch, "__dups") + " AS r")
                 .select("r.*")
             )
 
@@ -916,11 +928,7 @@ def load_job_config(path: str) -> dict[str, Any]:
         return json.loads(text)
 
 
-ORDERS_YAML_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "configs",
-    "dq_orders_daily.yaml",
-)
+ORDERS_YAML_PATH = os.path.join(REPO_ROOT, "configs", "dq_orders_daily.yaml")
 
 
 def dq_yaml_orders_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -178,7 +178,12 @@ def daily_pipeline(sf_dir: str, sender: Any | None = None) -> list[JobSpec]:
     fan out per table config (orchestrate.md:311-323 schedules), then
     a notification job delivers ``on_failure``/``on_warning`` payloads
     through ``sender`` (``example_templates.yaml:6-8``; defaults to
-    :class:`~.operators.dq.LogSender` — production swaps in SMTP)."""
+    :class:`~.operators.dq.LogSender` — production swaps in SMTP).
+
+    Each DQ job computes its suite eagerly (``localCheckpoint``), so a
+    suite that fails at run time fails its own job, whose retry re-runs
+    it, and SUCCESS means the suite ran. Notify reads those
+    materialized rows instead of recomputing the suites."""
     from .operators.dq import (
         CUSTOMER_DQ_CONFIG,
         EVENTS_DQ_CONFIG,
@@ -199,15 +204,13 @@ def daily_pipeline(sf_dir: str, sender: Any | None = None) -> list[JobSpec]:
             p.profile_multiple_tables(PROFILE_TABLES, sf_dir)
         )
 
-    def dq_customer(spark):
-        df = DQEngine(spark).run(CUSTOMER_DQ_CONFIG, sf_dir=sf_dir)
-        dq_results["dq_customer"] = (df, CUSTOMER_DQ_CONFIG)
-        return df
+    def dq_job(name, cfg):
+        def run(spark):
+            df = DQEngine(spark).run(cfg, sf_dir=sf_dir).localCheckpoint()
+            dq_results[name] = (df, cfg)
+            return df
 
-    def dq_events(spark):
-        df = DQEngine(spark).run(EVENTS_DQ_CONFIG, sf_dir=sf_dir)
-        dq_results["dq_events"] = (df, EVENTS_DQ_CONFIG)
-        return df
+        return run
 
     def notify(spark):
         sent = []
@@ -219,11 +222,13 @@ def daily_pipeline(sf_dir: str, sender: Any | None = None) -> list[JobSpec]:
     return [
         JobSpec("data_profiling", profiling, schedule="0 7 * * *"),
         JobSpec(
-            "dq_customer", dq_customer, schedule="0 9 * * *",
+            "dq_customer", dq_job("dq_customer", CUSTOMER_DQ_CONFIG),
+            schedule="0 9 * * *",
             depends_on=["data_profiling"],
         ),
         JobSpec(
-            "dq_events", dq_events, schedule="0 9 * * *",
+            "dq_events", dq_job("dq_events", EVENTS_DQ_CONFIG),
+            schedule="0 9 * * *",
             depends_on=["data_profiling"],
         ),
         JobSpec(

@@ -29,11 +29,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ARTIFACTS_DIR
 from ..sources import load_table
 from .models import _write_schema_stub, read_table
 from .spec import QuerySpec, money_sum, sql_money_sum
 
-ART = "/root/repo/.artifacts/layout"
+ART = os.path.join(ARTIFACTS_DIR, "layout")
 
 N_BUCKETS = 8
 

@@ -49,6 +49,7 @@ from graphlib import TopologicalSorter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ARTIFACTS_DIR, REPO_ROOT
 from ..sources import register_all
 from .spec import QuerySpec
 
@@ -513,7 +514,7 @@ class ModelGraph:
         self,
         models: dict[str, str],
         defaults: dict | None = None,
-        warehouse_dir: str = "/root/repo/.artifacts/warehouse",
+        warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse"),
         seeds: dict[str, str] | None = None,
         seed_schemas: dict[str, str] | None = None,
         target_dir: str | None = None,
@@ -1955,7 +1956,7 @@ INCREMENTAL_SLICES = (
 
 def model_incremental_daily_revenue(
     spark: SparkSession, sf_dir: str,
-    warehouse_dir: str = "/root/repo/.artifacts/warehouse_incr",
+    warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse_incr"),
 ) -> DataFrame:
     import shutil
 
@@ -2027,7 +2028,7 @@ MERGE_BATCHES = (
 
 def model_merge_customer_state(
     spark: SparkSession, sf_dir: str,
-    warehouse_dir: str = "/root/repo/.artifacts/warehouse_merge",
+    warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse_merge"),
 ) -> DataFrame:
     import shutil
 
@@ -2088,10 +2089,7 @@ GROUP BY t.o_custkey
 # `dbt seed` materialization: csv → warehouse table → ref()-able node.
 # ---------------------------------------------------------------------------
 
-_REPO_ROOT = os.path.normpath(
-    os.path.join(os.path.dirname(__file__), "..", "..")
-)
-SEED_CSV_PATH = os.path.join(_REPO_ROOT, "seeds", "country_codes.csv")
+SEED_CSV_PATH = os.path.join(REPO_ROOT, "seeds", "country_codes.csv")
 
 #: dbt column_types for the seed — pinned so neither engine leans on
 #: csv type inference.
@@ -2131,7 +2129,7 @@ def dbt_seed_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         SEED_PROJECT_MODELS,
         seeds={"country_codes": SEED_CSV_PATH},
         seed_schemas=SEED_SCHEMAS,
-        target_dir=f"{_REPO_ROOT}/.artifacts/target",
+        target_dir=os.path.join(ARTIFACTS_DIR, "target"),
     )
     out = g.run(spark)
     return out["mart_region_countries"].select(
@@ -2182,7 +2180,7 @@ def dbt_build_statuses(spark: SparkSession, sf_dir: str) -> DataFrame:
         BUILD_DEMO_MODELS,
         seeds={"country_codes": SEED_CSV_PATH},
         seed_schemas=SEED_SCHEMAS,
-        warehouse_dir=f"{_REPO_ROOT}/.artifacts/warehouse",
+        warehouse_dir=os.path.join(ARTIFACTS_DIR, "warehouse"),
     )
     res = g.build(
         spark,
@@ -2361,7 +2359,7 @@ _INCR_GUARD_REPLAY = "2024-01-10"  # run 2 re-delivers days < this
 
 def model_incremental_late_data(
     spark: SparkSession, sf_dir: str,
-    warehouse_dir: str = "/root/repo/.artifacts/warehouse_incr_guard",
+    warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse_incr_guard"),
 ) -> DataFrame:
     import shutil
 

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ARTIFACTS_DIR
 from ..session import tune
 
 #: All tables the driver test data provides (TESTDATA.md).
@@ -97,7 +98,7 @@ def table_path(sf_dir: str, name: str) -> str:
 #: also lets spread() skip its repartition shuffle in every corpus
 #: operator (measured: unigram-logprob 0.92->0.50 s, minhash 0.82->0.69).
 STAGE_MIN_BYTES = 400_000
-STAGE_DIR = "/root/repo/.artifacts/staged"
+STAGE_DIR = os.path.join(ARTIFACTS_DIR, "staged")
 
 
 def _stage_if_unsplittable(

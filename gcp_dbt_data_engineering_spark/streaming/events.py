@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import ARTIFACTS_DIR
 from ..plans.spec import QuerySpec, money_sum, sql_money_sum
 from ..session import tune
 from ..sources import load_table, table_path
@@ -828,7 +829,7 @@ def run_dq_stream(
     spark: SparkSession,
     sf_dir: str,
     config: dict | None = None,
-    results_path: str = "/root/repo/.artifacts/dq_stream_results",
+    results_path: str = os.path.join(ARTIFACTS_DIR, "dq_stream_results"),
 ) -> DataFrame:
     """Run the config-driven DQ suite over the event stream.
 

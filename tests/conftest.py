@@ -20,3 +20,19 @@ def spark():
     s = get_spark(app_name="pytest", shuffle_partitions=8, master="local[8]")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def nasty_corpus() -> str:
+    """The adversarial corpus of ``tools/make_nasty.py``, built on first use."""
+    import subprocess
+
+    from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
+
+    corpus = os.path.join(ARTIFACTS_DIR, "sf0.01_nasty")
+    if not os.path.exists(os.path.join(corpus, "events.parquet")):
+        subprocess.run(
+            [sys.executable, os.path.join(REPO, "tools", "make_nasty.py")],
+            check=True,
+        )
+    return corpus

@@ -7,10 +7,16 @@ hand-written example configs cannot cover.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from gcp_dbt_data_engineering_spark import REPO_ROOT
 from gcp_dbt_data_engineering_spark.operators.dq import (
+    CUSTOMER_DQ_CONFIG,
+    EVENTS_DQ_CONFIG,
     DQEngine,
     compile_oracle_sql,
 )
@@ -83,6 +89,51 @@ def test_random_configs_match_oracle(spark, cfg):
     assert res["match"], (config, res)
 
 
+def test_uniqueness_on_empty_slice_counts_zero_rows(spark):
+    """A day with no events: the uniqueness aggregate runs over zero
+    groups, and its row total must read 0, not NULL."""
+    config = {**EVENTS_DQ_CONFIG, "fecha": "1999-01-01"}
+    df = DQEngine(spark).run(config, sf_dir=SF)
+    uniq = [r for r in df.collect() if r.test_category == "uniqueness"]
+    assert len(uniq) == 2
+    assert all(r.total_records == 0 and r.failed_records == 0 for r in uniq)
+    res = compare(df, compile_oracle_sql(config), SF)
+    assert res["match"], res
+
+
+@pytest.mark.parametrize(
+    "config, null_dup",
+    [
+        # two NULL-name customers form one duplicated NULL key group
+        (
+            {
+                **CUSTOMER_DQ_CONFIG,
+                "tests": {
+                    "completeness": ["c_name"],
+                    "uniqueness": [["c_name"], ["c_nationkey", "c_mktsegment"]],
+                },
+            },
+            "uniqueness_c_name",
+        ),
+        # the day holding the NULL user_id and NULL event_type events
+        ({**EVENTS_DQ_CONFIG, "fecha": "2024-01-10"}, None),
+    ],
+    ids=["customer", "events"],
+)
+def test_uniqueness_with_null_keys_matches_oracle(
+    spark, nasty_corpus, config, null_dup
+):
+    """NULL keys group together in both engines, and their groups count
+    toward the row total the uniqueness aggregate derives."""
+    df = DQEngine(spark).run(config, sf_dir=nasty_corpus)
+    rows = df.collect()
+    assert len({r.total_records for r in rows}) == 1  # one row total
+    if null_dup:
+        assert next(r for r in rows if r.test_name == null_dup).failed_records
+    res = compare(df, compile_oracle_sql(config), nasty_corpus)
+    assert res["match"], res
+
+
 def test_weekly_yaml_equals_dict_config(spark):
     """The weekly customer YAML template (reference's second job shape,
     full_table_scan) must produce the same results as the equivalent
@@ -92,7 +143,9 @@ def test_weekly_yaml_equals_dict_config(spark):
         load_job_config,
     )
 
-    yaml_cfg = load_job_config("/root/repo/configs/dq_customer_weekly.yaml")
+    yaml_cfg = load_job_config(
+        os.path.join(REPO_ROOT, "configs", "dq_customer_weekly.yaml")
+    )
     assert yaml_cfg["processing"]["full_table_scan"] is True
     a = DQEngine(spark).run(yaml_cfg, sf_dir=SF)
     b = DQEngine(spark).run(CUSTOMER_DQ_CONFIG, sf_dir=SF)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.plans.models import (
     SPECS,
     model_incremental_daily_revenue,
@@ -13,7 +14,7 @@ from gcp_dbt_data_engineering_spark.plans.models import (
 from .oracle_harness import compare
 
 SF = "/root/testdata/sf0.01"
-WH = "/root/repo/.artifacts/warehouse_incr_test"
+WH = os.path.join(ARTIFACTS_DIR, "warehouse_incr_test")
 
 
 def test_incremental_matches_oneshot_oracle(spark):
@@ -66,7 +67,7 @@ def test_merge_replay_is_idempotent(spark):
     from pyspark.sql import functions as F
     import shutil
 
-    wh = "/root/repo/.artifacts/warehouse_merge_test"
+    wh = os.path.join(ARTIFACTS_DIR, "warehouse_merge_test")
     shutil.rmtree(wh, ignore_errors=True)
     orders = register_all(spark, SF, tables=("orders",))["orders"]
     graph = ModelGraph(MERGE_MODEL, warehouse_dir=wh)

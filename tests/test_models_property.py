@@ -8,10 +8,13 @@ hand-written example models cannot cover."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.plans.models import ModelGraph
 
 
@@ -87,7 +90,7 @@ def _duckdb_expected(models: dict[str, str], mats: dict[str, str]):
 def test_model_graph_matches_duckdb_replay(spark, gm):
     models, mats = gm
     results = ModelGraph(
-        models, warehouse_dir="/root/repo/.artifacts/prop_warehouse"
+        models, warehouse_dir=os.path.join(ARTIFACTS_DIR, "prop_warehouse")
     ).run(spark)
     expected = _duckdb_expected(models, mats)
     assert set(results) == set(expected)

@@ -9,14 +9,17 @@ deduped to latest-updated_at (never multiple open rows per key).
 
 from __future__ import annotations
 
+import os
+
 import shutil
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.plans.models import ModelGraph
 
-WH = "/root/repo/.artifacts/warehouse_snapshot_test"
+WH = os.path.join(ARTIFACTS_DIR, "warehouse_snapshot_test")
 
 SNAPSHOT_MODEL: dict[str, str] = {
     "customer_snapshot": """

@@ -69,6 +69,60 @@ def test_daily_pipeline_runs_profiling_before_dq(spark):
     assert res["dq_customer"].result.count() > 0
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of every job the status store has recorded so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_notify_reuses_computed_suites(spark):
+    """Each DQ job materializes its suite; notify applies thresholds
+    to those rows instead of re-running both suites' scans."""
+    jobs = daily_pipeline(SF)
+    notify = next(j for j in jobs if j.name == "dq_notify")
+    inner, launched = notify.fn, []
+
+    def counted(spark):
+        before = _job_ids(spark)
+        out = inner(spark)
+        launched.extend(_job_ids(spark) - before)
+        return out
+
+    notify.fn = counted
+    res = LocalScheduler(jobs).run(spark=spark)
+    assert {r.status for r in res.values()} == {"SUCCESS"}
+    assert res["dq_notify"].result  # the by-design failure is delivered
+    assert 0 < len(launched) <= 2, launched
+
+
+def test_suite_failing_at_run_time_fails_its_own_job(spark, monkeypatch):
+    """A custom condition the guard accepts and Spark analyses, but
+    that raises while it executes (an ANSI cast of a name), must fail
+    the DQ job that owns the suite, after its retry, and skip notify;
+    a lazily returned suite would pass its job and fail in notify."""
+    from gcp_dbt_data_engineering_spark.operators import dq
+
+    bad = {
+        **CUSTOMER_DQ_CONFIG,
+        "tests": {
+            **CUSTOMER_DQ_CONFIG["tests"],
+            "custom_sql": [
+                {"test_name": "name_is_int",
+                 "sql_condition": "CAST(c_name AS INT) > 0"}
+            ],
+        },
+    }
+    DQEngine(spark).run(bad, sf_dir=SF).schema  # analyses cleanly
+    monkeypatch.setattr(dq, "CUSTOMER_DQ_CONFIG", bad)
+    res = LocalScheduler(daily_pipeline(SF)).run(spark=spark)
+    assert res["dq_customer"].status == "FAILED"
+    assert res["dq_customer"].attempts == 2
+    assert "CAST" in res["dq_customer"].error.upper()
+    assert res["dq_events"].status == "SUCCESS"
+    assert res["dq_notify"].status == "SKIPPED"
+
+
 def test_thresholds_and_notifications(spark):
     results = DQEngine(spark).run(CUSTOMER_DQ_CONFIG, sf_dir=SF)
     cfg = {

@@ -4,6 +4,7 @@ property-based parity of the portable hash core."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -62,6 +63,17 @@ def test_no_cartesian_products_anywhere(spark):
     for name, fn in sorted(e.queries().items()):
         plan = _plan(fn(spark, SF))
         assert "CartesianProduct" not in plan, name
+
+
+def test_spec_registry_raises_on_a_broken_module(monkeypatch):
+    """A spec module that fails to import must fail the registry, not
+    silently drop its specs from every gate."""
+    import __spark_entry__ as e
+
+    broken = "gcp_dbt_data_engineering_spark.no_such_module"
+    monkeypatch.setattr(e, "SPEC_MODULES", (*e.SPEC_MODULES, broken))
+    with pytest.raises(ImportError, match="no_such_module"):
+        e._all_specs()
 
 
 _TEXT = st.text(

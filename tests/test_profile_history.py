@@ -3,15 +3,18 @@ E3: stamp run_id/environment, APPEND to a results table)."""
 
 from __future__ import annotations
 
+import os
+
 import shutil
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.operators.profile import (
     PROFILE_TABLES,
     SimpleDataProfiler,
 )
 
 SF = "/root/testdata/sf0.001"
-HIST = "/root/repo/.artifacts/profile_history"
+HIST = os.path.join(ARTIFACTS_DIR, "profile_history")
 
 
 def test_append_history_accumulates_runs(spark):

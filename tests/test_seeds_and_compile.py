@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.plans.models import (
     EXAMPLE_MODELS,
     ModelGraph,
@@ -219,7 +220,7 @@ def test_example_models_both_materialize_as_tables(spark):
     import os
 
     for name in ("my_first_dbt_model", "my_second_dbt_model"):
-        assert os.path.isdir(f"/root/repo/.artifacts/warehouse/{name}")
+        assert os.path.isdir(os.path.join(ARTIFACTS_DIR, "warehouse", name))
 
 
 def test_dbt_build_failure_isolation_and_interleaved_tests(spark, tmp_path):

@@ -9,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.sources import (
     load_source,
     load_table,
@@ -16,7 +17,7 @@ from gcp_dbt_data_engineering_spark.sources import (
 )
 
 SF = "/root/testdata/sf0.001"
-ART = "/root/repo/.artifacts/sources_test"
+ART = os.path.join(ARTIFACTS_DIR, "sources_test")
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])

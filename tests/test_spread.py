@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.sources import load_table, spread
 
-ART = "/root/repo/.artifacts/spread_test"
+ART = os.path.join(ARTIFACTS_DIR, "spread_test")
 
 
 def test_single_split_fixture_gets_repartitioned(spark):

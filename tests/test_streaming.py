@@ -403,21 +403,13 @@ def test_cusum_stream_equals_batch_recurrence(spark):
         assert r.alarm_neg == (sn > sh)
 
 
-def test_stream_equals_batch_on_adversarial_corpus(spark):
+def test_stream_equals_batch_on_adversarial_corpus(spark, nasty_corpus):
     """Stream-vs-batch equality must hold on the adversarial corpus
     too (NULL timestamps, duplicate event ids, 1970/2099 times): both
     paths share the explicit timeless-row boundary instead of the
     batch filtering and the stream silently relying on the watermark
     operator's null-event-time drop."""
-    import os
-    import subprocess
-    import sys
-
-    corpus = "/root/repo/.artifacts/sf0.01_nasty"
-    if not os.path.exists(os.path.join(corpus, "events.parquet")):
-        subprocess.run(
-            [sys.executable, "/root/repo/tools/make_nasty.py"], check=True
-        )
+    corpus = nasty_corpus
     exact = lambda r: (  # noqa: E731
         r.window_start, r.event_type, r.n_events, r.total_value
     )

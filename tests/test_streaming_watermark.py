@@ -30,6 +30,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
+
 T0 = datetime(2026, 1, 1, 0, 0, 0)
 
 
@@ -121,7 +123,7 @@ def test_watermark_finalizes_evicts_and_withholds(spark, tmp_path):
 # watermark advancing between triggers.
 # ---------------------------------------------------------------------------
 
-NASTY = "/root/repo/.artifacts/sf0.01_nasty"
+NASTY = os.path.join(ARTIFACTS_DIR, "sf0.01_nasty")
 
 
 def _split_events(spark, sf_dir, out_dir, n_files=3):

@@ -23,6 +23,7 @@ import shutil
 
 import pytest
 
+from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.plans.models import (
     _recover_swap,
     _swap_in,
@@ -127,7 +128,7 @@ def test_merge_survives_crash_mid_swap(spark, monkeypatch):
     orders = register_all(spark, SF, tables=("orders",))["orders"]
 
     # ground truth: the same two batches with no crash
-    wh_ok = "/root/repo/.artifacts/warehouse_crash_ok"
+    wh_ok = os.path.join(ARTIFACTS_DIR, "warehouse_crash_ok")
     shutil.rmtree(wh_ok, ignore_errors=True)
     g_ok = M.ModelGraph(M.MERGE_MODEL, warehouse_dir=wh_ok)
     _run_merge_batch(spark, g_ok, orders, wh_ok, "1995-01-01", "1998-01-01")
@@ -135,7 +136,7 @@ def test_merge_survives_crash_mid_swap(spark, monkeypatch):
         spark, g_ok, orders, wh_ok, "1998-01-01", "2002-01-01"
     )
 
-    wh = "/root/repo/.artifacts/warehouse_crash_test"
+    wh = os.path.join(ARTIFACTS_DIR, "warehouse_crash_test")
     shutil.rmtree(wh, ignore_errors=True)
     graph = M.ModelGraph(M.MERGE_MODEL, warehouse_dir=wh)
     base = _run_merge_batch(spark, graph, orders, wh, "1995-01-01", "1998-01-01")
@@ -206,11 +207,11 @@ def test_concurrent_merges_serialize_never_mix(spark):
             out = _run_merge_batch(sess, g, orders, wh, lo, hi)
         return out
 
-    ab = serial("/root/repo/.artifacts/wh_race_ab", (BASE, A, B))
-    ba = serial("/root/repo/.artifacts/wh_race_ba", (BASE, B, A))
+    ab = serial(os.path.join(ARTIFACTS_DIR, "wh_race_ab"), (BASE, A, B))
+    ba = serial(os.path.join(ARTIFACTS_DIR, "wh_race_ba"), (BASE, B, A))
     assert ab != ba  # the orders must be distinguishable or the test is vacuous
 
-    wh = "/root/repo/.artifacts/wh_race_conc"
+    wh = os.path.join(ARTIFACTS_DIR, "wh_race_conc")
     shutil.rmtree(wh, ignore_errors=True)
     serial(wh, (BASE,))  # prior state exists before the race
 
