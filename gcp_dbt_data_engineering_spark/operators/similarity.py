@@ -537,18 +537,21 @@ def _sql_kmeans_seed_cte(k: int) -> str:
 
 
 def _kmeans_cents_df(vecs: DataFrame, k: int, iters: int) -> DataFrame:
-    """Lloyd's k-means as ONE declarative plan — no driver sync at all.
+    """Lloyd's k-means, fitted ONCE per call and returned as a
+    materialized k-row (cid, cv) relation — no driver collect at all.
 
     Each iteration: assignment via the broadcast-centroid argmin fold
     (map-only over the vectors), then recenter as posexplode →
     (cid, dim) hash aggregate whose map-side combine reduces every
     partition to k x dim partial rows before the tiny shuffle, folded
     back to (cid, cv) arrays. Iterations chain lazily — the k-row
-    centroid relation flows between them as a broadcast, so the whole
-    fit is one job with no collect anywhere (the previous form
-    collected centroids per iteration, the MLlib-style driver sync;
-    at 2 iterations that was 3 sequential driver round-trips of pure
-    scheduling constant).
+    centroid relation flows between them as a broadcast — and the
+    finished chain is ``localCheckpoint``-ed: the fit runs as one
+    action (a handful of AQE jobs) inside this call, and every
+    consumer reads k x dim materialized ints instead of replaying the
+    seed TakeOrdered and the Lloyd chain inside its own plan. The
+    centroids stay distributed (never collected), so the same form
+    holds at production k ≈ sqrt(n).
 
     Determinism: seeds are the k vectors with the smallest avalanched
     id hash (``_seed_mix`` — id-layout-independent; ties by vec_id),
@@ -593,22 +596,21 @@ def _kmeans_cents_df(vecs: DataFrame, k: int, iters: int) -> DataFrame:
                 ).alias("cv")
             )
         )
-    return cents
+    return cents.localCheckpoint()
 
 
 def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared trained coarse quantizer: K=128 Lloyd centroids over
-    the quantized corpus, memoized + persisted per (session, corpus)
-    like ``_quantized`` — a production deployment trains the inverted
-    file once per corpus snapshot; ``clear_caches`` invalidates it."""
+    the quantized corpus (materialized by the fit itself), memoized per
+    (session, corpus) like ``_quantized`` — a production deployment
+    trains the inverted file once per corpus snapshot; ``clear_caches``
+    invalidates it."""
     cache: dict[str, DataFrame] = spark.__dict__.setdefault(
         "_graft_ivf_cents_cache", {}
     )
     hit = cache.get(sf_dir)
     if hit is None:
-        hit = _kmeans_cents_df(
-            _quantized(spark, sf_dir), IVF_K, IVF_ITERS
-        ).persist()
+        hit = _kmeans_cents_df(_quantized(spark, sf_dir), IVF_K, IVF_ITERS)
         cache[sf_dir] = hit
     return hit
 
@@ -750,8 +752,8 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact you keep hot.
 
     Every stage is JVM expression code over integer arithmetic; the
-    k-means fit is the shared one-declarative-plan Lloyd
-    (``_kmeans_cents_df``), and the rerank threshold is computed
+    k-means fit is the shared zero-collect Lloyd inverted file
+    (``_ivf_cents``), and the rerank threshold is computed
     in-plan from a one-row count relation — no driver collect
     anywhere.
     """
@@ -1534,8 +1536,8 @@ SPECS: dict[str, QuerySpec] = {
             "IVF-SQ8 ANN: probe 32 cells of the shared inverted file "
             "through 4x int8 codes, exact re-rank only the compressed "
             "top max(50, N/20) (recall@10 0.76 at a 0.05 exact-rerank "
-            "fraction); k-means fit is one declarative zero-collect "
-            "plan, oracle replays it relationally",
+            "fraction); the k-means fit is a zero-collect checkpointed "
+            "relation, oracle replays it relationally",
         ),
     )
 }

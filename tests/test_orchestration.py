@@ -17,6 +17,8 @@ from gcp_dbt_data_engineering_spark.orchestration import (
     daily_pipeline,
 )
 
+from .conftest import job_ids
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -69,13 +71,6 @@ def test_daily_pipeline_runs_profiling_before_dq(spark):
     assert res["dq_customer"].result.count() > 0
 
 
-def _job_ids(spark) -> set[int]:
-    """Ids of every job the status store has recorded so far."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return set(sc.statusTracker().getJobIdsForGroup(None))
-
-
 def test_notify_reuses_computed_suites(spark):
     """Each DQ job materializes its suite; notify applies thresholds
     to those rows instead of re-running both suites' scans."""
@@ -84,9 +79,9 @@ def test_notify_reuses_computed_suites(spark):
     inner, launched = notify.fn, []
 
     def counted(spark):
-        before = _job_ids(spark)
+        before = job_ids(spark)
         out = inner(spark)
-        launched.extend(_job_ids(spark) - before)
+        launched.extend(job_ids(spark) - before)
         return out
 
     notify.fn = counted

@@ -10,12 +10,15 @@ contract with numpy ground truth at sf0.001:
 - completeness / antichain: no two KEPT members of a cluster are
   within SEM_COSINE_T of each other (under the exists-smaller-id drop
   rule the kept set is exactly the set with no smaller-id ε-neighbour,
-  so any ε-close kept pair would contradict the rule).
+  so any ε-close kept pair would contradict the rule);
+- fit once: the k-means fit runs once per call, not once per consumer
+  of the assigned members.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gcp_dbt_data_engineering_spark.operators.semdedup import (
@@ -23,8 +26,9 @@ from gcp_dbt_data_engineering_spark.operators.semdedup import (
     dedup_semantic,
 )
 from gcp_dbt_data_engineering_spark.operators.similarity import _quantized
+from gcp_dbt_data_engineering_spark.session import clear_caches
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, job_ids
 
 
 def _ground(spark):
@@ -73,3 +77,30 @@ def test_semdedup_invariants(spark):
 def test_semdedup_no_cartesian(spark):
     plan = dedup_semantic(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+
+
+def _jobs_of_call(spark) -> tuple[int, DataFrame]:
+    """Spark jobs launched by one builder call plus its collect()."""
+    before = job_ids(spark)
+    df = dedup_semantic(spark, SF_SMOKE)
+    df.collect()
+    return len(job_ids(spark) - before), df
+
+
+def test_semdedup_fits_kmeans_once(spark):
+    """The fit is materialized once inside the builder; the tile
+    counts, the pair kernel and the final join read its k centroid
+    rows instead of each replaying the seed TakeOrdered and Lloyd's
+    chain."""
+    clear_caches(spark)
+    _quantized(spark, SF_SMOKE).count()
+    prebuilt, df = _jobs_of_call(spark)
+    assert prebuilt <= 18, prebuilt
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" not in plan
+
+    # building the _quantized memo inside the call adds its own scan,
+    # not one re-read per replayed fit
+    clear_caches(spark)
+    self_built, _ = _jobs_of_call(spark)
+    assert self_built - prebuilt <= 6, (self_built, prebuilt)

@@ -199,7 +199,7 @@ def main() -> int:
 
         # --- trained IVF (shared by both IVF specs), K sweep ----------
         for k in K_SWEEP:
-            cents = _kmeans_cents_df(base, k, IVF_ITERS).persist()
+            cents = _kmeans_cents_df(base, k, IVF_ITERS)
             assigned = (
                 _assign_cids(base, cents, extra_cols=("vec_id",))
                 .withColumnRenamed("cid", "own_cid")
@@ -248,7 +248,6 @@ def main() -> int:
                     _l2_probes(queries, cents, FLAT_PROBE),
                     sizes, assigned, n,
                 )
-            cents.unpersist()
             assigned.unpersist()
 
         # --- linear scans by design -----------------------------------

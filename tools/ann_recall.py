@@ -82,7 +82,7 @@ def _ivf_flat_k(spark, sf_dir: str, k: int):
     from gcp_dbt_data_engineering_spark.operators import similarity as S
 
     base = S._quantized(spark, sf_dir)
-    cents = S._kmeans_cents_df(base, k, S.IVF_ITERS).persist()
+    cents = S._kmeans_cents_df(base, k, S.IVF_ITERS)
     members = S._assign_cids(
         base.select("vec_id", "q"), cents, extra_cols=("vec_id",)
     )
@@ -111,8 +111,7 @@ def _ivf_flat_k(spark, sf_dir: str, k: int):
             + " AS cosine",
         )
     )
-    out = S._ann_topk(scored)
-    return out, cents
+    return S._ann_topk(scored)
 
 
 
@@ -268,9 +267,8 @@ def main() -> int:
                 if k == S.IVF_K:
                     by_k[f"k{k}"] = row["similarity_ann_ivf"]  # the spec
                     continue
-                ann, cents = _ivf_flat_k(spark, sf_dir, k)
+                ann = _ivf_flat_k(spark, sf_dir, k)
                 by_k[f"k{k}"] = _recall(ann, bf, n_pairs)
-                cents.unpersist()
             row["ivf_flat_by_k"] = by_k
 
         # --- honest recall at replica-inflated SFs: unique-vector

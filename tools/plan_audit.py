@@ -355,6 +355,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from gcp_dbt_data_engineering_spark import get_spark
+    from gcp_dbt_data_engineering_spark.session import clear_caches
 
     spark = get_spark(app_name="plan_audit")
     only = os.environ.get("SPECS_ONLY")
@@ -366,6 +367,10 @@ def main() -> int:
     for name, fn in sorted(entry.queries().items()):
         if rx and not rx.search(name):
             continue
+        # each spec from clean memos: a builder that runs an action
+        # fills a shared cache (e.g. _quantized), and every later
+        # consumer's explain would print that cache's build exchanges
+        clear_caches(spark)
         try:
             feats = audit_spec(fn(spark, sf_dir))
         except Exception:
@@ -400,7 +405,8 @@ def main() -> int:
         "single_partition_whitelist": SINGLE_PARTITION_OK,
         "bnlj_whitelist": BNLJ_OK,
         "methodology": (
-            "formatted explain of the analyzed plan per spec; operator "
+            "formatted explain of the analyzed plan per spec, built "
+            "after clear_caches (order-independent); operator "
             "tree parsed (main plan + subqueries); SinglePartition "
             "exchanges classified funnel (child is a Keys:[] partial "
             "aggregate or LocalLimit), bounded (subtree provably "

@@ -38,7 +38,8 @@ os.environ.setdefault("SPARK_GRAFT_MASTER", "local[8,3]")
 
 #: one spec per operator family: scans+joins, global agg, window,
 #: hash-threshold sampling, shingle dedup, LSH, quantized similarity,
-#: Arrow mapInPandas kernel, sketch partials, per-day series.
+#: Arrow mapInPandas kernel, sketch partials, per-day series, and the
+#: k-means fit that semantic dedup materializes inside its builder.
 SPECS = [
     "revenue_by_region",
     "pricing_summary",
@@ -50,6 +51,7 @@ SPECS = [
     "sketch_hll_distinct_users",
     "stats_bootstrap_ci",
     "events_sessionize",
+    "dedup_semantic",
 ]
 
 
@@ -134,6 +136,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from gcp_dbt_data_engineering_spark import get_spark
+    from gcp_dbt_data_engineering_spark.session import clear_caches
 
     spark = get_spark(app_name="retry_gate")
     assert "local[8,3]" in spark.sparkContext.master
@@ -152,6 +155,9 @@ def main() -> int:
     results: dict[str, dict] = {}
     n_fail = 0
     for name in SPECS:
+        # clean memos, so each spec's own jobs scan (and retry): a memo
+        # an earlier spec filled would hide, e.g., the k-means fit job
+        clear_caches(spark)
         try:
             df = qs[name](spark, sf_dir)
             s_rows = [tuple(r) for r in df.collect()]
@@ -192,7 +198,8 @@ def main() -> int:
         "n_injected_failures": n_injected,
         "methodology": (
             "every load_table wrapped in a pass-through mapInPandas "
-            "whose first attempt on partition 0 raises; session runs "
+            "whose first attempt on partition 0 raises; memos cleared "
+            "before each spec; session runs "
             "local[8,3] so Spark retries the task; spec output must "
             "hash-match the DuckDB oracle exactly"
         ),
