@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table
 from ..plans.spec import QuerySpec
+from ..session import memo
 from . import texthash as th
 
 # ---------------------------------------------------------------------------
@@ -61,52 +62,54 @@ from . import texthash as th
 SHINGLE_N = 3
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` persisted and materialized at creation (r12, guide §3.1).
+
+    A LAZY persist leaves every downstream plan built against the
+    CHILD plan's estimated stats, which at sf10 under-estimated the
+    26M-row/417MB shingle relation below the broadcast threshold — the
+    containment verify chain then broadcast the FULL relation twice
+    per execution (measured: 919 exec-seconds per warm pass; at 100 TB
+    it would OOM outright). After count() the InMemoryRelation carries
+    its ACCURATE size, so joins pick broadcast only when it truly fits
+    — BHJ at sf0.1, sort-merge at sf10+, decided by measurement.
+    """
+    df = df.persist()
+    df.count()
+    return df
+
+
 def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle-hash) rows — the inverted-index input.
 
-    Persisted ONCE per (session, sf_dir): every consumer references
-    this relation 2-4 times (pair join sides, set sizes,
-    verification), and without a cache Spark re-runs the interpreted
-    shingle hashing per branch. A per-CALL persist would leak one
-    cached copy per spec per run into the shared session (the round-1
-    contamination persist bug, ADVICE.md), so the handle is memoized
-    on the session object — one bounded cache entry per corpus, which
-    is exactly the "materialize the shingle table once per corpus
-    snapshot" discipline a warehouse deployment uses.
+    Persisted ONCE per (session, sf_dir) via :func:`session.memo`: every
+    consumer references this relation 2-4 times (pair join sides, set
+    sizes, verification), and without a cache Spark re-runs the
+    interpreted shingle hashing per branch. A per-CALL persist would
+    leak one cached copy per spec per run into the shared session (the
+    round-1 contamination persist bug, ADVICE.md) — one bounded entry
+    per corpus is exactly the "materialize the shingle table once per
+    corpus snapshot" discipline a warehouse deployment uses.
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_shingle_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
-    # the documents table arrives as one small parquet file -> one
-    # partition; spread rows across cores BEFORE the CPU-heavy hashing
-    # projection (hash-partitioning by doc_id also pre-aligns the
-    # later per-doc aggregates).
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    df = (
-        docs.selectExpr(
-            "doc_id", f"{th.shingle_hashes('text', SHINGLE_N, 'spark')} AS hs"
+
+    def build() -> DataFrame:
+        # the documents table arrives as one small parquet file -> one
+        # partition; spread rows across cores BEFORE the CPU-heavy
+        # hashing projection (hash-partitioning by doc_id also
+        # pre-aligns the later per-doc aggregates).
+        docs = load_table(spark, sf_dir, "documents").repartition(
+            spark.sparkContext.defaultParallelism, "doc_id"
         )
-        .select("doc_id", F.explode("hs").alias("h"))
-        .distinct()
-        .persist()
-    )
-    # materialize at creation (r12, guide §3.1): a LAZY persist leaves
-    # every downstream plan built against the CHILD plan's estimated
-    # stats, which at sf10 under-estimated the 26M-row/417MB shingle
-    # relation below the broadcast threshold — the containment verify
-    # chain then broadcast the FULL relation twice per execution
-    # (measured: 919 exec-seconds per warm pass; at 100 TB it would
-    # OOM outright). After count() the InMemoryRelation carries its
-    # ACCURATE size, so joins pick broadcast only when it truly fits —
-    # BHJ at sf0.1, sort-merge at sf10+, decided by measurement.
-    df.count()
-    cache[sf_dir] = df
-    return df
+        return _materialized(
+            docs.selectExpr(
+                "doc_id",
+                f"{th.shingle_hashes('text', SHINGLE_N, 'spark')} AS hs",
+            )
+            .select("doc_id", F.explode("hs").alias("h"))
+            .distinct()
+        )
+
+    return memo(spark, "shingle", sf_dir, build)
 
 
 def _sql_shingle_cte() -> str:
@@ -127,26 +130,22 @@ sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)"""
 
 
 def _shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n): per-doc distinct-shingle counts, memoized +
-    persisted with the same discipline as :func:`_shingle_rows` — the
-    Spark twin of the oracle's ``sz AS MATERIALIZED`` CTE. Five
-    consumers (Jaccard/containment verification sides, keep-best)
-    each re-aggregated the ~100× larger shingle relation per build;
-    the 1-row-per-doc memo makes every reference a cached-scan."""
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_shingle_sz_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is None:
-        hit = (
+    """(doc_id, n): per-doc distinct-shingle counts, a
+    :func:`session.memo` entry like :func:`_shingle_rows` — the Spark
+    twin of the oracle's ``sz AS MATERIALIZED`` CTE. Five consumers
+    (Jaccard/containment verification sides, keep-best) each
+    re-aggregated the ~100× larger shingle relation per build; the
+    1-row-per-doc memo makes every reference a cached-scan."""
+    return memo(
+        spark,
+        "shingle_sz",
+        sf_dir,
+        lambda: _materialized(
             _shingle_rows(spark, sf_dir)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
-        )
-        hit.count()  # accurate stats for join planning (see _shingle_rows)
-        cache[sf_dir] = hit
-    return hit
+        ),
+    )
 
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,27 +163,23 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     a JVM ``array_intersect`` per pair: the shuffled unit is one
     ~n_shingles x 8 B array per pair side instead of ``n`` 24 B rows,
     and the aggregation exchange disappears (|A∩B| is computed in the
-    join's projection). Memoized + persisted + count()-materialized
-    per (session, corpus) with the same discipline (and for the same
-    accurate-stats reason) as the row memo.
+    join's projection). A :func:`session.memo` entry, persisted and
+    count()-materialized for the same accurate-stats reason as the
+    row memo.
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_shingle_set_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is None:
-        hit = (
+    return memo(
+        spark,
+        "shingle_set",
+        sf_dir,
+        lambda: _materialized(
             _shingle_rows(spark, sf_dir)
             .groupBy("doc_id")
             .agg(
                 F.sort_array(F.collect_list("h")).alias("hs"),
                 F.count(F.lit(1)).alias("n"),
             )
-            .persist()
-        )
-        hit.count()  # accurate stats for join planning (see _shingle_rows)
-        cache[sf_dir] = hit
-    return hit
+        ),
+    )
 
 
 def _ranked_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,20 +188,18 @@ def _ranked_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The prefix-filter index both set-similarity joins cut their
     prefixes from (Jaccard keeps rnk <= n - ceil(t*n) + 1, containment
-    likewise with its own t). Memoized + persisted per (session,
-    corpus) like the shingle relation itself — it is the same
-    materialize-once index artifact, two windows downstream of it.
+    likewise with its own t). A :func:`session.memo` entry like the
+    shingle relation itself — the same materialize-once index
+    artifact, two windows downstream of it.
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_ranked_shingle_cache", {}
+    return memo(
+        spark,
+        "ranked_shingle",
+        sf_dir,
+        lambda: _materialized(
+            _rank_shingle_frame(_shingle_rows(spark, sf_dir))
+        ),
     )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
-    df = _rank_shingle_frame(_shingle_rows(spark, sf_dir)).persist()
-    df.count()  # accurate stats for join planning (see _shingle_rows)
-    cache[sf_dir] = df
-    return df
 
 
 def _jaccard_pairs(
@@ -249,6 +242,12 @@ def _jaccard_pairs(
 # 1. exact dedup (hash-groupBy) — SURVEY.md §2.4 A3/A8
 # ---------------------------------------------------------------------------
 
+#: a whitespace run, spelled out: Java's ``\s`` (this class) includes
+#: VT (0x0B) while DuckDB's RE2 ``\s`` does not, so both dialects use
+#: the explicit class instead of ``\s``
+_WS_RUN = r"[ \t\n\x0B\f\r]+"
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on whitespace/case-normalized text.
 
@@ -263,12 +262,14 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     strips the full Unicode space set while Spark's ``trim`` strips
     0x20 only — on an all-NBSP document the engines otherwise disagree
     about membership in the empty-key group (caught by the nasty-
-    corpus gate; both regex ``\\s`` classes are ASCII-identical).
+    corpus gate). Whitespace runs are the explicit :data:`_WS_RUN`
+    class in both dialects: the two engines' regex ``\\s`` classes
+    differ on VT (0x0B).
     """
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.withColumn(
-            "k", F.expr("regexp_replace(trim(lower(text)), '\\\\s+', ' ')")
+            "k", F.regexp_replace(F.trim(F.lower("text")), _WS_RUN, " ")
         )
         .groupBy("k")
         .agg(
@@ -280,11 +281,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_EXACT = """
+ORACLE_DEDUP_EXACT = f"""
 SELECT MIN(doc_id) AS keep_first,
        MAX(doc_id) AS keep_last,
        COUNT(*)    AS n_copies
-FROM (SELECT doc_id, regexp_replace(trim(lower(text), ' '), '\\s+', ' ', 'g') AS k
+FROM (SELECT doc_id, regexp_replace(trim(lower(text), ' '), '{_WS_RUN}', ' ', 'g') AS k
       FROM documents)
 GROUP BY k
 """
@@ -323,10 +324,12 @@ def _rank_shingle_frame(sh: DataFrame) -> DataFrame:
     )
 
 
-def _ppjoin_candidates(
-    sh: DataFrame | None, ranked: DataFrame | None = None
-) -> DataFrame:
+def _ppjoin_candidates(ranked: DataFrame) -> DataFrame:
     """Prefix-filtered candidate pairs (Bayardo et al., WWW'07; PPJoin).
+
+    ``ranked`` is a (doc_id, h, rnk, n) ranking — the corpus memo
+    :func:`_ranked_shingles`, or :func:`_rank_shingle_frame` over a
+    synthetic shingle frame.
 
     For Jaccard >= t, any qualifying pair overlaps each member in
     >= ceil(t*n) shingles, so under ONE global shingle order both docs
@@ -353,7 +356,7 @@ def _ppjoin_candidates(
     with the prefix filter alone -> far fewer after size+position,
     which is what the verification join's cost scales with.
     """
-    pref = (ranked if ranked is not None else _rank_shingle_frame(sh)).filter(
+    pref = ranked.filter(
         F.expr(_prefix_filter_expr(JACCARD_T_NUM, JACCARD_T_DEN))
     )
     a = pref.select(
@@ -399,7 +402,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate-heavy crawl".
     """
     return _jaccard_pairs(
-        _ppjoin_candidates(None, _ranked_shingles(spark, sf_dir)),
+        _ppjoin_candidates(_ranked_shingles(spark, sf_dir)),
         _shingle_sets(spark, sf_dir),
         JACCARD_T,
     )
@@ -1058,23 +1061,19 @@ CC_MAX_ITERS = 20
 def _jaccard_pair_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized near-dup pair list (doc_a, doc_b) per (session, corpus).
 
-    Shared by the clustering and PageRank operators; persisted once
-    with the same bounded-cache discipline as :func:`_shingle_rows`
-    (the pair list is the tiny materialized edge table a production
-    pipeline would stage before any graph pass).
+    Shared by the clustering and PageRank operators; a lazily persisted
+    :func:`session.memo` entry (the pair list is the tiny materialized
+    edge table a production pipeline would stage before any graph
+    pass).
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_pair_cache", {}
+    return memo(
+        spark,
+        "pair",
+        sf_dir,
+        lambda: dedup_ngram_jaccard(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .persist(),
     )
-    hit = cache.get(sf_dir)
-    if hit is None:
-        hit = (
-            dedup_ngram_jaccard(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .persist()
-        )
-        cache[sf_dir] = hit
-    return hit
 
 
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,53 +1112,48 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     factored iterative core of :func:`dedup_cluster_components`,
     reused by the keep-decision spec.
 
-    Memoized per (session, corpus) like the shingle/pair relations:
-    the converged label table is a per-corpus-snapshot artifact a
+    A :func:`session.memo` entry like the shingle/pair relations: the
+    converged label table is a per-corpus-snapshot artifact a
     production dedup materializes ONCE and every downstream decision
     reads — not something to re-derive per query. The returned frame
-    is localCheckpoint-backed (materialized blocks), and the memo is
-    a ``_graft_*_cache`` entry so ``clear_caches`` invalidates it with
-    the rest when a corpus is rewritten.
+    is localCheckpoint-backed (materialized blocks).
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_cc_labels_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
-    pairs = _jaccard_pair_list(spark, sf_dir)
-    edges = (
-        pairs.union(pairs.select("doc_b", "doc_a"))
-        .toDF("src", "dst")
-        .persist()
-    )
-    labels = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.col("doc_id").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(CC_MAX_ITERS):
-        prop = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("nlabel"))
+
+    def build() -> DataFrame:
+        pairs = _jaccard_pair_list(spark, sf_dir)
+        edges = (
+            pairs.union(pairs.select("doc_b", "doc_a"))
+            .toDF("src", "dst")
+            .persist()
         )
-        merged = (
-            labels.join(prop, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("label").alias("old"),
-                F.least("label", "nlabel").alias("label"),
-            )
+        labels = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", F.col("doc_id").alias("label"))
             .localCheckpoint()
         )
-        changed = merged.filter(F.col("label") < F.col("old")).count()
-        labels = merged.select("doc_id", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
-    cache[sf_dir] = labels
-    return labels
+        for _ in range(CC_MAX_ITERS):
+            prop = (
+                edges.join(labels, edges.src == labels.doc_id)
+                .groupBy(F.col("dst").alias("doc_id"))
+                .agg(F.min("label").alias("nlabel"))
+            )
+            merged = (
+                labels.join(prop, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.col("label").alias("old"),
+                    F.least("label", "nlabel").alias("label"),
+                )
+                .localCheckpoint()
+            )
+            changed = merged.filter(F.col("label") < F.col("old")).count()
+            labels = merged.select("doc_id", "label")
+            if changed == 0:
+                break
+        edges.unpersist()
+        return labels
+
+    return memo(spark, "cc_labels", sf_dir, build)
 
 
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1241,18 +1235,15 @@ def dedup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact like the pair list it derives from; memoized so repeated
     # rank computations (and each one's 3 iterations) read materialized
     # blocks instead of rebuilding edges+degrees per run
-    gcache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_prgraph_cache", {}
-    )
-    edeg = gcache.get(sf_dir)
-    if edeg is None:
+    def build_graph() -> DataFrame:
         pairs = _jaccard_pair_list(spark, sf_dir)
         edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF(
             "src", "dst"
         )
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        edeg = edges.join(deg, "src").localCheckpoint()
-        gcache[sf_dir] = edeg
+        return edges.join(deg, "src").localCheckpoint()
+
+    edeg = memo(spark, "prgraph", sf_dir, build_graph)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     ncnt = F.broadcast(docs.agg(F.count(F.lit(1)).alias("__n")))
     # n rides as a broadcast scalar column; 0.15/n and 1/n evaluate to

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.spec import QuerySpec
+from ..session import memo
 from ..sources import load_table, spread_by_size
 
 VIDEO_FPS = 24
@@ -288,18 +289,11 @@ def _assets_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracles' ``byte_len``). No shuffle: synthesis and decode are
     map-only stages over the same partitioning.
 
-    Memoized + persisted per (session, corpus): the encoded asset
-    table IS the corpus for the multimodal specs (in production the
-    payloads arrive already containerized; re-synthesizing per query
-    would be re-ingesting). Same ``_graft_*_cache`` discipline as the
-    shingle/quantized relations; ``clear_caches`` invalidates it.
+    A lazily persisted :func:`session.memo` entry per (session,
+    corpus): the encoded asset table IS the corpus for the multimodal
+    specs (in production the payloads arrive already containerized;
+    re-synthesizing per query would be re-ingesting).
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_assets_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -342,13 +336,18 @@ def _assets_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus across 32 cores measured *slower* than one task (398 ms
     # vs 181 ms identity mapInArrow) — small corpora keep their scan
     # split count, large ones fan out to every core.
-    df = spread_by_size(_assets(spark, sf_dir)).mapInPandas(
-        synth,
-        schema="asset_id bigint, media_type string, src_len bigint,"
-        " payload binary",
-    ).persist()
-    cache[sf_dir] = df
-    return df
+    return memo(
+        spark,
+        "assets",
+        sf_dir,
+        lambda: spread_by_size(_assets(spark, sf_dir))
+        .mapInPandas(
+            synth,
+            schema="asset_id bigint, media_type string, src_len bigint,"
+            " payload binary",
+        )
+        .persist(),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -359,12 +358,11 @@ def _assets_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compute is ~16 ms TOTAL while the per-stage worker handshake is
 # ~180 ms (measured, OPTIMIZATION_r11 §4). The decoded relation below
 # runs the REAL header parsers and the numpy byte histogram in a single
-# stage and is memoized+persisted with the same ``_graft_*_cache``
-# discipline as the shingle/quantized relations (clear_caches sweeps
-# it; the bench cold pass pays the honest rebuild). All four specs are
-# then pure-JVM projections/filters/explodes over it — the decode still
-# gates every value, it just runs once per corpus instead of once per
-# query.
+# stage and is a persisted ``session.memo`` entry like the
+# shingle/quantized relations (clear_caches sweeps it; the bench cold
+# pass pays the honest rebuild). All four specs are then pure-JVM
+# projections/filters/explodes over it — the decode still gates every
+# value, it just runs once per corpus instead of once per query.
 # ---------------------------------------------------------------------------
 
 _META_SCHEMA = (
@@ -388,14 +386,9 @@ def _assets_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     media BODY length (the oracles' contract, carried as ``src_len``);
     the body itself is recovered from the container tail (every encoder
     appends it verbatim) and histogrammed with numpy for ``f0..f7``
-    (NULL for empty bodies — byte_features excludes them).
+    (NULL for empty bodies — byte_features excludes them). A lazily
+    persisted :func:`session.memo` entry.
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_assets_decoded_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
     import numpy as np
 
     cols = [
@@ -458,11 +451,14 @@ def _assets_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=cols)
 
-    df = _assets_encoded(spark, sf_dir).mapInPandas(
-        extract, schema=_DECODED_SCHEMA
-    ).persist()
-    cache[sf_dir] = df
-    return df
+    return memo(
+        spark,
+        "assets_decoded",
+        sf_dir,
+        lambda: _assets_encoded(spark, sf_dir)
+        .mapInPandas(extract, schema=_DECODED_SCHEMA)
+        .persist(),
+    )
 
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

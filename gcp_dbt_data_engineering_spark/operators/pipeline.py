@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table, spread
 from ..plans.spec import QuerySpec
+from ..session import memo
 from . import texthash as th
 
 # ---------------------------------------------------------------------------
@@ -48,34 +49,30 @@ BENCH_SOURCES = ("src0", "src1")
 def _contam_shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, source, 5-gram hash) rows, staged once.
 
-    Same bounded per-(session, corpus) persist discipline as
+    A lazily persisted :func:`session.memo` entry like
     ``dedup._shingle_rows`` (which holds the 3-gram relation): the
     5-gram fold is the CPU of both contamination operators, and this
     is the relation a production pipeline materializes per corpus
     snapshot. Spread before the fold — the fixture parquet is one
     scan split.
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_contam_shingle_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    df = (
-        docs.selectExpr(
-            "doc_id",
-            "source",
-            f"{th.shingle_hashes('text', CONTAM_N, 'spark')} AS hs",
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").repartition(
+            spark.sparkContext.defaultParallelism, "doc_id"
         )
-        .select("doc_id", "source", F.explode("hs").alias("h"))
-        .distinct()
-        .persist()
-    )
-    cache[sf_dir] = df
-    return df
+        return (
+            docs.selectExpr(
+                "doc_id",
+                "source",
+                f"{th.shingle_hashes('text', CONTAM_N, 'spark')} AS hs",
+            )
+            .select("doc_id", "source", F.explode("hs").alias("h"))
+            .distinct()
+            .persist()
+        )
+
+    return memo(spark, "contam_shingle", sf_dir, build)
 
 
 def contamination_ngram_check(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.spec import QuerySpec
+from ..session import memo
 from ..sources import load_table, spread
 from .dedup import EMB_DIM as DIM  # single source of truth for dim
 from .dedup import QSCALE, quant_transform, usable_embedding_pred
@@ -123,70 +124,60 @@ def _mix_np(x):
 
 
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
-    """Usable-vector count, memoized per (session, corpus) with the
-    same cache discipline as ``_quantized`` — an index-build-time
-    scalar (it picks the LSH band geometry), counted ONCE on the
-    persisted quantized relation so the lsh spec builder stays cheap
-    on warm sessions; ``clear_caches`` invalidates it on rewrite."""
-    cache: dict[str, int] = spark.__dict__.setdefault(
-        "_graft_corpus_n_cache", {}
+    """Usable-vector count, a :func:`session.memo` entry like
+    ``_quantized`` — an index-build-time scalar (it picks the LSH band
+    geometry), counted ONCE on the persisted quantized relation so the
+    lsh spec builder stays cheap on warm sessions."""
+    return memo(
+        spark, "corpus_n", sf_dir, lambda: _quantized(spark, sf_dir).count()
     )
-    hit = cache.get(sf_dir)
-    if hit is None:
-        hit = _quantized(spark, sf_dir).count()
-        cache[sf_dir] = hit
-    return hit
 
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, q, nn): int64-quantized vectors + exact norms.
 
-    Memoized + persisted per (session, corpus) with the same
-    ``_graft_*_cache`` discipline as the dedup shingle relation: the
-    quantized table is the input artifact every similarity spec (brute
-    force, LSH, IVF, k-means IVF, embedding near-dup) reads several
-    times per query — a production deployment materializes it once per
-    corpus snapshot; ``clear_caches`` invalidates it on rewrite.
+    A lazily persisted :func:`session.memo` entry like the dedup
+    shingle relation: the quantized table is the input artifact every
+    similarity spec (brute force, LSH, IVF, k-means IVF, embedding
+    near-dup) reads several times per query — a production deployment
+    materializes it once per corpus snapshot.
     """
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_quantized_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is not None:
-        return hit
-    # content-robustness boundary (shared by every similarity spec):
-    # NULL / wrong-dimension / non-finite embeddings (failed encodes)
-    # are excluded (usable_embedding_pred, wave 6), FINITE components
-    # are clamped before the bigint cast (quant_transform — a corrupt
-    # ±1e30 component would overflow the int64 norm fold), and
-    # all-zero quantized vectors (no representable direction) are
-    # excluded — cosine is undefined for them.
-    # spread() before the CPU-heavy downstream folds: a fat-row-group
-    # corpus (sf100 ships 2M rows in TWO parquet row groups) caps the
-    # scan at 2 tasks, and the persisted relation would inherit that —
-    # every Lloyd assignment / banding / candidate fold then runs on 2
-    # of 32 cores (measured: the sf100 occupancy audit sat at 6% CPU
-    # for 2 h). One round-robin shuffle at cache-build time fixes the
-    # parallelism for the lifetime of the persisted artifact; real
-    # multi-file lakes split at the scan and spread() skips the
-    # shuffle entirely.
-    df = (
-        spread(load_table(spark, sf_dir, "embeddings"))
-        .filter(F.expr(usable_embedding_pred("embedding", "spark")))
-        .selectExpr(
-            "vec_id",
-            f"{quant_transform('embedding', 'spark')} AS q",
+
+    def build() -> DataFrame:
+        # content-robustness boundary (shared by every similarity
+        # spec): NULL / wrong-dimension / non-finite embeddings (failed
+        # encodes) are excluded (usable_embedding_pred, wave 6), FINITE
+        # components are clamped before the bigint cast (quant_transform
+        # — a corrupt ±1e30 component would overflow the int64 norm
+        # fold), and all-zero quantized vectors (no representable
+        # direction) are excluded — cosine is undefined for them.
+        # spread() before the CPU-heavy downstream folds: a
+        # fat-row-group corpus (sf100 ships 2M rows in TWO parquet row
+        # groups) caps the scan at 2 tasks, and the persisted relation
+        # would inherit that — every Lloyd assignment / banding /
+        # candidate fold then runs on 2 of 32 cores (measured: the
+        # sf100 occupancy audit sat at 6% CPU for 2 h). One round-robin
+        # shuffle at cache-build time fixes the parallelism for the
+        # lifetime of the persisted artifact; real multi-file lakes
+        # split at the scan and spread() skips the shuffle entirely.
+        return (
+            spread(load_table(spark, sf_dir, "embeddings"))
+            .filter(F.expr(usable_embedding_pred("embedding", "spark")))
+            .selectExpr(
+                "vec_id",
+                f"{quant_transform('embedding', 'spark')} AS q",
+            )
+            .selectExpr(
+                "vec_id",
+                "q",
+                "aggregate(q, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)"
+                " AS nn",
+            )
+            .filter(F.col("nn") > 0)
+            .persist()
         )
-        .selectExpr(
-            "vec_id",
-            "q",
-            "aggregate(q, CAST(0 AS BIGINT), (acc, x) -> acc + x * x) AS nn",
-        )
-        .filter(F.col("nn") > 0)
-        .persist()
-    )
-    cache[sf_dir] = df
-    return df
+
+    return memo(spark, "quantized", sf_dir, build)
 
 
 _SQL_QUANTIZED = f"""
@@ -601,36 +592,31 @@ def _kmeans_cents_df(vecs: DataFrame, k: int, iters: int) -> DataFrame:
 
 def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared trained coarse quantizer: K=128 Lloyd centroids over
-    the quantized corpus (materialized by the fit itself), memoized per
-    (session, corpus) like ``_quantized`` — a production deployment
-    trains the inverted file once per corpus snapshot; ``clear_caches``
-    invalidates it."""
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_ivf_cents_cache", {}
+    the quantized corpus (materialized by the fit itself), a
+    :func:`session.memo` entry like ``_quantized`` — a production
+    deployment trains the inverted file once per corpus snapshot."""
+    return memo(
+        spark,
+        "ivf_cents",
+        sf_dir,
+        lambda: _kmeans_cents_df(_quantized(spark, sf_dir), IVF_K, IVF_ITERS),
     )
-    hit = cache.get(sf_dir)
-    if hit is None:
-        hit = _kmeans_cents_df(_quantized(spark, sf_dir), IVF_K, IVF_ITERS)
-        cache[sf_dir] = hit
-    return hit
 
 
 def _ivf_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cid): final inverted-file assignment — the relation a
-    100 TB lake is bucketed/partitioned by. Memoized like the cents."""
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_ivf_members_cache", {}
-    )
-    hit = cache.get(sf_dir)
-    if hit is None:
-        base = _quantized(spark, sf_dir)
-        hit = _assign_cids(
-            base.select("vec_id", "q"),
+    100 TB lake is bucketed/partitioned by. A lazily persisted
+    :func:`session.memo` entry."""
+    return memo(
+        spark,
+        "ivf_members",
+        sf_dir,
+        lambda: _assign_cids(
+            _quantized(spark, sf_dir).select("vec_id", "q"),
             _ivf_cents(spark, sf_dir),
             extra_cols=("vec_id",),
-        ).persist()
-        cache[sf_dir] = hit
-    return hit
+        ).persist(),
+    )
 
 
 def _ivf_probes(queries: DataFrame, cents: DataFrame,

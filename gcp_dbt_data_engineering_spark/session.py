@@ -21,8 +21,11 @@ tuned local session for tests/bench.
 from __future__ import annotations
 
 import os
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 # Confs that can be set on a live session (SQLConf, runtime-settable).
 RUNTIME_CONF: dict[str, str] = {
@@ -132,10 +135,36 @@ def tune(
 _CATALOG_CACHES = ("_graft_table_cache", "_graft_stats_cache")
 
 
+def memo(
+    spark: SparkSession, name: str, key: Hashable, build: Callable[[], _T]
+) -> _T:
+    """Get-or-build one per-session memo entry.
+
+    The engine's one way to memoize a corpus artifact (table handle,
+    persisted shingle/pair/quantized relation, fitted centroids, stats):
+    entries live in the session attribute ``_graft_<name>_cache``, keyed
+    per corpus (``sf_dir`` or table path), so they die with the session
+    and :func:`clear_caches` drops them when a corpus is rewritten in
+    place. ``build`` runs on a miss and owns the artifact's
+    materialization (persist, ``count()``, ``localCheckpoint``).
+
+    The dict is looked up on the session on every call and read with
+    ``get`` / written with item assignment only, so a caller may swap in
+    a ``dict`` subclass that observes reads and writes.
+    """
+    cache = spark.__dict__.setdefault(f"_graft_{name}_cache", {})
+    hit = cache.get(key)
+    if hit is None:
+        hit = build()
+        cache[key] = hit
+    return hit
+
+
 def clear_caches(
     spark: SparkSession, keep_table_handles: bool = False
 ) -> int:
-    """Drop every per-session memo the engine hangs off the SparkSession.
+    """Drop every per-session memo (:func:`memo` entry) the engine hangs
+    off the SparkSession.
 
     The engine memoizes table handles and persisted shingle/pair
     relations per (session, sf_dir) — correct while the underlying

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import ARTIFACTS_DIR
-from ..session import tune
+from ..session import memo, tune
 
 #: All tables the driver test data provides (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -181,16 +181,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Memoized per (session, path): ``spark.read.parquet`` does a
     driver-side footer/schema read (~0.1-0.2 s each) on every call,
     which dominated plan-build time for multi-table specs. DataFrame
-    plans are immutable, so reusing one per session is free; the cache
-    dies with the session object.
+    plans are immutable, so reusing one per session is free; the
+    :func:`session.memo` entry dies with the session object.
     """
     tune(spark)
-    cache: dict[str, DataFrame] = spark.__dict__.setdefault(
-        "_graft_table_cache", {}
-    )
     path = table_path(sf_dir, name)
-    df = cache.get(path)
-    if df is None:
+
+    def build() -> DataFrame:
         df = spark.read.parquet(
             _stage_if_unsplittable(spark, path, name, sf_dir)
         )
@@ -202,8 +199,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts",
                 F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"),
             )
-        cache[path] = df
-    return df
+        return df
+
+    return memo(spark, "table", path, build)
 
 
 def load_source(
@@ -389,36 +387,35 @@ def collect_table_stats(
     gathers the same numbers itself: exact row counts and byte sizes
     from parquet FOOTERS (metadata-only — no data pages are read, so
     this is O(files), not O(bytes), and at 100 TB it is the same
-    cheap metadata pass the catalog's ANALYZE runs). Memoized per
-    (session, sf_dir). Consumed by :func:`stats_informed_join` and,
-    on a catalog-backed deployment, by ``spark.sql.cbo.enabled``.
+    cheap metadata pass the catalog's ANALYZE runs). A
+    :func:`session.memo` entry per (session, sf_dir). Consumed by
+    :func:`stats_informed_join` and, on a catalog-backed deployment, by
+    ``spark.sql.cbo.enabled``.
     """
     import pyarrow.parquet as pq
 
-    cache: dict = spark.__dict__.setdefault("_graft_stats_cache", {})
-    got = cache.get(sf_dir)
-    if got is not None:
-        return got
-    stats: dict[str, dict[str, int]] = {}
-    for name in tables:
-        path = table_path(sf_dir, name)
-        rows = 0
-        size = 0
-        files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        for f in files:
-            rows += pq.ParquetFile(f).metadata.num_rows
-            size += os.path.getsize(f)
-        stats[name] = {"rows": rows, "size_bytes": size}
-    cache[sf_dir] = stats
-    return stats
+    def build() -> dict[str, dict[str, int]]:
+        stats: dict[str, dict[str, int]] = {}
+        for name in tables:
+            path = table_path(sf_dir, name)
+            rows = 0
+            size = 0
+            files = (
+                [
+                    os.path.join(path, f)
+                    for f in os.listdir(path)
+                    if f.endswith(".parquet")
+                ]
+                if os.path.isdir(path)
+                else [path]
+            )
+            for f in files:
+                rows += pq.ParquetFile(f).metadata.num_rows
+                size += os.path.getsize(f)
+            stats[name] = {"rows": rows, "size_bytes": size}
+        return stats
+
+    return memo(spark, "stats", sf_dir, build)
 
 
 def stats_informed_join(

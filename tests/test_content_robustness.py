@@ -13,6 +13,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from gcp_dbt_data_engineering_spark import REPO_ROOT
 from gcp_dbt_data_engineering_spark.operators import texthash as th
 from gcp_dbt_data_engineering_spark.operators.dedup import (
     QCLAMP,
@@ -239,7 +240,7 @@ def test_nasty_artifact_green():
     import json
     import os
 
-    path = "/root/repo/CORRECTNESS_nasty.json"
+    path = os.path.join(REPO_ROOT, "CORRECTNESS_nasty.json")
     assert os.path.exists(path), "run tools/make_nasty.py + the gate"
     with open(path) as f:
         d = json.load(f)
@@ -292,7 +293,7 @@ def test_retry_gate_artifact_green():
     import json
     import os
 
-    path = "/root/repo/RETRY_GATE.json"
+    path = os.path.join(REPO_ROOT, "RETRY_GATE.json")
     assert os.path.exists(path), "run tools/retry_gate.py"
     with open(path) as f:
         d = json.load(f)
@@ -397,7 +398,7 @@ def test_empty_corpus_artifact_green():
     import json
     import os
 
-    path = "/root/repo/CORRECTNESS_empty.json"
+    path = os.path.join(REPO_ROOT, "CORRECTNESS_empty.json")
     assert os.path.exists(path), "run tools/make_empty.py + the gate"
     with open(path) as f:
         d = json.load(f)

@@ -67,6 +67,7 @@ def test_ppjoin_prefix_defuses_hot_shingle(spark):
 
     from gcp_dbt_data_engineering_spark.operators.dedup import (
         _ppjoin_candidates,
+        _rank_shingle_frame,
     )
 
     hot = 999
@@ -84,7 +85,7 @@ def test_ppjoin_prefix_defuses_hot_shingle(spark):
         .count()
     )
     assert naive == 18 * 17 // 2  # the skew bomb the prefix must defuse
-    assert _ppjoin_candidates(sh).count() == 0
+    assert _ppjoin_candidates(_rank_shingle_frame(sh)).count() == 0
 
 
 def test_ppjoin_matches_naive_join(spark):
@@ -319,8 +320,8 @@ def test_shingle_sets_verify_matches_row_join(spark):
     every candidate pair into pair x shingle rows and re-aggregating.
     The array relation must equal a direct set aggregation, the
     array-verified Jaccard pairs must equal the row-join reference
-    bit-for-bit, and the memo must follow the _graft_*_cache
-    discipline."""
+    bit-for-bit, and the memo must be a session.memo entry that
+    clear_caches drops."""
     from pyspark.sql import functions as F
 
     from gcp_dbt_data_engineering_spark.operators.dedup import (
@@ -352,7 +353,7 @@ def test_shingle_sets_verify_matches_row_join(spark):
     assert all(len(set(hs)) == n == len(hs) for _, hs, n in got)
 
     # array-intersect verification == row-join reference, bit-for-bit
-    pairs = _ppjoin_candidates(None, _ranked_shingles(spark, SF))
+    pairs = _ppjoin_candidates(_ranked_shingles(spark, SF))
     sh = _shingle_rows(spark, SF)
     a = sh.select(F.col("doc_id").alias("doc_a"), "h")
     b = sh.select(F.col("doc_id").alias("doc_b"), "h")

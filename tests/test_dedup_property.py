@@ -140,3 +140,39 @@ def test_minhash_coeffs_are_independent_permutations():
     new_argmins = {argmin(a, b) for a, b in coeffs}
     assert len(old_argmins) == 1  # documents the defect being guarded
     assert len(new_argmins) >= 8  # independent perms pick spread minima
+
+
+def test_dedup_exact_whitespace_class_matches_oracle(spark, tmp_path):
+    """VT (0x0B) is whitespace to Java's regex ``\\s`` but not to
+    DuckDB's RE2 ``\\s``; both dialects spell the class out, so a
+    VT-separated document groups with its space- and tab-separated
+    copies in the engine and in the oracle alike."""
+    import duckdb
+
+    from gcp_dbt_data_engineering_spark.operators.dedup import (
+        ORACLE_DEDUP_EXACT,
+        dedup_exact,
+    )
+
+    corpus = str(tmp_path / "ws")
+    os.makedirs(corpus)
+    texts = ["a\x0bb", "a b", "a\tb"]
+    path = f"{corpus}/documents.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), type=pa.int64()),
+                "source": pa.array(["s"] * len(texts)),
+                "text": pa.array(texts),
+            }
+        ),
+        path,
+    )
+    got = sorted(tuple(r) for r in dedup_exact(spark, corpus).collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
+    )
+    want = sorted(con.execute(ORACLE_DEDUP_EXACT).fetchall())
+    con.close()
+    assert got == want == [(0, 2, 3)]

@@ -22,7 +22,9 @@ import time
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+from gcp_dbt_data_engineering_spark import REPO_ROOT
+
+sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
 
 
 @pytest.fixture()
@@ -59,7 +61,6 @@ def test_write_merged_reads_before_truncating(tmp_path):
     before merge_into reads it — the exact overwrite bug again, one
     layer up (caught live in r10: the first checkpoint emptied the
     committed sf10 record). write_merged must read first."""
-    sys.path.insert(0, "/root/repo/tools")
     from ann_candidates import write_merged
 
     path = str(tmp_path / "ANN_CANDIDATES.json")

@@ -15,12 +15,14 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+from gcp_dbt_data_engineering_spark import REPO_ROOT
+
+sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
 
 from plan_audit import BNLJ_OK, SINGLE_PARTITION_OK, audit_spec  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-ARTIFACT = "/root/repo/PLAN_AUDIT.json"
+ARTIFACT = os.path.join(REPO_ROOT, "PLAN_AUDIT.json")
 
 
 def test_global_agg_funnel_classified_fine(spark):

@@ -39,6 +39,17 @@ SAMPLE = (
     "revenue_by_region",
     "events_key_skew_stats",
     "sketch_hll_distinct_users",
+    # the consumers of the other session memos (shingle, pair, cc
+    # labels, PageRank graph, contamination shingles, decoded assets)
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_minhash_lsh",
+    "dedup_cluster_components",
+    "dedup_keep_best",
+    "dedup_graph_pagerank",
+    "text_ngram_novelty",
+    "contamination_ngram_check",
+    "multimodal_meta",
 )
 
 #: features whose committed values must match a live re-audit. Node

@@ -281,6 +281,7 @@ def test_ppjoin_candidate_filters_in_join(spark):
     from gcp_dbt_data_engineering_spark.operators.dedup import (
         SHINGLE_N,
         _ppjoin_candidates,
+        _rank_shingle_frame,
     )
     from gcp_dbt_data_engineering_spark.sources import load_table
 
@@ -298,7 +299,7 @@ def test_ppjoin_candidate_filters_in_join(spark):
         .selectExpr("doc_id", "explode(hs) AS h")
         .distinct()
     )
-    plan = _plan(_ppjoin_candidates(sh))
+    plan = _plan(_ppjoin_candidates(_rank_shingle_frame(sh)))
     # joins: freq⋈sh (appears on both self-join sides) + the self-join
     # on h = 3 physical joins; formatted mode mentions each node twice
     # (tree + details), so the string count is ≤ 6. na/nb/ra/rb must
