@@ -15,9 +15,9 @@ order-insensitive value-hash matches between Spark and DuckDB):
 - averages/ratios: exact decimal sums cast to double, then one double
   division — deterministic IEEE in both engines.
 - top-k: rank with explicit total-order tiebreakers (unique keys last).
-- timestamps: output DATE or STRING, never raw timestamps (the events
-  table is nanosecond-precision parquet that the two engines read at
-  different precisions).
+- timestamps: output DATE or STRING, never raw timestamps (an events
+  file may store nanosecond-precision parquet, which the two engines
+  read at different precisions).
 """
 
 from __future__ import annotations

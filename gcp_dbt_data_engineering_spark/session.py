@@ -7,10 +7,11 @@ the same code runs on local[*] for tests and on a real cluster:
 
 - AQE on (runtime re-planning, skew-join handling, partition coalescing)
 - UTC session timezone (deterministic timestamp semantics vs the oracle)
-- nanosecond-parquet compatibility (``events.parquet`` uses
-  TIMESTAMP(NANOS), which Spark reads as long only when
-  ``spark.sql.legacy.parquet.nanosAsLong`` is set; the registry converts
-  back to timestamp_ntz — see sources/registry.py)
+- nanosecond-parquet compatibility (a TIMESTAMP(NANOS) column reads
+  as long only when ``spark.sql.legacy.parquet.nanosAsLong`` is set;
+  the registry converts ``events.ts`` back to timestamp_ntz when the
+  file stores nanos — see sources/registry.py. The driver corpora
+  store micros, so there the conversion never fires)
 - Arrow for any Pandas-UDF path
 
 ``tune(spark)`` applies the runtime-settable subset to an *existing*
@@ -33,9 +34,9 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # events.parquet stores TIMESTAMP(NANOS); without this Spark 4 refuses
-    # the file outright (PARQUET_TYPE_ILLEGAL). With it, NANOS columns read
-    # as bigint nanoseconds and the registry rebuilds the timestamp.
+    # Without this Spark 4 refuses a TIMESTAMP(NANOS) parquet column
+    # outright (PARQUET_TYPE_ILLEGAL). With it, NANOS columns read as
+    # bigint nanoseconds and the registry rebuilds an events timestamp.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # ~120 specs x several codegen units each overflow the default

@@ -13,8 +13,10 @@ Scale notes (100 TB posture):
 - Reads are plain ``spark.read.parquet`` → Catalyst handles column
   pruning + predicate/aggregate pushdown + partition pruning; nothing is
   collected to the driver.
-- ``events.ts`` is stored as parquet TIMESTAMP(NANOS). Spark 4 reads it
-  only as bigint (``spark.sql.legacy.parquet.nanosAsLong``); we rebuild a
+- ``events.ts`` is parquet TIMESTAMP(MICROS) in the driver corpora
+  (sf0.001-sf0.1) and Spark reads it as a timestamp directly. A corpus
+  that stores it as TIMESTAMP(NANOS) reads only as bigint (Spark 4,
+  ``spark.sql.legacy.parquet.nanosAsLong``); for that file we rebuild a
   ``timestamp_ntz`` from the raw nanos with integer arithmetic — a
   codegen-friendly projection, no UDF, negligible cost at any scale.
 """
@@ -22,6 +24,8 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,6 +105,29 @@ STAGE_MIN_BYTES = 400_000
 STAGE_DIR = os.path.join(ARTIFACTS_DIR, "staged")
 
 
+def _split_parquet(path: str, out_dir: str, n: int) -> None:
+    """Write ``path`` back as ``n`` contiguous row slices under ``out_dir``.
+
+    One ``part-<i>.parquet`` per slice, each ONE row group, with the
+    source's Arrow schema (metadata included) and the writer's default
+    codec. Part names sort in slice order, so the parts concatenated by
+    name are the source table row for row.
+    """
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(path)
+    step = -(-table.num_rows // n)
+    os.makedirs(out_dir)
+    for i in range(n):
+        part = table.slice(i * step, step)
+        pq.write_table(
+            part,
+            os.path.join(out_dir, f"part-{i:05d}.parquet"),
+            row_group_size=max(1, part.num_rows),
+        )
+    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
+
+
 def _stage_if_unsplittable(
     spark: SparkSession, path: str, name: str, sf_dir: str
 ) -> str:
@@ -113,12 +140,32 @@ def _stage_if_unsplittable(
     serial decode happens *before* its shuffle). The fix is the same
     one-time ingest/compaction step any lake runs (Delta OPTIMIZE,
     Iceberg rewrite_data_files): rewrite the table once into
-    ~parallelism-sized files under ``.artifacts/staged`` and read that.
+    ``n = min(16, defaultParallelism)`` files under ``.artifacts/staged``
+    and read that, so the scan splits one file per task and ``spread()``
+    skips its repartition.
+
+    The rewrite runs on the driver with pyarrow (:func:`_split_parquet`):
+    one Arrow read of the row group, then ``n`` contiguous slices, each
+    written as one row group with the source's exact Arrow schema — so
+    a nanosecond timestamp stays nanoseconds and Spark reads the staged
+    files with the same schema as the raw one. It launches no Spark job
+    and shuffles nothing. Slices keep the source's row order, and the
+    part names sort in that order, so the staged table concatenated by
+    name equals the raw table, which a test checks with ``Table.equals``.
+
+    Memory: the Arrow read holds the whole decoded row group in driver
+    memory at once, where Spark's one task streamed it in batches. The
+    cost is bounded by one row group, the unit the source's writer
+    already buffered whole, and that is why only single-row-group files
+    are staged. Multi-row-group lakes split at their row groups and are
+    read raw, at any size.
+
     Keyed by (mtime, size) of the source so a regenerated corpus
     re-stages; written to a tmp dir + atomic rename so concurrent
-    sessions can race safely; layout only — row *contents* are
-    byte-identical, which every DuckDB oracle (reading the RAW file)
-    re-proves on each gate run.
+    sessions can race safely, and a failed rewrite removes its tmp dir
+    before re-raising; layout only — row *contents* are identical,
+    which every DuckDB oracle (reading the RAW file) re-proves on each
+    gate run.
     """
     try:
         st = os.stat(path)
@@ -139,14 +186,15 @@ def _stage_if_unsplittable(
     if not os.path.exists(os.path.join(staged, "_SUCCESS")):
         n = min(16, spark.sparkContext.defaultParallelism)
         tmp = f"{staged}.tmp-{os.getpid()}"
-        spark.read.parquet(path).repartition(n).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)  # a dead same-pid attempt
+        try:
+            _split_parquet(path, tmp, n)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         try:
             os.rename(tmp, staged)
         except OSError:  # another session won the race
-            import shutil
-
             shutil.rmtree(tmp, ignore_errors=True)
         # prune layouts staged from older versions of THIS (table, sf)
         # source (mtime/size key changed => the corpus was regenerated);
@@ -155,9 +203,6 @@ def _stage_if_unsplittable(
         # still reference a layout it staged moments ago (staged paths
         # are cached per session), so only reap directories old enough
         # that no live session plausibly still points at them.
-        import shutil
-        import time
-
         prune_ttl_s = 3600.0
         for d in os.listdir(STAGE_DIR):
             if (
@@ -176,7 +221,7 @@ def _stage_if_unsplittable(
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table; normalizes the events nanosecond timestamp.
+    """Load one table; normalizes an events timestamp stored as nanos.
 
     Memoized per (session, path): ``spark.read.parquet`` does a
     driver-side footer/schema read (~0.1-0.2 s each) on every call,
@@ -388,7 +433,7 @@ def collect_table_stats(
     from parquet FOOTERS (metadata-only — no data pages are read, so
     this is O(files), not O(bytes), and at 100 TB it is the same
     cheap metadata pass the catalog's ANALYZE runs). A
-    :func:`session.memo` entry per (session, sf_dir). Consumed by
+    :func:`session.memo` entry per (session, sf_dir, tables). Consumed by
     :func:`stats_informed_join` and, on a catalog-backed deployment, by
     ``spark.sql.cbo.enabled``.
     """
@@ -415,7 +460,7 @@ def collect_table_stats(
             stats[name] = {"rows": rows, "size_bytes": size}
         return stats
 
-    return memo(spark, "stats", sf_dir, build)
+    return memo(spark, "stats", (sf_dir, tuple(tables)), build)
 
 
 def stats_informed_join(

@@ -18,9 +18,9 @@ Scale posture (100 TB):
   over (user_id, ts) then one aggregate; a single hash partition by
   user_id, no iteration. At 1000 executors the only concern is
   user-key skew (bots) — salt or cap-events-per-user upstream.
-- Timestamps: parquet stores TIMESTAMP(NANOS); both engines land on
-  microseconds (sources.load_table: nanos DIV 1000), so interval
-  comparisons agree exactly.
+- Timestamps: both engines land on microseconds (the driver corpora
+  store TIMESTAMP(MICROS); a nanos file goes through sources.load_table's
+  nanos DIV 1000), so interval comparisons agree exactly.
 """
 
 from __future__ import annotations

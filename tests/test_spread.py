@@ -1,12 +1,20 @@
-"""spread(): file-size-based split estimation (no df.rdd analysis)."""
+"""spread(): file-size-based split estimation (no df.rdd analysis), and
+the registry's staging of single-row-group tables."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.sources import load_table, spread
+from gcp_dbt_data_engineering_spark.sources import registry as reg
+
+from .conftest import job_ids
 
 ART = os.path.join(ARTIFACTS_DIR, "spread_test")
 
@@ -150,3 +158,139 @@ def test_clear_caches_staleness_regression(spark, tmp_path):
     n2 = _shingle_rows(spark, corpus).count()
     assert 0 < n2 != n1
     clear_caches(spark)  # leave no tmp-corpus state for other tests
+
+
+#: The sf0.1 tables that are one row group of at least STAGE_MIN_BYTES.
+STAGED_SF01 = ("lineitem", "orders", "events", "documents", "embeddings")
+
+
+@pytest.fixture
+def stage_dir(tmp_path, monkeypatch):
+    """A private, empty STAGE_DIR, so each test stages from scratch."""
+    d = str(tmp_path / "staged")
+    monkeypatch.setattr(reg, "STAGE_DIR", d)
+    return d
+
+
+def _parts(staged: str) -> list[str]:
+    return sorted(
+        os.path.join(staged, f)
+        for f in os.listdir(staged)
+        if f.endswith(".parquet")
+    )
+
+
+def test_staging_launches_no_spark_job(spark, stage_dir):
+    sf = "/root/testdata/sf0.1"
+    before = job_ids(spark)
+    staged = reg._stage_if_unsplittable(
+        spark, reg.table_path(sf, "orders"), "orders", sf
+    )
+    assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+    assert job_ids(spark) - before == set()
+
+
+def test_staged_parts_concatenate_to_the_raw_table(spark, stage_dir):
+    """Each staged part is one row group; in part order the parts are
+    the raw table, schema and schema metadata included."""
+    sf = "/root/testdata/sf0.1"
+    n = min(16, spark.sparkContext.defaultParallelism)
+    for name in STAGED_SF01:
+        path = reg.table_path(sf, name)
+        staged = reg._stage_if_unsplittable(spark, path, name, sf)
+        assert staged.startswith(stage_dir), name
+        parts = _parts(staged)
+        assert len(parts) == n, name
+        assert all(
+            pq.ParquetFile(f).metadata.num_row_groups == 1 for f in parts
+        ), name
+        got = pa.concat_tables(pq.read_table(f) for f in parts)
+        assert got.equals(pq.read_table(path), check_metadata=True), name
+
+
+def test_staged_nanos_nulls_and_lists_read_like_the_raw_file(
+    spark, tmp_path, stage_dir
+):
+    """A TIMESTAMP(NANOS) column (read as bigint under nanosAsLong), a
+    list column, and NULLs in every column but the key and inside the
+    lists: Spark reads the same schema and the same rows from the raw
+    file and the staged copy."""
+    rows = 30_000
+    ids = list(range(rows))
+    table = pa.table(
+        {
+            "id": pa.array(ids, type=pa.int64()),
+            "ts": pa.array(
+                [
+                    None if i % 97 == 0
+                    else 1_600_000_000_123_456_789 + i * 1_000_003
+                    for i in ids
+                ],
+                type=pa.timestamp("ns"),
+            ),
+            "tag": pa.array(
+                [None if i % 89 == 0 else f"t{i * 7919 % 100_003}" for i in ids]
+            ),
+            "vec": pa.array(
+                [
+                    None if i % 83 == 0
+                    else [float(i % 13), None if i % 5 == 0 else i / 7.0]
+                    for i in ids
+                ],
+                type=pa.list_(pa.float32()),
+            ),
+        }
+    )
+    sf = str(tmp_path / "sfnanos")
+    os.makedirs(sf)
+    path = reg.table_path(sf, "events")
+    pq.write_table(table, path, row_group_size=rows)
+    assert os.path.getsize(path) >= reg.STAGE_MIN_BYTES
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+
+    staged = reg._stage_if_unsplittable(spark, path, "events", sf)
+    assert staged != path and len(_parts(staged)) > 1
+    raw_df = spark.read.parquet(path)
+    staged_df = spark.read.parquet(staged)
+    assert raw_df.schema == staged_df.schema
+    assert dict(raw_df.dtypes)["ts"] == "bigint"
+    assert staged_df.count() == raw_df.count() == rows
+    assert raw_df.exceptAll(staged_df).count() == 0
+    assert staged_df.exceptAll(raw_df).count() == 0
+
+
+def test_failed_staging_leaves_no_tmp_dir(spark, stage_dir, monkeypatch):
+    """A rewrite that raises mid-way removes its partial tmp directory
+    and publishes no layout."""
+    sf = "/root/testdata/sf0.1"
+    real_write = pq.write_table
+    calls = []
+
+    def write_then_fail(*args, **kwargs):
+        calls.append(1)
+        if len(calls) > 1:
+            raise OSError("disk full")
+        real_write(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", write_then_fail)
+    with pytest.raises(OSError, match="disk full"):
+        reg._stage_if_unsplittable(
+            spark, reg.table_path(sf, "orders"), "orders", sf
+        )
+    assert len(calls) == 2  # one part was on disk when it failed
+    assert os.listdir(stage_dir) == []
+
+
+def test_collect_table_stats_keys_on_tables(spark):
+    """A one-table call must not short the later default call."""
+    from gcp_dbt_data_engineering_spark.session import clear_caches
+    from gcp_dbt_data_engineering_spark.sources import collect_table_stats
+
+    sf = "/root/testdata/sf0.001"
+    clear_caches(spark)
+    assert list(collect_table_stats(spark, sf, tables=("nation",))) == [
+        "nation"
+    ]
+    stats = collect_table_stats(spark, sf)
+    assert sorted(stats) == sorted(reg.TABLES) and len(stats) == 10
+    assert stats["nation"]["rows"] > 0

@@ -75,12 +75,15 @@ def main() -> int:
     con = duckdb.connect()
     # Bound the oracle engine: DuckDB's default memory limit is ~80 % of
     # RAM, which alongside a 24 g Spark driver JVM OOM-kills the process
-    # at large SFs; likewise an unbounded spill once filled the disk on
-    # a quadratic oracle (sf10 shingle self-join).  Both are properties
-    # of the ORACLE, not the engine under test.
+    # at large SFs, and several gates running concurrently take the
+    # whole sweep down (a sf10 dedup oracle once hit 37 GB RSS); capped,
+    # a big-SF oracle spills to the temp dir instead. An unbounded spill
+    # once filled the disk on a quadratic oracle (sf10 shingle
+    # self-join), so the spill is capped too. Both are properties of the
+    # ORACLE, not the engine under test.
     con.execute(
         "SET memory_limit = "
-        f"'{os.environ.get('DUCKDB_MEMORY_LIMIT', '48GB')}'"
+        f"'{os.environ.get('DUCKDB_MEMORY_LIMIT', '16GB')}'"
     )
     con.execute(
         "SET temp_directory = "
@@ -89,13 +92,6 @@ def main() -> int:
     con.execute(
         "SET max_temp_directory_size = "
         f"'{os.environ.get('DUCKDB_TEMP_MAX', '60GB')}'"
-    )
-    # cap the oracle's RAM so big-SF runs spill to the temp dir instead
-    # of ballooning to DuckDB's default 80%-of-RAM and getting
-    # OOM-killed when several gates run concurrently (r8: a sf10 dedup
-    # oracle hit 37 GB RSS and took the whole sweep down)
-    con.execute(
-        f"SET memory_limit = '{os.environ.get('DUCKDB_MEM', '16GB')}'"
     )
     # Oracles that are intractable in DuckDB at the chosen SF (e.g. a
     # hot-shingle self-join that spills > disk at sf10) can be demoted
