@@ -30,13 +30,19 @@ Scale posture (100 TB):
 - Shingling/hashing is per-row projection work — no shuffle, linear.
 - Every pair-generating join keys on 8-byte hashes, never raw text;
   the only shuffles are on those hashes and on ``doc_id``.
-- MinHash: signatures come from ONE hash-aggregate pass (16 ``min``
-  partial aggs), not 16 jobs; LSH bucket join replaces the O(n^2)
-  pairing with per-bucket blow-up. Skewed buckets (boilerplate docs)
-  would salt or cap-by-frequency here — noted, not needed at test SF.
-- SimHash: one groupBy(doc_id) with 60 partial-agg sign counters, then
-  a 5-way chunk-equality self-join (hamming<=4 has exact recall by
-  pigeonhole over 5 chunks of 12 bits).
+- One shingle artifact: each doc's sorted distinct shingle-hash array
+  and its size, a narrow projection persisted once per corpus; rows
+  (``explode``), sizes and MinHash signatures derive from it inside
+  the consuming plan, and only the global-frequency ranking of the
+  PPJoin prefix filter is a second memo.
+- MinHash: signatures are 16 ``array_min`` projections over each
+  doc's shingle array — no aggregate, no shuffle; LSH bucket join
+  replaces the O(n^2) pairing with per-bucket blow-up. Skewed buckets
+  (boilerplate docs) would salt or cap-by-frequency here — noted, not
+  needed at test SF.
+- SimHash: one groupBy(doc_id) with 60 partial-agg sign counters over
+  the exploded shingle rows, then a 5-way chunk-equality self-join
+  (hamming<=4 has exact recall by pigeonhole over 5 chunks of 12 bits).
 - Embedding near-dup: ``applyInPandas`` per blocking key — the classic
   blocked near-dup pattern; at 100 TB the block key becomes an LSH
   bucket (see ``similarity.py``) instead of the synthetic ``label``.
@@ -79,41 +85,59 @@ def _materialized(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, shingle-hash) rows — the inverted-index input.
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, hs, n): each doc's distinct shingle hashes as ONE sorted
+    array row plus the set size — the dedup family's one shingle
+    artifact, a :func:`session.memo` entry every shingle consumer
+    derives its relation from (rows, sizes, ranks, MinHash signatures).
 
-    Persisted ONCE per (session, sf_dir) via :func:`session.memo`: every
-    consumer references this relation 2-4 times (pair join sides, set
-    sizes, verification), and without a cache Spark re-runs the
-    interpreted shingle hashing per branch. A per-CALL persist would
-    leak one cached copy per spec per run into the shared session (the
-    round-1 contamination persist bug, ADVICE.md) — one bounded entry
-    per corpus is exactly the "materialize the shingle table once per
-    corpus snapshot" discipline a warehouse deployment uses.
+    A narrow projection after the ``doc_id`` repartition: the
+    documents table arrives as one small parquet file -> one
+    partition, so rows spread across cores BEFORE the CPU-heavy
+    hashing, and ``array_distinct`` + ``array_sort`` make the set
+    per row, with no explode + distinct or groupBy + collect_list
+    shuffle. Docs shorter than the shingle width (n = 0) and NULL text
+    drop out, like the oracle's unnest. Persisted once per (session,
+    sf_dir) and count()-materialized for the accurate-stats reason in
+    :func:`_materialized`; a per-CALL persist would leak one cached
+    copy per spec per run into the shared session (the round-1
+    contamination persist bug).
     """
 
     def build() -> DataFrame:
-        # the documents table arrives as one small parquet file -> one
-        # partition; spread rows across cores BEFORE the CPU-heavy
-        # hashing projection (hash-partitioning by doc_id also
-        # pre-aligns the later per-doc aggregates).
         docs = load_table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism, "doc_id"
         )
+        hs = th.shingle_hashes("text", SHINGLE_N, "spark")
         return _materialized(
             docs.selectExpr(
-                "doc_id",
-                f"{th.shingle_hashes('text', SHINGLE_N, 'spark')} AS hs",
+                "doc_id", f"array_sort(array_distinct({hs})) AS hs"
             )
-            .select("doc_id", F.explode("hs").alias("h"))
-            .distinct()
+            .selectExpr("doc_id", "hs", "CAST(size(hs) AS BIGINT) AS n")
+            .filter("n > 0")
         )
 
-    return memo(spark, "shingle", sf_dir, build)
+    return memo(spark, "shingle_set", sf_dir, build)
+
+
+def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (doc_id, h) rows — the inverted-index input, exploded
+    from :func:`_shingle_sets` inside the consuming plan (each array is
+    already distinct, so no ``distinct`` is needed)."""
+    return _shingle_sets(spark, sf_dir).select(
+        "doc_id", F.explode("hs").alias("h")
+    )
+
+
+def _shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n): per-doc distinct-shingle counts, projected from
+    :func:`_shingle_sets` — the Spark twin of the oracle's ``sz``."""
+    return _shingle_sets(spark, sf_dir).select("doc_id", "n")
 
 
 def _sql_shingle_cte() -> str:
-    """DuckDB CTE bodies mirroring :func:`_shingle_rows` (names sh, sz).
+    """DuckDB CTE bodies mirroring :func:`_shingle_rows` and
+    :func:`_shingle_sizes` (names sh, sz).
 
     ``sh`` is MATERIALIZED: every consumer references it 2+ times (both
     self-join sides, sizes, verification), and DuckDB's default CTE
@@ -129,68 +153,15 @@ sh AS MATERIALIZED (SELECT DISTINCT doc_id, h
 sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)"""
 
 
-def _shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n): per-doc distinct-shingle counts, a
-    :func:`session.memo` entry like :func:`_shingle_rows` — the Spark
-    twin of the oracle's ``sz AS MATERIALIZED`` CTE. Five consumers
-    (Jaccard/containment verification sides, keep-best) each
-    re-aggregated the ~100× larger shingle relation per build; the
-    1-row-per-doc memo makes every reference a cached-scan."""
-    return memo(
-        spark,
-        "shingle_sz",
-        sf_dir,
-        lambda: _materialized(
-            _shingle_rows(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        ),
-    )
-
-
-def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, hs, n): each doc's distinct shingle hashes as ONE
-    sorted array row, plus the set size — the verification-side twin
-    of :func:`_shingle_rows`.
-
-    Exact-verification joins previously attached the row-form shingle
-    relation to both members of every candidate pair: the doc_a join
-    exploded each pair into ``na`` rows, the (doc_b, h) join shuffled
-    that pair x shingle intermediate, and a groupBy re-aggregated it
-    back to one row per pair — three exchanges carrying
-    O(pairs x shingles_per_doc) rows (guide §2.3/§2.4). With the set
-    in an array column, verification is two equi-joins on doc id and
-    a JVM ``array_intersect`` per pair: the shuffled unit is one
-    ~n_shingles x 8 B array per pair side instead of ``n`` 24 B rows,
-    and the aggregation exchange disappears (|A∩B| is computed in the
-    join's projection). A :func:`session.memo` entry, persisted and
-    count()-materialized for the same accurate-stats reason as the
-    row memo.
-    """
-    return memo(
-        spark,
-        "shingle_set",
-        sf_dir,
-        lambda: _materialized(
-            _shingle_rows(spark, sf_dir)
-            .groupBy("doc_id")
-            .agg(
-                F.sort_array(F.collect_list("h")).alias("hs"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        ),
-    )
-
-
 def _ranked_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h, rnk, n): each doc's shingles ranked by the GLOBAL
     (document-frequency, hash) order, plus the doc's shingle count.
 
     The prefix-filter index both set-similarity joins cut their
     prefixes from (Jaccard keeps rnk <= n - ceil(t*n) + 1, containment
-    likewise with its own t). A :func:`session.memo` entry like the
-    shingle relation itself — the same materialize-once index
-    artifact, two windows downstream of it.
+    likewise with its own t). Global document frequencies need a
+    shuffle on h anyway, so this stays a materialized
+    :func:`session.memo` entry, built over the exploded set artifact.
     """
     return memo(
         spark,
@@ -212,7 +183,7 @@ def _jaccard_pairs(
     in two doc-id equi-joins and ``|A∩B|`` is one JVM
     ``array_intersect`` in the projection — no pair x shingle
     explosion, no re-aggregation exchange, and the set sizes ride
-    along for free (guide §2.3/§2.4; see _shingle_sets). Pairs with
+    along for free (guide §2.3/§2.4). Pairs with
     an empty intersection surface as jaccard = 0 and are dropped by
     the threshold filter — the row-join form never produced them
     (inner join on h), so outputs are identical.
@@ -474,16 +445,23 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("doc_a"), "h", F.col("n").alias("na")
         )
     )
-    full_b = sh.select(F.col("doc_id").alias("doc_b"), "h")
+    # the container side is every doc's FULL exploded shingle set. Its
+    # size estimate is the set memo's scaled by row width, which
+    # misses the explode fan-out (16 MiB estimated vs ~40 MiB at sf1),
+    # so left to that estimate the planner would broadcast an
+    # O(corpus) relation; the inverted-index join is a sort-merge
+    # join on h at every scale
+    full_b = sh.select(F.col("doc_id").alias("doc_b"), "h").hint("merge")
     sizes = _shingle_sizes(spark, sf_dir)
     sz_b = sizes.withColumnRenamed("n", "nb")
     cands = (
         pref.join(full_b, "h")
         .filter(F.col("doc_a") != F.col("doc_b"))
-        # no forced-broadcast hint: the sizes memo is materialized with
-        # accurate stats, so the planner picks BHJ when the doc-count
-        # truly fits and can demote to a shuffled join at corpus sizes
-        # where a forced broadcast would hit the 8 GB relation cap
+        # no forced-broadcast hint: the sizes project the materialized
+        # set memo, whose stats are measured (an over-estimate for two
+        # of its columns), so the planner picks BHJ when it truly fits
+        # and a shuffled join at corpus sizes where a forced broadcast
+        # would hit the 8 GB relation cap
         .join(sz_b.selectExpr("doc_id AS doc_b", "nb"), "doc_b")
         .filter(F.expr(f"{tn} * na <= {td} * nb"))
         .select("doc_a", "doc_b")
@@ -538,21 +516,25 @@ LSH_BANDS = 4  # bands of MINHASH_K / LSH_BANDS rows each
 VERIFY_T = 0.5
 
 
-def _lsh_bands(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, key) LSH band rows from the shingle relation —
-    the single definition of the signature + banding layout, shared by
-    the operator and the occupancy audit (tools/lsh_buckets.py) so the
-    audited algorithm cannot drift from the shipping one."""
+def _lsh_bands(sets: DataFrame) -> DataFrame:
+    """(doc_id, band, key) LSH band rows from the (doc_id, hs) shingle
+    sets (:func:`_shingle_sets`) — the single definition of the
+    signature + banding layout, shared by the operator and the
+    occupancy audit (tools/lsh_buckets.py) so the audited algorithm
+    cannot drift from the shipping one. Each MinHash value is an
+    ``array_min`` over the doc's own array, so signatures are a
+    per-row projection with no groupBy."""
     r = MINHASH_K // LSH_BANDS
-    mins = sh.groupBy("doc_id").agg(
+    mins = sets.select(
+        "doc_id",
         *[
-            F.min(
-                F.expr(f"({a} * h + {b}) % {th.P}")
+            F.expr(
+                f"array_min(transform(hs, h -> ({a} * h + {b}) % {th.P}))"
             ).alias(f"mh{i}")
             for i, (a, b) in (
                 (i, th.minhash_coeffs(i)) for i in range(MINHASH_K)
             )
-        ]
+        ],
     )
     band_keys = F.array(
         *[
@@ -577,15 +559,14 @@ def _prefix_filter_expr(t_num: int, t_den: int) -> str:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle -> 16-perm MinHash -> 4x4 banded LSH -> verified pairs.
 
-    Signatures come from a single hash-aggregate over the exploded
-    shingle hashes (16 ``min`` partial aggs — map-side combined, one
-    shuffle on doc_id). Band keys bucket docs; docs sharing any band
-    become candidates; candidates are verified with exact Jaccard.
-    The oracle replays the identical permutations, so even LSH *misses*
-    match bit-for-bit.
+    Signatures are 16 ``array_min`` projections over each doc's shingle
+    array (:func:`_lsh_bands`) — no shuffle before the band join. Band
+    keys bucket docs; docs sharing any band become candidates;
+    candidates are verified with exact Jaccard. The oracle replays the
+    identical permutations, so even LSH *misses* match bit-for-bit.
     """
-    sh = _shingle_rows(spark, sf_dir)
-    bands = _lsh_bands(sh)
+    sets = _shingle_sets(spark, sf_dir)
+    bands = _lsh_bands(sets)
     x = bands.selectExpr("doc_id AS doc_a", "band", "key")
     y = bands.selectExpr("doc_id AS doc_b", "band", "key")
     pairs = (
@@ -594,7 +575,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return _jaccard_pairs(pairs, _shingle_sets(spark, sf_dir), VERIFY_T)
+    return _jaccard_pairs(pairs, sets, VERIFY_T)
 
 
 def _sql_minhash() -> str:
@@ -702,7 +683,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent/interleaved calls and leaked afterward. Dropping is
     # safe immediately — spark.sql resolves the view at ANALYSIS time,
     # so the returned DataFrame's plan no longer needs the catalog
-    # entry.
+    # entry. The view is the exploded rows DERIVED from the set memo,
+    # never the memo itself: dropTempView uncaches the view's own
+    # plan, which would evict the persisted artifact for every later
+    # consumer.
     import uuid
 
     view = f"__graft_simhash_sh_{uuid.uuid4().hex}"

@@ -49,12 +49,12 @@ BENCH_SOURCES = ("src0", "src1")
 def _contam_shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, source, 5-gram hash) rows, staged once.
 
-    A lazily persisted :func:`session.memo` entry like
-    ``dedup._shingle_rows`` (which holds the 3-gram relation): the
-    5-gram fold is the CPU of both contamination operators, and this
-    is the relation a production pipeline materializes per corpus
-    snapshot. Spread before the fold — the fixture parquet is one
-    scan split.
+    A lazily persisted :func:`session.memo` entry: the 5-gram fold is
+    the CPU of both contamination operators, and this is the relation
+    a production pipeline materializes per corpus snapshot. Spread
+    before the fold — the fixture parquet is one scan split. It stays
+    separate from dedup's 3-gram ``_shingle_sets`` artifact: different
+    shingle width, rows keyed by ``source`` as well as ``doc_id``.
     """
 
     def build() -> DataFrame:

@@ -1177,11 +1177,11 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs at all, so it scales as a plain aggregation where
     MinHash needs a join.
 
-    Plan: reuses the per-corpus persisted distinct (doc_id, shingle)
-    relation shared with the dedup family, one window over the hash
-    for doc frequency (the shuffle moves compact (h, doc_id) rows),
-    then a per-doc aggregate. Docs shorter than the shingle width have
-    no rows and drop out — same in the oracle.
+    Plan: explodes the per-corpus persisted shingle-set memo shared
+    with the dedup family (``dedup._shingle_rows``), one window over
+    the hash for doc frequency (the shuffle moves compact (h, doc_id)
+    rows), then a per-doc aggregate. Docs shorter than the shingle
+    width have no rows and drop out — same in the oracle.
     """
     from .dedup import _shingle_rows
 

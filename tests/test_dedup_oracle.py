@@ -152,6 +152,24 @@ def test_containment_mutual_pairs_are_jaccard_pairs(spark):
     assert mutual <= jac
 
 
+def test_containment_never_broadcasts_full_shingle_rows(spark):
+    """The containment candidate join streams every doc's FULL
+    exploded shingle set. Its size estimate comes from the set memo
+    and misses the explode fan-out, so the join is pinned to a
+    sort-merge join on h instead of a broadcast of (doc_b, h)."""
+    import re
+
+    from gcp_dbt_data_engineering_spark.session import clear_caches
+
+    clear_caches(spark)
+    df = SPECS["dedup_containment"].spark(spark, SF)
+    df.collect()  # the final adaptive plan, not the initial one
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    smj_on_h = r"SortMergeJoin \[h#\d+L\], \[h#\d+L\], Inner"
+    assert re.search(smj_on_h, plan), plan
+    clear_caches(spark)
+
+
 def test_embedding_cosine_hot_label_tiled(spark):
     """A label holding 50 % of all vectors must still produce exactly
     the brute-force pair set, with every applyInPandas tile bounded —
@@ -285,33 +303,61 @@ def test_simhash_leaves_no_temp_views(spark):
     assert df1.count() == df2.count()
 
 
+def _independent_shingle_rows(spark):
+    """Distinct (doc_id, h) rows built straight from the documents
+    table with explode + distinct — the reference the shingle-set memo
+    and everything derived from it must reproduce exactly."""
+    from pyspark.sql import functions as F
+
+    from gcp_dbt_data_engineering_spark.operators import texthash as th
+    from gcp_dbt_data_engineering_spark.operators.dedup import SHINGLE_N
+    from gcp_dbt_data_engineering_spark.sources import load_table
+
+    hs = th.shingle_hashes("text", SHINGLE_N, "spark")
+    return (
+        load_table(spark, SF, "documents")
+        .selectExpr("doc_id", f"{hs} AS hs")
+        .select("doc_id", F.explode("hs").alias("h"))
+        .distinct()
+    )
+
+
 def test_shingle_sizes_memo_exact_and_invalidated(spark):
-    """r11 optimization: the per-doc shingle-size relation is memoized
-    + persisted (_graft_shingle_sz_cache) instead of re-aggregated by
-    every consumer. It must equal the direct aggregate exactly, hand
-    back the same handle on a second call, and be dropped by
-    clear_caches like every derived memo."""
+    """The per-doc shingle sizes are projected from the one persisted
+    shingle-set memo (_graft_shingle_set_cache) instead of
+    re-aggregated by every consumer. They must equal an independent
+    explode + distinct + groupBy aggregate exactly, read the same
+    memo handle on a second call, and be dropped by clear_caches like
+    every derived memo."""
     from pyspark.sql import functions as F
 
     from gcp_dbt_data_engineering_spark.operators.dedup import (
         _shingle_rows,
+        _shingle_sets,
         _shingle_sizes,
     )
     from gcp_dbt_data_engineering_spark.session import clear_caches
 
-    sizes = _shingle_sizes(spark, SF)
-    direct = (
-        _shingle_rows(spark, SF)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
+    clear_caches(spark)
+    sets = _shingle_sets(spark, SF)
+    direct_rows = _independent_shingle_rows(spark)
+    direct = direct_rows.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n")
     )
-    got = {(r["doc_id"], r["n"]) for r in sizes.collect()}
+    sizes = _shingle_sizes(spark, SF).collect()
+    got = {(r["doc_id"], r["n"]) for r in sizes}
     want = {(r["doc_id"], r["n"]) for r in direct.collect()}
     assert got == want and len(got) > 0
-    assert _shingle_sizes(spark, SF) is sizes  # memo hit
-    assert sizes.is_cached
+    rows = _shingle_rows(spark, SF).collect()
+    want_rows = direct_rows.collect()
+    assert {tuple(r) for r in rows} == {tuple(r) for r in want_rows}
+    assert _shingle_sets(spark, SF) is sets  # memo hit
+    assert sets.is_cached
+    for derived in (_shingle_sizes(spark, SF), _shingle_rows(spark, SF)):
+        plan = derived._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
     clear_caches(spark)
-    assert "_graft_shingle_sz_cache" not in spark.__dict__
+    assert "_graft_shingle_set_cache" not in spark.__dict__
 
 
 def test_shingle_sets_verify_matches_row_join(spark):
@@ -336,7 +382,7 @@ def test_shingle_sets_verify_matches_row_join(spark):
 
     sets = _shingle_sets(spark, SF)
     direct = (
-        _shingle_rows(spark, SF)
+        _independent_shingle_rows(spark)
         .groupBy("doc_id")
         .agg(
             F.sort_array(F.collect_list("h")).alias("hs"),
@@ -398,21 +444,40 @@ def test_shingle_memos_materialized_with_accurate_stats(spark):
     estimate. The lazy form under-estimated the 26M-row sf10 relation
     below the broadcast threshold and the containment verify chain
     broadcast the FULL shingle table twice per execution (919
-    exec-seconds per warm pass; an OOM at 100 TB)."""
+    exec-seconds per warm pass; an OOM at 100 TB). Both memos left —
+    the shingle sets and the ranked prefix index — carry it."""
     from gcp_dbt_data_engineering_spark.operators.dedup import (
         _ranked_shingles,
-        _shingle_rows,
+        _shingle_sets,
     )
     from gcp_dbt_data_engineering_spark.session import clear_caches
 
     clear_caches(spark)
-    sh = _shingle_rows(spark, SF)
-    # materialized at creation: cached rowCount is KNOWN to the planner
-    # (lazy persist leaves rowCount undefined until some action runs)
-    stats = sh._jdf.queryExecution().optimizedPlan().stats()
-    assert stats.rowCount().isDefined(), "memo not materialized at creation"
-    n = stats.rowCount().get()
-    assert int(str(n)) == sh.count()
-    rk = _ranked_shingles(spark, SF)
-    assert rk._jdf.queryExecution().optimizedPlan().stats().rowCount().isDefined()
+    for memo_df in (_shingle_sets(spark, SF), _ranked_shingles(spark, SF)):
+        # materialized at creation: cached rowCount is KNOWN to the
+        # planner (lazy persist leaves rowCount undefined until some
+        # action runs)
+        stats = memo_df._jdf.queryExecution().optimizedPlan().stats()
+        assert stats.rowCount().isDefined(), "memo not materialized"
+        assert int(str(stats.rowCount().get())) == memo_df.count() > 0
+    clear_caches(spark)
+
+
+def test_simhash_keeps_shingle_memo_cached(spark):
+    """dedup_simhash reads the shingle-set memo and never evicts it.
+    Its temp view once held the memo's own plan, and dropTempView
+    uncaches a view's plan: simhash then re-hashed the documents from
+    parquet, and so did every later shingle consumer, while
+    ``is_cached`` still said True."""
+    from gcp_dbt_data_engineering_spark.operators.dedup import (
+        _shingle_rows,
+        dedup_simhash,
+    )
+    from gcp_dbt_data_engineering_spark.session import clear_caches
+
+    clear_caches(spark)
+    sim = dedup_simhash(spark, SF)
+    for df in (sim, _shingle_rows(spark, SF)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
     clear_caches(spark)

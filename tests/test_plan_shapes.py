@@ -88,6 +88,11 @@ BUDGETS = {
     # 60-bit fingerprint, single-SQL compile; one groupBy(doc_id), one
     # 5-chunk candidate join on the banded key
     "dedup_simhash": (8, 0),
+    # MinHash signatures are array_min projections over the shingle-set
+    # memo (no groupBy(doc_id)); the count includes the memo's own
+    # cached lineage (repartition on doc_id) and the band self-join +
+    # candidate distinct + two verify joins
+    "dedup_minhash_lsh": (11, 0),
     # top-V vocab broadcast, doc-keyed self-join, broadcast total
     "text_pmi_cooccurrence": (13, 2),
     # daily rollup + bounded calendar windows

@@ -53,16 +53,18 @@ def test_parse_bytes_suffixes():
 
 
 def test_clear_caches_unpersists(spark):
-    from gcp_dbt_data_engineering_spark.operators.dedup import _shingle_rows
+    from gcp_dbt_data_engineering_spark.operators.dedup import _shingle_sets
     from gcp_dbt_data_engineering_spark.session import clear_caches
 
-    sh = _shingle_rows(spark, "/root/testdata/sf0.001")
+    from .conftest import SF_SMOKE
+
+    sh = _shingle_sets(spark, SF_SMOKE)
     assert sh.is_cached
     assert clear_caches(spark) >= 1
     assert not sh.is_cached
-    assert "_graft_shingle_cache" not in spark.__dict__
+    assert "_graft_shingle_set_cache" not in spark.__dict__
     # re-derivable after the clear
-    assert _shingle_rows(spark, "/root/testdata/sf0.001").count() > 0
+    assert _shingle_sets(spark, SF_SMOKE).count() > 0
 
 
 def test_staging_layout(spark, tmp_path):

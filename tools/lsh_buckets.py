@@ -14,10 +14,10 @@ SFs) is the property that makes the operator viable at 100 TB.
 
 The banding layout and prefix filters are NOT re-implemented here:
 the audit calls the operator module's own ``_lsh_bands`` /
-``_prefix_filter_expr`` / ``_ranked_shingles`` helpers, so a change
-to the shipping algorithm is automatically a change to the audited
-one (the r8 lesson: evidence describing an old algorithm is worse
-than no evidence).
+``_prefix_filter_expr`` / ``_ranked_shingles`` helpers over its
+``_shingle_sets`` artifact, so a change to the shipping algorithm is
+automatically a change to the audited one (the r8 lesson: evidence
+describing an old algorithm is worse than no evidence).
 
 History: this audit is how the r8 permutation defect was found. The
 old family ``perm_coeffs`` (a_i = -70(i+1) mod P) made every
@@ -66,8 +66,9 @@ def main() -> int:
     out: dict[str, dict] = {}
     for sf_dir in sf_dirs:
         label = os.path.basename(os.path.normpath(sf_dir))
+        sets = dedup._shingle_sets(spark, sf_dir)
         sh = dedup._shingle_rows(spark, sf_dir)
-        n_docs = sh.select("doc_id").distinct().count()
+        n_docs = sets.count()
         out[label] = {"n_docs": int(n_docs)}
         if "ppjoin" in audits:
             ranked = dedup._ranked_shingles(spark, sf_dir)
@@ -125,7 +126,7 @@ def main() -> int:
             }
         if "minhash" in audits:
             sizes = (
-                dedup._lsh_bands(sh).groupBy("band", "key").count().persist()
+                dedup._lsh_bands(sets).groupBy("band", "key").count().persist()
             )
             agg = sizes.agg(
                 F.count("*").alias("n_buckets"),

@@ -13,7 +13,8 @@ documents (appended, doc_id ≥ 900000):
   text under a new id, a one-char-edit near-duplicate of doc 0,
   unicode stress (ZWJ emoji, astral-plane letters, combining marks,
   RTL Hebrew/Arabic, CJK, ligatures), quote/backslash/control
-  whitespace soup, and a NULL-text/NULL-lang row. `n_chars` is
+  whitespace soup, a vertical-tab-separated doc, and a
+  NULL-text/NULL-lang row. `n_chars` is
   recomputed as code-point length for injected rows.
 
 embeddings (appended, vec_id ≥ 900000):
@@ -150,6 +151,11 @@ def doc_rows() -> list[tuple]:
         # pure non-breaking-space doc (whitespace to a renderer, a
         # 3-byte-per-char multibyte word to a naive splitter)
         (900024, "\xa0" * 500, "zz"),
+        # a vertical tab (0x0B) between words: Java's regex \s counts
+        # it as whitespace and DuckDB's RE2 \s does not, so it pins
+        # the explicit whitespace class of dedup_exact and the
+        # [a-z0-9]+ word split behind every shingle
+        (900025, "alpha\x0bbeta gamma delta", "en"),
     ]
 
 
