@@ -22,7 +22,7 @@ Methodology:
   DataFrames: the prepared-query steady state every deployed job runs
   in (plan built once, corpus artifacts materialized once, serving
   every execution — at 100 TB plan+artifact cost amortizes to
-  nothing). Measured precisely (r11, statusTracker): re-executing a
+  nothing). Measured precisely (r11, status store): re-executing a
   held DataFrame re-runs ONLY its result stage — Spark reuses live
   shuffle map output and built broadcasts across executions of the
   same plan, besides skipping re-planning/re-compiling. Warm numbers
@@ -148,67 +148,19 @@ def main() -> None:
     # Deterministic per-spec counters (VERDICT r11 item 1b): wall-clock
     # on this box drifts ±15-40% run to run, so round-over-round
     # comparisons need noise-free metrics. After each COLD spec the
-    # JVM AppStatusStore is read (listener bus drained first) and the
-    # NEW job/stage entries past the previous watermark are attributed
-    # to that spec: job count, stage count, task count, shuffle
-    # read/write bytes, input bytes/records. Job and stage IDs are
-    # monotonic, so store eviction of old entries cannot corrupt the
-    # deltas. Reads happen OUTSIDE the timed region and add nothing to
-    # any recorded wall-clock.
+    # status store's entries for the jobs launched since the previous
+    # read are attributed to that spec (see status.StatusReader). Reads
+    # happen OUTSIDE the timed region and add nothing to any recorded
+    # wall-clock.
+    from gcp_dbt_data_engineering_spark.status import StatusReader
+
     counters: dict[str, dict[str, int]] = {}
-
-    def _store_state():
-        try:
-            jssc = spark.sparkContext._jsc.sc()
-            jssc.listenerBus().waitUntilEmpty(10_000)
-            store = jssc.statusStore()
-            gw = spark.sparkContext._gateway
-            stages = store.stageList(
-                None, False, False, gw.new_array(gw.jvm.double, 0), None
-            )
-            jobs = store.jobsList(None)
-        except Exception:
-            return None
-        job_rows = [
-            (jobs.apply(i).jobId(), jobs.apply(i).numTasks())
-            for i in range(jobs.size())
-        ]
-        stage_rows = []
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            stage_rows.append(
-                (
-                    s.stageId(),
-                    s.numTasks(),
-                    s.shuffleReadBytes(),
-                    s.shuffleWriteBytes(),
-                    s.inputBytes(),
-                    s.inputRecords(),
-                )
-            )
-        return job_rows, stage_rows
-
-    def _counter_delta(prev, cur) -> dict[str, int]:
-        (pj, ps), (cj, cs) = prev, cur
-        job_wm = max((j for j, _ in pj), default=-1)
-        stage_wm = max((s[0] for s in ps), default=-1)
-        new_j = [j for j in cj if j[0] > job_wm]
-        new_s = [s for s in cs if s[0] > stage_wm]
-        return {
-            "jobs": len(new_j),
-            "stages": len(new_s),
-            "tasks": sum(s[1] for s in new_s),
-            "shuffle_read_b": sum(s[2] for s in new_s),
-            "shuffle_write_b": sum(s[3] for s in new_s),
-            "input_b": sum(s[4] for s in new_s),
-            "input_records": sum(s[5] for s in new_s),
-        }
 
     if os.environ.get("BENCH_COLD", "1") != "0":
         order = sorted(specs)
         random.Random(20_260_813).shuffle(order)
         run_orders.append(order)
-        state = _store_state()
+        reader = StatusReader(spark)
         for name in order:
             # keep_table_handles: table schema/footer handles and
             # ANALYZE stats are catalog state (DuckDB's views are
@@ -227,18 +179,14 @@ def main() -> None:
                 # collect() fallback) — re-time it once with the fetch
                 # mode now known (ADVICE r6)
                 clear_caches(spark, keep_table_handles=True)
-                # re-baseline the counter watermark too, so the spec's
-                # counters describe the retimed run, not both runs
-                state = _store_state()
+                # drop the first run's jobs, so the spec's counters
+                # describe the retimed run, not both runs
+                reader.read()
                 t0 = time.perf_counter()
                 df = specs[name].spark(spark, sf_dir)
                 counts[name] = fetch(name, df)
                 cold_s[name] = round(time.perf_counter() - t0, 4)
-            if state is not None:
-                new_state = _store_state()
-                if new_state is not None:
-                    counters[name] = _counter_delta(state, new_state)
-                state = new_state
+            counters[name] = reader.read()
         clear_caches(spark)
 
     for p in range(passes):
@@ -422,23 +370,6 @@ def main() -> None:
                 "plan_s": round(
                     sum(v for n, v in plan_s.items() if n not in mat), 4
                 ),
-                "ratio_execution_only": (
-                    round(
-                        max(
-                            q_total
-                            - sum(
-                                v
-                                for n, v in plan_s.items()
-                                if n not in mat
-                            ),
-                            0,
-                        )
-                        / dq_total,
-                        2,
-                    )
-                    if dq_total
-                    else None
-                ),
             },
             "materializations": {
                 "n": len(mat & set(timings)),
@@ -470,8 +401,8 @@ def main() -> None:
                 "fetch": fetch_mode.get(name, "arrow"),
                 # deterministic cold-pass counters (VERDICT r11 item
                 # 1b): jobs/stages/tasks + shuffle/input bytes from the
-                # JVM AppStatusStore, attributed per spec by ID
-                # watermark; absent when the store is unreachable
+                # JVM status store, attributed per spec by job-id
+                # watermark; absent when the cold pass did not run
                 "cold_counters": counters.get(name),
             }
             for name in sorted(timings)

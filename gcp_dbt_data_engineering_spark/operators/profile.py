@@ -85,140 +85,19 @@ def _hash_sample(df: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _long_form(
-    df: DataFrame, table: str, dtypes: dict[str, str], strings_only: bool = False
-) -> DataFrame:
-    """Melt a table to one row per (source row, profiled column).
-
-    Per cell: ``dval`` (numeric value as double), ``sval`` (the
-    string/date display form used for min/max_str), ``kval`` (an
-    injective string key for distinct counting — CAST to string is
-    injective for every type here, so COUNT(DISTINCT kval) ==
-    COUNT(DISTINCT col)), and a null flag. Pure projection + explode:
-    codegen-friendly, no UDFs, linear in cells.
-    """
-    structs = []
-    for c, kind in dtypes.items():
-        if strings_only and kind not in ("string", "date"):
-            continue
-        col = F.col(c)
-        numeric = kind in NUMERIC_KINDS
-        structs.append(
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.lit(kind).alias("dtype"),
-                (col.cast("double") if numeric else F.lit(None).cast("double")).alias("dval"),
-                (
-                    col.cast("date").cast("string")
-                    if kind == "date"
-                    else (col if kind == "string" else F.lit(None).cast("string"))
-                ).alias("sval"),
-                col.cast("string").alias("kval"),
-                col.isNull().cast("bigint").alias("isnull"),
-            )
-        )
-    return df.select(F.explode(F.array(*structs)).alias("r")).select(
-        F.lit(table).alias("table_name"), "r.*"
-    )
-
-
-def _column_stats(parts: list[tuple[DataFrame, str, dict[str, str]]]) -> DataFrame:
-    """Profile many (df, table, dtypes) in TWO fused jobs total.
-
-    Pass A (numeric + counts + distinct) hash-aggregates the long form
-    of every table at once; pass B (string/date min-max) runs its own
-    strings-only long pass so its immutable agg buffers can't downgrade
-    pass A to SortAggregate. The two ~#columns-row results broadcast-
-    join into the final long-format profile.
-    """
-    long_all = None
-    str_all = None
-    for df, table, dtypes in parts:
-        lf = _long_form(df, table, dtypes)
-        long_all = lf if long_all is None else long_all.unionByName(lf)
-        if any(k in ("string", "date") for k in dtypes.values()):
-            sf_ = _long_form(df, table, dtypes, strings_only=True)
-            str_all = sf_ if str_all is None else str_all.unionByName(sf_)
-
-    keys = ["table_name", "column_name", "dtype"]
-    a = long_all.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("total_count"),
-        F.sum("isnull").alias("null_count"),
-        F.countDistinct("kval").alias("distinct_count"),
-        F.min("dval").alias("min_num"),
-        F.max("dval").alias("max_num"),
-        F.sum(F.col("dval").cast("decimal(22,6)")).cast("double").alias("__sum"),
-        # DECIMAL(38,8) (not 30,8): the sum-of-squares of a column
-        # holding honest-but-extreme values (1e12 order totals in the
-        # adversarial corpus) needs 25+ integer digits per ROW; 38,8
-        # profiles any |v| <= 1e15 with sum-of-squares <= 1e30
-        F.sum((F.col("dval") * F.col("dval")).cast("decimal(38,8)"))
-        .cast("double")
-        .alias("__sumsq"),
-    )
-    if str_all is not None:
-        b = str_all.groupBy("table_name", "column_name").agg(
-            F.min("sval").alias("min_str"), F.max("sval").alias("max_str")
-        )
-        a = a.join(F.broadcast(b), ["table_name", "column_name"], "left")
-    else:
-        a = a.withColumn("min_str", F.lit(None).cast("string")).withColumn(
-            "max_str", F.lit(None).cast("string")
-        )
-    n = F.col("total_count") - F.col("null_count")
-    mean = F.when(n > 0, F.col("__sum") / n)
-    # exact-decimal sample variance: (sumsq - sum^2/n) / (n-1)
-    var = F.when(
-        n > 1, (F.col("__sumsq") - F.col("__sum") * F.col("__sum") / n) / (n - 1)
-    )
-    stddev = F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0))))
-    numeric = F.col("dtype").isin(*sorted(NUMERIC_KINDS))
-    # metadata GRID left-join (wave 7): empty tables still profile —
-    # one row per declared column, counts 0, value stats NULL (the
-    # melt-groupBy alone has no groups to emit; see _profile_sql)
-    spark_s = parts[0][0].sparkSession
-    grid = spark_s.createDataFrame(
-        [(t, c, k) for _df, t, dt in parts for c, k in dt.items()],
-        "table_name string, column_name string, dtype string",
-    )
-    a = F.broadcast(grid).join(a.drop("dtype"), keys[:2], "left")
-    a = (
-        a.withColumn("total_count", F.coalesce("total_count", F.lit(0)))
-        .withColumn("null_count", F.coalesce("null_count", F.lit(0)))
-        .withColumn(
-            "distinct_count", F.coalesce("distinct_count", F.lit(0))
-        )
-    )
-    return a.select(
-        *keys,
-        F.col("total_count").cast("bigint").alias("total_count"),
-        F.col("null_count").cast("bigint").alias("null_count"),
-        F.col("distinct_count").cast("bigint").alias("distinct_count"),
-        "min_num",
-        "max_num",
-        # derived stats round through DECIMAL(28,6): at sf0.1 the
-        # DECIMAL(30,8)->DOUBLE cast of the big sum-of-squares differs
-        # by 1 ulp between engines (DuckDB's int128 conversion), which
-        # sqrt propagates into the 12th digit of stddev. micro-rounding
-        # absorbs it (same libm-margin contract as the text scores).
-        F.when(numeric, mean.cast("decimal(28,6)").cast("double")).alias(
-            "avg_num"
-        ),
-        F.when(
-            numeric, stddev.cast("decimal(28,6)").cast("double")
-        ).alias("stddev_num"),
-        "min_str",
-        "max_str",
-    )
-
-
 def _profile_sql(parts: list[tuple[str, str, dict[str, str]]]) -> str:
     """One SQL statement for the whole multi-table profile.
 
-    Exact mirror of ``_column_stats`` (same melt structs, same
-    aggregate expressions, same min/max-string side pass and broadcast
-    join) — but as one statement so Catalyst analyzes the tree ONCE.
-    ``parts`` is a list of (view_name, table_label, dtypes).
+    Every table melts to one row per (source row, profiled column):
+    ``dval`` (numeric value as double), ``sval`` (the string/date
+    display form used for min/max_str), ``kval`` (an injective string
+    key, so COUNT(DISTINCT kval) == COUNT(DISTINCT col)) and a null
+    flag. Pass A (counts, distinct, numeric stats) hash-aggregates the
+    long form of every table at once; pass B (string/date min-max)
+    runs its own strings-only long pass, so its immutable agg buffers
+    cannot downgrade pass A to SortAggregate, and broadcast-joins in.
+    One statement, so Catalyst analyzes the tree ONCE. ``parts`` is a
+    list of (view_name, table_label, dtypes).
     """
 
     def cell_struct(c: str, kind: str) -> str:
@@ -329,27 +208,6 @@ class SimpleDataProfiler:
         self.spark = spark
         self.settings = settings or {}
 
-    def profile_table(
-        self, df: DataFrame, table: str, dtypes: dict[str, str] | None = None
-    ) -> DataFrame:
-        if dtypes is None:
-            dtypes = {}
-            for c, t in df.dtypes:
-                if t in ("double", "float"):
-                    dtypes[c] = "float"
-                elif t in ("bigint", "int", "smallint", "tinyint"):
-                    dtypes[c] = "int"
-                elif t == "string":
-                    dtypes[c] = "string"
-                elif t.startswith(("date", "timestamp")):
-                    dtypes[c] = "date"
-                else:
-                    continue  # arrays/maps: skipped from scalar stats
-        sample = self.settings.get("sample_size")
-        if sample:
-            df = _hash_sample(df, int(sample))
-        return _column_stats([(df, table, dtypes)])
-
     def profile_multiple_tables(
         self, tables: list[str], sf_dir: str, fecha: str | None = None,
         date_column: str | None = None,
@@ -443,8 +301,9 @@ def profile_histogram(
 
 
 # ---------------------------------------------------------------------------
-# Oracle twin for the profile demo (exact mirror of _column_stats over
-# TABLE_DTYPES), generated per table so Spark/DuckDB stay in lockstep.
+# Oracle twin for the profile demo (per-column scalar aggregates with
+# the same expressions as _profile_sql over TABLE_DTYPES), generated per
+# table so Spark/DuckDB stay in lockstep.
 # ---------------------------------------------------------------------------
 
 def _oracle_table_profile(table: str) -> str:

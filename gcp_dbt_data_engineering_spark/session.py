@@ -75,34 +75,6 @@ HADOOP_CONF: dict[str, str] = {
 }
 
 
-def _env_conf() -> dict[str, str]:
-    """Ad-hoc conf overrides from ``SPARK_GRAFT_EXTRA_CONF``.
-
-    Format: ``key=value;key=value``. Lets one-off sweeps retune the
-    engine without touching call sites — e.g. the sf100 rows-only gate
-    runs with ``spark.io.compression.codec=zstd`` (the int64-pair
-    shuffles of the shingle relation compress ~2x better than lz4,
-    which is the difference between fitting the sweep on this box's
-    disk and ENOSPC) and ``spark.speculation=false`` (a speculative
-    copy of a long shuffle-map task transiently doubles its shuffle
-    file footprint). Overrides win over RUNTIME_CONF; an explicit
-    ``extra_conf`` argument wins over both.
-    """
-    out: dict[str, str] = {}
-    for item in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        k, sep, v = item.partition("=")
-        if sep and k.strip():
-            out[k.strip()] = v.strip()
-        elif item.strip():
-            # a malformed item silently dropped = a sweep running hours
-            # on the wrong codec before anyone notices; say so up front
-            print(
-                f"WARNING: SPARK_GRAFT_EXTRA_CONF item {item!r} has no "
-                "'=', ignored"
-            )
-    return out
-
-
 def tune(
     spark: SparkSession, overrides: dict[str, str] | None = None
 ) -> SparkSession:
@@ -111,9 +83,9 @@ def tune(
     ``overrides`` (highest precedence) lets get_spark re-apply its
     caller's explicit ``extra_conf`` at runtime too — without it, this
     post-build pass would clobber runtime-settable extra_conf keys
-    with the env/RUNTIME_CONF value.
+    with the RUNTIME_CONF value.
     """
-    for k, v in {**RUNTIME_CONF, **_env_conf(), **(overrides or {})}.items():
+    for k, v in {**RUNTIME_CONF, **(overrides or {})}.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -253,6 +225,6 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in {**RUNTIME_CONF, **_env_conf(), **(extra_conf or {})}.items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate(), overrides=extra_conf)

@@ -37,9 +37,3 @@ def nasty_corpus() -> str:
         )
     return corpus
 
-
-def job_ids(spark) -> set[int]:
-    """Ids of every job the status store has recorded so far."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return set(sc.statusTracker().getJobIdsForGroup(None))

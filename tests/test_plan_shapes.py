@@ -233,46 +233,19 @@ def test_dsir_topk_is_takeordered(spark):
     assert "TakeOrderedAndProject" in p
 
 
-def test_env_conf_override_parses_and_wins(monkeypatch):
-    """SPARK_GRAFT_EXTRA_CONF tunes one-off sweeps (e.g. zstd shuffle
-    compression for the sf100 disk-bound gate) without code changes."""
-    from gcp_dbt_data_engineering_spark import session as s
-
-    monkeypatch.setenv(
-        "SPARK_GRAFT_EXTRA_CONF",
-        "spark.io.compression.codec=zstd; spark.speculation=false;;bad",
-    )
-    env = s._env_conf()
-    assert env == {
-        "spark.io.compression.codec": "zstd",
-        "spark.speculation": "false",
-    }
-    # overrides win over RUNTIME_CONF in the merged builder dict
-    merged = {**s.RUNTIME_CONF, **env}
-    assert merged["spark.speculation"] == "false"
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF")
-    assert s._env_conf() == {}
-
-
-def test_tune_overrides_beat_env_conf(spark, monkeypatch):
+def test_tune_overrides_beat_runtime_conf(spark):
     """An explicit extra_conf must survive tune()'s post-build runtime
-    pass — the env hook may not clobber a caller's argument."""
+    pass: a caller's argument wins over RUNTIME_CONF, and a later plain
+    tune() restores the engine value. (A core conf such as
+    spark.speculation cannot be set on a live session at all; get_spark
+    passes extra_conf to the builder for those.)"""
     from gcp_dbt_data_engineering_spark import session as s
 
-    orig = spark.conf.get("spark.sql.session.timeZone")
+    key = "spark.sql.session.timeZone"
+    assert s.RUNTIME_CONF[key] == "UTC"
     try:
-        monkeypatch.setenv(
-            "SPARK_GRAFT_EXTRA_CONF",
-            "spark.sql.session.timeZone=America/New_York",
-        )
-        s.tune(spark, overrides={"spark.sql.session.timeZone": "UTC"})
-        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-        # without overrides the env value applies (the sweep knob works)
-        s.tune(spark)
-        assert (
-            spark.conf.get("spark.sql.session.timeZone")
-            == "America/New_York"
-        )
+        s.tune(spark, overrides={key: "America/New_York"})
+        assert spark.conf.get(key) == "America/New_York"
     finally:
-        monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
-        spark.conf.set("spark.sql.session.timeZone", orig)
+        s.tune(spark)
+    assert spark.conf.get(key) == "UTC"

@@ -27,8 +27,9 @@ from gcp_dbt_data_engineering_spark.operators.semdedup import (
 )
 from gcp_dbt_data_engineering_spark.operators.similarity import _quantized
 from gcp_dbt_data_engineering_spark.session import clear_caches
+from gcp_dbt_data_engineering_spark.status import StatusReader
 
-from .conftest import SF_SMOKE, job_ids
+from .conftest import SF_SMOKE
 
 
 def _ground(spark):
@@ -81,10 +82,10 @@ def test_semdedup_no_cartesian(spark):
 
 def _jobs_of_call(spark) -> tuple[int, DataFrame]:
     """Spark jobs launched by one builder call plus its collect()."""
-    before = job_ids(spark)
+    reader = StatusReader(spark)
     df = dedup_semantic(spark, SF_SMOKE)
     df.collect()
-    return len(job_ids(spark) - before), df
+    return reader.read()["jobs"], df
 
 
 def test_semdedup_fits_kmeans_once(spark):

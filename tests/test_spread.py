@@ -13,8 +13,8 @@ import pytest
 from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.sources import load_table, spread
 from gcp_dbt_data_engineering_spark.sources import registry as reg
+from gcp_dbt_data_engineering_spark.status import StatusReader
 
-from .conftest import job_ids
 
 ART = os.path.join(ARTIFACTS_DIR, "spread_test")
 
@@ -184,12 +184,12 @@ def _parts(staged: str) -> list[str]:
 
 def test_staging_launches_no_spark_job(spark, stage_dir):
     sf = "/root/testdata/sf0.1"
-    before = job_ids(spark)
+    reader = StatusReader(spark)
     staged = reg._stage_if_unsplittable(
         spark, reg.table_path(sf, "orders"), "orders", sf
     )
     assert os.path.exists(os.path.join(staged, "_SUCCESS"))
-    assert job_ids(spark) - before == set()
+    assert reader.read()["jobs"] == 0
 
 
 def test_staged_parts_concatenate_to_the_raw_table(spark, stage_dir):
