@@ -16,21 +16,25 @@ difference between "works at sf0.1" and "works at 100 TB":
   the reference's daily-slice idiom into a partition-pruned scan: one
   day's DQ job reads one directory, not the table.
 
-Both specs materialize the layout under ``.artifacts/`` on first use
-(keyed by scale-factor dir, skipped when already present) and then run
-the query against the laid-out data; the oracle runs the same query on
-the raw table, proving layout changes *cost*, never *semantics*.
+Each spec materializes its layout under ``.artifacts/layout`` on first
+use (path layouts through ``sources.registry.stage_artifact``: keyed on
+the source file's version, published atomically, reaped when stale)
+and then runs the query against the laid-out data; the oracle runs the
+same query on the raw table, proving layout changes *cost*, never
+*semantics*.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import ARTIFACTS_DIR
 from ..sources import load_table
+from ..sources.registry import is_stale, source_key, stage_artifact
 from .models import _write_schema_stub, read_table
 from .spec import QuerySpec, money_sum, sql_money_sum
 
@@ -39,121 +43,25 @@ ART = os.path.join(ARTIFACTS_DIR, "layout")
 N_BUCKETS = 8
 
 
-def _sf_tag(sf_dir: str, table: str | None = None) -> str:
-    """Artifact key for a derived layout.
-
-    With ``table``, the key embeds the SOURCE file's mtime+size (the
-    registry's staging discipline, sources/registry.py): a corpus
-    regenerated in place gets a NEW key, so derived layouts can never
-    serve stale data. The r8 adversarial-corpus rewrite caught exactly
-    this — the sf-tag-only key kept serving the pre-rewrite
-    fragmented/ORC/z-order tables (CORRECTNESS_nasty first run:
-    compact_small_files counted 15000 of 15005 rows).
-    """
-    base = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if table is None:
-        return base
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{base}-{st.st_mtime_ns}-{st.st_size}"
-
-
-def _have(path: str) -> bool:
-    # _SUCCESS is the committer's completion marker; a bare directory
-    # may be a partial write and must be redone.
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _prune_stale(prefix: str, keep: str, ttl_s: float = 3600.0) -> None:
-    """Age-gated removal of older-keyed layouts with the same prefix
-    (same rule and rationale as sources/registry.py: a concurrent
-    session's lazy plans may still read a layout it staged recently)."""
-    import shutil
-    import time
-
-    d = os.path.dirname(prefix)
-    base = os.path.basename(prefix)
-    if not os.path.isdir(d):
-        return
-    for name in os.listdir(d):
-        full = os.path.join(d, name)
-        if not name.startswith(base) or full == keep:
-            continue
-        try:
-            if time.time() - os.stat(full).st_mtime > ttl_s:
-                shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            continue
-
-
-def _prune_stale_catalog(
-    spark: SparkSession, prefix: str, keep: str, ttl_s: float = 3600.0
-) -> None:
-    """Catalog twin of ``_prune_stale`` (ADVICE r8): the bucketed
-    tables embed the source mtime+size in their names, so every corpus
+def _prune_stale_catalog(spark: SparkSession, prefix: str, keep: str) -> None:
+    """Catalog twin of ``stage_artifact``'s reap (ADVICE r8): the
+    bucketed tables embed the source key in their names, so every corpus
     rewrite mints a new name — without this, older-keyed
     ``b_lineitem_*``/``b_orders_*`` tables and their warehouse data
-    accumulate forever. Same age gate as the path-based layouts: a
-    concurrent session's lazy plans may still read a table it
-    registered recently, so only entries past the TTL are dropped."""
-    import shutil
-    import time
-
+    accumulate forever. Same age gate (``is_stale``): a concurrent
+    session's lazy plans may still read a table it registered recently.
+    A ``saveAsTable`` cannot be published by a tmp rename, so these
+    tables are not staged through ``stage_artifact``."""
     for tbl in spark.catalog.listTables():
-        name = tbl.name
-        if not name.startswith(prefix) or name == keep:
-            continue
-        path = f"{ART}/{name}"
-        try:
-            if (
-                os.path.isdir(path)
-                and time.time() - os.stat(path).st_mtime <= ttl_s
-            ):
-                continue
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
+        path = f"{ART}/{tbl.name}"
+        if tbl.name.startswith(prefix) and tbl.name != keep and is_stale(path):
+            spark.sql(f"DROP TABLE IF EXISTS {tbl.name}")
             shutil.rmtree(path, ignore_errors=True)
-        except OSError:
-            continue
 
 
 # ---------------------------------------------------------------------------
 # bucketed co-located fact⋈fact join
 # ---------------------------------------------------------------------------
-
-def _stage(path: str, write) -> None:
-    """Concurrent-safe staging: write to a pid-suffixed tmp dir, then
-    rename into place (the registry's discipline). Two sessions racing
-    on the same missing layout each build their own tmp; the loser of
-    the rename just drops its copy — no torn _temporary dirs, and
-    readers only ever see a complete (_SUCCESS-marked) directory.
-
-    A rename failure is only "lost the race" when the occupant is
-    COMPLETE. If ``path`` exists but lacks ``_SUCCESS`` (a torn
-    directory from a pre-staging-era crash), the rename would fail
-    against it on every run and the spec would permanently read the
-    torn layout (ADVICE r8) — so on failure we check the occupant,
-    remove it if torn, and retry the rename once.
-    """
-    import shutil
-
-    tmp = f"{path}.tmp-{os.getpid()}"
-    write(tmp)
-    try:
-        os.rename(tmp, path)
-        return
-    except OSError:
-        pass
-    if _have(path):  # complete occupant: we lost a legitimate race
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    # torn occupant: evict and retry once; if another session slips in
-    # between the rmtree and the rename with a COMPLETE copy, dropping
-    # ours is again the correct race outcome.
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize lineitem/orders bucketed+sorted by order key.
@@ -163,17 +71,12 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     distribution; a plain parquet path write cannot carry that
     metadata, which is why this op goes through the session catalog.
     """
-    li_name = f"b_lineitem_{_sf_tag(sf_dir, 'lineitem')}".replace(
-        ".", "_").replace("-", "_")
-    o_name = f"b_orders_{_sf_tag(sf_dir, 'orders')}".replace(
-        ".", "_").replace("-", "_")
-    _prune_stale_catalog(spark, "b_lineitem_", li_name)
-    _prune_stale_catalog(spark, "b_orders_", o_name)
-    for name, src, key in (
-        (li_name, "lineitem", "l_orderkey"),
-        (o_name, "orders", "o_orderkey"),
-    ):
-        path = f"{ART}/{name}"
+    names = []
+    for src, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+        name = f"b_{src}_{source_key(sf_dir, src)}"
+        name = name.replace(".", "_").replace("-", "_")
+        _prune_stale_catalog(spark, f"b_{src}_", name)
+        names.append(name)
         if not spark.catalog.tableExists(name):
             # always (re)write on a fresh session: the bucket spec
             # lives in catalog metadata, and registering a bare path
@@ -184,11 +87,11 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 load_table(spark, sf_dir, src)
                 .write.bucketBy(N_BUCKETS, key)
                 .sortBy(key)
-                .option("path", path)
+                .option("path", f"{ART}/{name}")
                 .mode("overwrite")
                 .saveAsTable(name)
             )
-    return li_name, o_name
+    return names[0], names[1]
 
 
 def bucketed_orders_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,22 +132,16 @@ GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    path = (f"{ART}/events_by_fecha_"
-            f"{_sf_tag(sf_dir, 'events').replace('.', '_')}")
-    _prune_stale(f"{ART}/events_by_fecha_", path)
-    if not _have(path):
+    def write(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "fecha", F.col("ts").cast("date")
         )
+        ev.write.partitionBy("fecha").mode("overwrite").parquet(tmp)
+        # a zero-event corpus writes no partition dirs; the stub
+        # keeps the layout readable (see models._write_schema_stub)
+        _write_schema_stub(tmp, ev)
 
-        def _write(t):
-            ev.write.partitionBy("fecha").mode("overwrite").parquet(t)
-            # a zero-event corpus writes no partition dirs; the stub
-            # keeps the layout readable (see models._write_schema_stub)
-            _write_schema_stub(t, ev)
-
-        _stage(path, _write)
-    return path
+    return stage_artifact(ART, "events_by_fecha", sf_dir, "events", write)
 
 
 def events_fecha_partitioned_slice(
@@ -299,15 +196,12 @@ def orders_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import load_source, write_sink
 
-    path = f"{ART}/orders_orc_{_sf_tag(sf_dir, 'orders').replace('.', '_')}"
-    _prune_stale(f"{ART}/orders_orc_", path)
-    if not _have(path):
-        _stage(
-            path,
-            lambda t: write_sink(
-                load_table(spark, sf_dir, "orders"), t, fmt="orc"
-            ),
-        )
+    path = stage_artifact(
+        ART, "orders_orc", sf_dir, "orders",
+        lambda t: write_sink(
+            load_table(spark, sf_dir, "orders"), t, fmt="orc"
+        ),
+    )
     od = load_source(spark, path, fmt="orc").filter(
         F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz")
     )
@@ -354,24 +248,19 @@ _ZY = "CAST(CAST(hour(ts) AS BIGINT) * 60 + CAST(minute(ts) AS BIGINT) AS BIGINT
 
 
 def _zorder_events(spark: SparkSession, sf_dir: str) -> str:
-    path = f"{ART}/events_zorder_{_sf_tag(sf_dir, 'events').replace('.', '_')}"
-    _prune_stale(f"{ART}/events_zorder_", path)
-    if not _have(path):
-        ev = load_table(spark, sf_dir, "events").selectExpr(
-            "*", f"{_z_expr(_ZX, _ZY)} AS z"
-        )
-        # range-partition + sort on z = Delta's OPTIMIZE ZORDER BY:
-        # each output file covers a compact z-range, hence a bounded
-        # rectangle in (user, minute) space, so per-file min/max stats
-        # prune on BOTH dimensions at scan time.
-        _stage(
-            path,
-            lambda t: ev.repartitionByRange(8, F.col("z"))
-            .sortWithinPartitions("z")
-            .write.mode("overwrite")
-            .parquet(t),
-        )
-    return path
+    # range-partition + sort on z = Delta's OPTIMIZE ZORDER BY: each
+    # output file covers a compact z-range, hence a bounded rectangle in
+    # (user, minute) space, so per-file min/max stats prune on BOTH
+    # dimensions at scan time.
+    return stage_artifact(
+        ART, "events_zorder", sf_dir, "events",
+        lambda t: load_table(spark, sf_dir, "events")
+        .selectExpr("*", f"{_z_expr(_ZX, _ZY)} AS z")
+        .repartitionByRange(8, F.col("z"))
+        .sortWithinPartitions("z")
+        .write.mode("overwrite")
+        .parquet(t),
+    )
 
 
 def events_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,16 +337,13 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed FROM THE COMPACTED FILES, so any row lost or doubled by
     the rewrite breaks the oracle match.
     """
-    frag = f"{ART}/{_sf_tag(sf_dir, 'orders')}_fragmented_orders"
-    _prune_stale(f"{ART}/{_sf_tag(sf_dir)}-", frag)
-    if not _have(frag):
-        _stage(
-            frag,
-            lambda t: load_table(spark, sf_dir, "orders")
-            .repartition(COMPACT_SHARDS)
-            .write.mode("overwrite")
-            .parquet(t),
-        )
+    frag = stage_artifact(
+        ART, "fragmented_orders", sf_dir, "orders",
+        lambda t: load_table(spark, sf_dir, "orders")
+        .repartition(COMPACT_SHARDS)
+        .write.mode("overwrite")
+        .parquet(t),
+    )
     df = spark.read.parquet(frag)
     # sizing input from parquet FOOTERS, not a count() job: num_rows is
     # exact committed metadata (the registry's collect_table_stats
@@ -479,13 +365,11 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:  # non-local path (s3a://, hdfs://): one scan job
         n = df.count()
     target = max(1, -(-n // COMPACT_ROWS_PER_FILE))
-    compacted = (
-        f"{ART}/{_sf_tag(sf_dir, 'orders')}_compacted_orders"
-        f"-{os.getpid()}"
-    )
-    # per-PID scratch dir read back immediately below — nothing gates
-    # on its _SUCCESS marker (unlike the _stage()d artifacts), so skip
-    # the marker's job-commit write (~25 ms)
+    # per-PID scratch dir read back immediately below. Named after the
+    # fragmented artifact, so stage_artifact reaps it once stale; nothing
+    # gates on its _SUCCESS marker, so skip the marker's job-commit
+    # write (~25 ms)
+    compacted = f"{frag}_compacted_orders-{os.getpid()}"
     df.repartition(target).write.option(
         "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
     ).mode("overwrite").parquet(compacted)

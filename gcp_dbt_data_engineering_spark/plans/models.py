@@ -8,8 +8,11 @@ Reference surface (SURVEY.md §3 E1):
 - ``{{ ref('model') }}`` resolution creating DAG edges
   (``models/example/my_second_dbt_model.sql:5``),
 - ``models/example/schema.yml`` — ``unique`` / ``not_null`` column
-  tests, which are the same operators as the DQ engine's uniqueness /
-  completeness families (SURVEY.md §2.9) and route through it here.
+  tests with dbt's semantics (NULLs exempt from ``unique``, only NULL is
+  missing for ``not_null``), answered by one grouped aggregate per
+  column (:func:`_unique_not_null_sql`). They do not go through the DQ
+  engine: its uniqueness check counts NULL keys as a group and its
+  completeness check treats ``''`` as missing.
 
 Spark-native execution: render the template (regex mini-Jinja — the
 reference uses only ``config``/``ref``), topo-sort on ref edges, then
@@ -270,8 +273,8 @@ _SCHEMA_STUB = "_graft_schema.json"
 #: per-write option dropping the _SUCCESS marker where nothing reads
 #: it (plain table / seed / incremental-partition writes) — the
 #: marker write is ~25 ms of job-commit time per write here. The
-#: staged-swap writes (merge/snapshot staging, layout._stage) KEEP
-#: the marker: ``_recover_swap``/``_have`` gate promotion on it.
+#: staged-swap writes (merge/snapshot staging, registry.stage_artifact) KEEP
+#: the marker: ``_recover_swap``/``stage_artifact`` gate promotion on it.
 _NO_SUCCESS = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 
@@ -1616,16 +1619,8 @@ class ModelGraph:
                 # build pipeline).
                 alias = f"s{len(rels)}"
                 if "unique" in known:
-                    grouped = (
-                        f"SELECT {col} AS k, COUNT(*) AS cnt "
-                        f"FROM {name} GROUP BY {col}"
-                    )
                     rels.append(
-                        "(SELECT CAST(COUNT(CASE WHEN k IS NOT NULL"
-                        " AND cnt > 1 THEN 1 END) AS BIGINT) AS"
-                        " uniq_viol, CAST(COALESCE(SUM(CASE WHEN k IS"
-                        " NULL THEN cnt END), 0) AS BIGINT) AS"
-                        f" null_viol FROM ({grouped})) {alias}"
+                        f"({_unique_not_null_sql(name, col)}) {alias}"
                     )
                 else:
                     rels.append(
@@ -1750,7 +1745,7 @@ SELECT 'my_second_dbt_model' AS model, CAST(id AS BIGINT) AS id FROM my_second_d
 
 # ---------------------------------------------------------------------------
 # dbt generic schema tests (`unique`, `not_null` — models/example/schema.yml)
-# routed through the DQ engine: same operators, different front-end.
+# with dbt's semantics, the same SQL ModelGraph._run_schema_tests runs.
 # my_first_dbt_model.id intentionally violates not_null (the starter's
 # built-in negative test, SURVEY.md §5).
 # ---------------------------------------------------------------------------
@@ -1760,6 +1755,23 @@ SCHEMA_TESTS: dict[str, dict[str, list[str]]] = {
     "my_first_dbt_model": {"id": ["unique", "not_null"]},
     "my_second_dbt_model": {"id": ["unique", "not_null"]},
 }
+
+
+def _unique_not_null_sql(model: str, col: str) -> str:
+    """One aggregate answering a column's ``unique`` and ``not_null``.
+
+    Groups by the column once: ``uniq_viol`` counts the non-NULL groups
+    with more than one row, ``null_viol`` is the NULL group's row count.
+    """
+    grouped = (
+        f"SELECT {col} AS k, COUNT(*) AS cnt FROM {model} GROUP BY {col}"
+    )
+    return (
+        "SELECT CAST(COUNT(CASE WHEN k IS NOT NULL AND "
+        "cnt > 1 THEN 1 END) AS BIGINT) AS uniq_viol, "
+        "CAST(COALESCE(SUM(CASE WHEN k IS NULL THEN cnt "
+        f"END), 0) AS BIGINT) AS null_viol FROM ({grouped})"
+    )
 
 
 def dbt_schema_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1772,60 +1784,25 @@ def dbt_schema_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for model, cols in SCHEMA_TESTS.items():
         for col, tests in cols.items():
-            if set(tests) == {"unique", "not_null"}:
-                # ONE two-level aggregate answers BOTH tests of a
-                # column (r12, guide §2.4): group by the column once —
-                # unique violations are the non-NULL groups with
-                # count > 1, not_null violations are the NULL group's
-                # row count — then stack() the single agg row into the
-                # two test rows. The r11 form still planned one scalar
-                # subquery (= one job + its exchange jobs) per test.
-                grouped = (
-                    f"SELECT {col} AS k, COUNT(*) AS cnt FROM {model} "
-                    f"GROUP BY {col}"
-                )
-                agg = (
-                    "SELECT CAST(COUNT(CASE WHEN k IS NOT NULL AND "
-                    "cnt > 1 THEN 1 END) AS BIGINT) AS uniq_viol, "
-                    "CAST(COALESCE(SUM(CASE WHEN k IS NULL THEN cnt "
-                    f"END), 0) AS BIGINT) AS null_viol FROM ({grouped})"
-                )
-                pairs = ", ".join(
-                    f"'{t}', "
-                    + ("uniq_viol" if t == "unique" else "null_viol")
-                    for t in tests
-                )
-                parts.append(spark.sql(
-                    f"SELECT '{model}' AS model, '{col}' AS column_name,"
-                    " test_name, failed_records, CASE WHEN"
-                    " failed_records = 0 THEN 'PASS' ELSE 'FAIL' END"
-                    f" AS status FROM (SELECT stack({len(tests)},"
-                    f" {pairs}) AS (test_name, failed_records)"
-                    f" FROM ({agg}))"
-                ))
-                continue
-            for test in tests:
-                if test == "unique":
-                    sql = (
-                        f"SELECT COUNT(*) FROM (SELECT {col} FROM {model} "
-                        f"WHERE {col} IS NOT NULL GROUP BY {col} "
-                        f"HAVING COUNT(*) > 1)"
-                    )
-                elif test == "not_null":
-                    sql = f"SELECT COUNT(*) FROM {model} WHERE {col} IS NULL"
-                else:
-                    raise ValueError(f"unknown schema test {test!r}")
-                # evaluate the scalar count subquery ONCE: referencing
-                # `(sql)` in both the failed_records projection and the
-                # status CASE ran every count twice (guide §2.4)
-                parts.append(spark.sql(
-                    f"SELECT model, column_name, test_name,"
-                    f" failed_records, CASE WHEN failed_records = 0"
-                    f" THEN 'PASS' ELSE 'FAIL' END AS status FROM"
-                    f" (SELECT '{model}' AS model, '{col}' AS"
-                    f" column_name, '{test}' AS test_name,"
-                    f" CAST(({sql}) AS BIGINT) AS failed_records)"
-                ))
+            unknown = set(tests) - {"unique", "not_null"}
+            if unknown:
+                raise ValueError(f"unknown schema tests {sorted(unknown)}")
+            # ONE two-level aggregate answers BOTH tests of a column
+            # (r12, guide §2.4), then stack() turns its single row into
+            # one row per test. The r11 form planned one scalar
+            # subquery (= one job + its exchange jobs) per test.
+            pairs = ", ".join(
+                f"'{t}', " + ("uniq_viol" if t == "unique" else "null_viol")
+                for t in tests
+            )
+            parts.append(spark.sql(
+                f"SELECT '{model}' AS model, '{col}' AS column_name,"
+                " test_name, failed_records, CASE WHEN"
+                " failed_records = 0 THEN 'PASS' ELSE 'FAIL' END"
+                f" AS status FROM (SELECT stack({len(tests)},"
+                f" {pairs}) AS (test_name, failed_records)"
+                f" FROM ({_unique_not_null_sql(model, col)}))"
+            ))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

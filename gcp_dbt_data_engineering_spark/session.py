@@ -16,7 +16,9 @@ the same code runs on local[*] for tests and on a real cluster:
 
 ``tune(spark)`` applies the runtime-settable subset to an *existing*
 session (the driver harness hands us one), ``get_spark`` builds a fresh
-tuned local session for tests/bench.
+tuned local session for tests/bench. A session the driver owns never
+gets the builder-only confs (``BUILDER_CONF``: static and core confs,
+which only a session build can set).
 """
 
 from __future__ import annotations
@@ -39,23 +41,29 @@ RUNTIME_CONF: dict[str, str] = {
     # bigint nanoseconds and the registry rebuilds an events timestamp.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Partial (map-side) aggregation and codegen are defaults; pushdown of
+    # parquet filters/aggregates likewise. We assert them in tests instead
+    # of re-setting here.
+}
+
+# Confs a live session cannot change (static SQL confs and core confs):
+# get_spark sets them on the builder, and tune never tries.
+BUILDER_CONF: dict[str, str] = {
     # ~120 specs x several codegen units each overflow the default
     # 100-entry generated-class cache, so every bench pass re-Janino-
     # compiles everything; a long-lived production driver wants the
     # same headroom.
     "spark.sql.codegen.cache.maxEntries": "4096",
-    # This sandbox shows rare multi-10s single-task freezes (scheduler-level,
-    # not compute). Aggressive speculation re-launches a straggler copy and
-    # takes the first finisher — near-free on healthy runs, bounds the damage
-    # on a stalled one. Same posture you'd want on a 1000-executor cluster
-    # with occasional bad nodes.
+    # Rare multi-10s single-task freezes (scheduler-level, not compute)
+    # were seen on the development host. Aggressive speculation
+    # re-launches a straggler copy and takes the first finisher —
+    # near-free on healthy runs, bounds the damage on a stalled one.
+    # Same posture you'd want on a 1000-executor cluster with
+    # occasional bad nodes.
     "spark.speculation": "true",
     "spark.speculation.interval": "1s",
     "spark.speculation.multiplier": "4",
     "spark.speculation.quantile": "0.75",
-    # Partial (map-side) aggregation and codegen are defaults; pushdown of
-    # parquet filters/aggregates likewise. We assert them in tests instead
-    # of re-setting here.
 }
 
 #: Write-path Hadoop confs (applied to the live hadoopConfiguration —
@@ -83,15 +91,11 @@ def tune(
     ``overrides`` (highest precedence) lets get_spark re-apply its
     caller's explicit ``extra_conf`` at runtime too — without it, this
     post-build pass would clobber runtime-settable extra_conf keys
-    with the RUNTIME_CONF value.
+    with the RUNTIME_CONF value. A conf the live session cannot change
+    raises, as ``spark.conf.set`` does.
     """
     for k, v in {**RUNTIME_CONF, **(overrides or {})}.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Non-runtime conf on this build — fine for confs that only
-            # matter at session-build time (get_spark sets them there).
-            pass
+        spark.conf.set(k, v)
     try:
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
         for k, v in HADOOP_CONF.items():
@@ -225,6 +229,11 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
+    for k, v in {**RUNTIME_CONF, **BUILDER_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    return tune(builder.getOrCreate(), overrides=extra_conf)
+    spark = builder.getOrCreate()
+    runtime = {
+        k: v for k, v in (extra_conf or {}).items()
+        if spark.conf.isModifiable(k)
+    }
+    return tune(spark, overrides=runtime)

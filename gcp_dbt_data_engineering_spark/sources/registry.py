@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,6 +106,88 @@ STAGE_MIN_BYTES = 400_000
 STAGE_DIR = os.path.join(ARTIFACTS_DIR, "staged")
 
 
+#: Age after which :func:`stage_artifact` reaps an older-keyed artifact
+#: or an unfinished tmp dir: a concurrent session's lazy plans may still
+#: read an artifact it staged moments ago (paths are cached per
+#: session), so only directories no live session plausibly points at go.
+STAGE_TTL_S = 3600.0
+
+
+def is_stale(path: str) -> bool:
+    """True when ``path`` is gone or was last modified over
+    :data:`STAGE_TTL_S` ago."""
+    try:
+        return time.time() - os.stat(path).st_mtime > STAGE_TTL_S
+    except OSError:
+        return True
+
+
+def source_key(sf_dir: str, table: str) -> str:
+    """``<sf>-<mtime_ns>-<size>``: the version of one source table file.
+
+    A corpus regenerated in place gets a new key, so an artifact
+    derived from the old file is never served for the new one.
+    """
+    st = os.stat(table_path(sf_dir, table))
+    sf = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    return f"{sf}-{st.st_mtime_ns}-{st.st_size}"
+
+
+def stage_artifact(
+    root: str,
+    kind: str,
+    sf_dir: str,
+    table: str,
+    write: Callable[[str], None],
+) -> str:
+    """Return ``<root>/<kind>@<source_key>``, built once by ``write(tmp)``.
+
+    The engine's one protocol for a table derived on disk from a source
+    table (the split layouts below, the ORC, partitioned, z-ordered and
+    fragmented copies of plans/layout.py):
+
+    - **skip**: a directory with a ``_SUCCESS`` marker is returned as is;
+    - **publish**: ``write`` fills ``<path>.tmp-<pid>`` and leaves a
+      ``_SUCCESS`` marker there; the tmp dir is renamed into place, so
+      readers only ever see a complete directory. A write that raises
+      removes its tmp dir. A rename that fails against a complete
+      occupant lost a race to another session, and our copy is dropped;
+      a torn occupant (no ``_SUCCESS``) is evicted and the rename
+      retried once;
+    - **reap**: every other entry named ``<kind>@<sf>-*`` (older keys of
+      the same kind and scale factor, any process's tmp dirs, scratch
+      dirs named after the artifact) older than :data:`STAGE_TTL_S` is
+      removed. Other scale factors' artifacts are never touched.
+    """
+    key = source_key(sf_dir, table)
+    prefix = f"{kind}@{key.rsplit('-', 2)[0]}-"  # any version of the source
+    path = os.path.join(root, f"{kind}@{key}")
+    for d in os.listdir(root) if os.path.isdir(root) else ():
+        full = os.path.join(root, d)
+        if d.startswith(prefix) and full != path and is_stale(full):
+            shutil.rmtree(full, ignore_errors=True)
+    done = os.path.join(path, "_SUCCESS")
+    if os.path.exists(done):
+        return path
+    tmp = f"{path}.tmp-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)  # a dead same-pid attempt
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    for retry in (False, True):
+        try:
+            os.rename(tmp, path)
+            return path
+        except OSError:
+            if retry or os.path.exists(done):
+                break
+            shutil.rmtree(path, ignore_errors=True)  # torn occupant
+    shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
 def _split_parquet(path: str, out_dir: str, n: int) -> None:
     """Write ``path`` back as ``n`` contiguous row slices under ``out_dir``.
 
@@ -160,64 +243,24 @@ def _stage_if_unsplittable(
     are staged. Multi-row-group lakes split at their row groups and are
     read raw, at any size.
 
-    Keyed by (mtime, size) of the source so a regenerated corpus
-    re-stages; written to a tmp dir + atomic rename so concurrent
-    sessions can race safely, and a failed rewrite removes its tmp dir
-    before re-raising; layout only — row *contents* are identical,
-    which every DuckDB oracle (reading the RAW file) re-proves on each
-    gate run.
+    Keying, atomic publication and cleanup are :func:`stage_artifact`'s;
+    layout only — row *contents* are identical, which every DuckDB
+    oracle (reading the RAW file) re-proves on each gate run.
     """
-    try:
-        st = os.stat(path)
-    except OSError:
-        return path
-    if st.st_size < STAGE_MIN_BYTES:
-        return path
     try:
         import pyarrow.parquet as pq
 
-        if pq.ParquetFile(path).metadata.num_row_groups > 1:
-            return path  # already splittable; read the raw file
+        if (
+            os.path.getsize(path) < STAGE_MIN_BYTES
+            or pq.ParquetFile(path).metadata.num_row_groups > 1
+        ):
+            return path  # small, or already splittable: read the raw file
     except Exception:
         return path
-    sftag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    tag = f"{name}@{sftag}-{st.st_mtime_ns}-{st.st_size}"
-    staged = os.path.join(STAGE_DIR, tag)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        n = min(16, spark.sparkContext.defaultParallelism)
-        tmp = f"{staged}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)  # a dead same-pid attempt
-        try:
-            _split_parquet(path, tmp, n)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        try:
-            os.rename(tmp, staged)
-        except OSError:  # another session won the race
-            shutil.rmtree(tmp, ignore_errors=True)
-        # prune layouts staged from older versions of THIS (table, sf)
-        # source (mtime/size key changed => the corpus was regenerated);
-        # other scale factors' layouts are distinct prefixes and live
-        # on. Age-gated: a concurrent session's lazy DataFrames may
-        # still reference a layout it staged moments ago (staged paths
-        # are cached per session), so only reap directories old enough
-        # that no live session plausibly still points at them.
-        prune_ttl_s = 3600.0
-        for d in os.listdir(STAGE_DIR):
-            if (
-                d.startswith(f"{name}@{sftag}-")
-                and d != tag
-                and ".tmp-" not in d
-            ):
-                full = os.path.join(STAGE_DIR, d)
-                try:
-                    age = time.time() - os.stat(full).st_mtime
-                except OSError:
-                    continue
-                if age > prune_ttl_s:
-                    shutil.rmtree(full, ignore_errors=True)
-    return staged
+    n = min(16, spark.sparkContext.defaultParallelism)
+    return stage_artifact(
+        STAGE_DIR, name, sf_dir, name, lambda tmp: _split_parquet(path, tmp, n)
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -249,6 +292,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return memo(spark, "table", path, build)
 
 
+#: File formats :func:`load_source` and :func:`write_sink` dispatch on
+#: (each is also the name of the DataFrameReader/Writer method).
+_FORMATS = ("parquet", "csv", "json", "orc")
+
+
 def load_source(
     spark: SparkSession,
     path: str,
@@ -262,21 +310,16 @@ def load_source(
     json (ingest-edge formats; header/inference defaulted on, but pass
     ``schema`` in production — inference scans the data twice).
     """
-    if fmt not in ("parquet", "csv", "json", "orc"):
+    if fmt not in _FORMATS:
         raise ValueError(f"unsupported source format: {fmt!r}")
     tune(spark)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     if fmt == "csv":
-        opts = {"header": "true", "inferSchema": "true" if schema is None else "false"}
-        opts.update(options)
-        return reader.options(**opts).csv(path)
-    if fmt == "json":
-        return reader.options(**options).json(path)
-    if fmt == "orc":
-        return reader.options(**options).orc(path)
-    return reader.options(**options).parquet(path)
+        infer = "true" if schema is None else "false"
+        options = {"header": "true", "inferSchema": infer, **options}
+    return getattr(reader.options(**options), fmt)(path)
 
 
 def write_sink(
@@ -291,19 +334,14 @@ def write_sink(
     makes the reference's daily ``fecha`` slices partition-pruned
     reads instead of full scans (SURVEY.md §1.1/§4).
     """
-    if fmt not in ("parquet", "csv", "json", "orc"):
+    if fmt not in _FORMATS:
         raise ValueError(f"unsupported sink format: {fmt!r}")
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if fmt == "csv":
-        writer.option("header", "true").csv(path)
-    elif fmt == "json":
-        writer.json(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    else:
-        writer.parquet(path)
+        writer = writer.option("header", "true")
+    getattr(writer, fmt)(path)
 
 
 #: Byte-size suffixes per Spark's JavaUtils.byteStringAsBytes (binary

@@ -40,6 +40,24 @@ SESSION_GAP = "INTERVAL 30 MINUTE"  # parses in both dialects
 WATERMARK = "2 hours"
 
 
+def _drain_to_memory(df: DataFrame, query_name: str, mode: str) -> DataFrame:
+    """Run a streaming plan to completion and return its result table.
+
+    One ``availableNow`` trigger drains everything the source holds into
+    the memory sink ``query_name`` (output mode ``mode``); the sink's
+    table is then read back as a batch DataFrame.
+    """
+    (
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(query_name)
+
+
 # ---------------------------------------------------------------------------
 # hourly tumbling windows (batch spec; the streaming plan's twin)
 # ---------------------------------------------------------------------------
@@ -257,15 +275,7 @@ def run_session_window_stream(
         .groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    query = (
-        per_sess.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(per_sess, query_name, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -297,15 +307,7 @@ def run_hourly_stream(
         spark, sf_dir, max_files_per_trigger
     ).where("ts IS NOT NULL")
     agg = _hourly_agg(stream.withWatermark("ts", WATERMARK), streaming=True)
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(agg, query_name, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -409,15 +411,7 @@ def run_user_totals_stream(
     out = _user_totals_plan(
         _event_stream(spark, sf_dir, max_files_per_trigger)
     )
-    query = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(out, query_name, "update")
 
 
 def run_user_totals_resumable(
@@ -632,20 +626,12 @@ def run_user_totals_tws(
                 timeMode="None",
             )
         )
-        query = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        return _drain_to_memory(out, query_name, "update")
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, prev)
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -748,15 +734,7 @@ def run_view_purchase_stream(
             < views["view_ts"] + F.expr(ATTRIBUTION_WINDOW)
         ),
     )
-    query = (
-        j.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(j, query_name, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -810,15 +788,7 @@ def run_minute_dedup_stream(
     deduped = stream.withWatermark("minute", WATERMARK).dropDuplicates(
         DEDUP_KEYS
     )
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(deduped, query_name, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -888,15 +858,7 @@ def run_hll_register_stream(
     from ..operators.sketch import hll_registers
 
     regs = hll_registers(_event_stream(spark, sf_dir), "user_id")
-    query = (
-        regs.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(regs, query_name, "complete")
 
 
 def run_countmin_stream(
@@ -918,15 +880,7 @@ def run_countmin_stream(
         .groupBy("row", "col")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    query = (
-        counters.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(counters, query_name, "complete")
 
 
 def run_hdr_bucket_stream(
@@ -947,15 +901,7 @@ def run_hdr_bucket_stream(
         "CAST(CAST(value AS DECIMAL(22,6)) * 100 AS BIGINT) AS v"
     )
     buckets = hdr_buckets(cents, "v")
-    query = (
-        buckets.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(buckets, query_name, "complete")
 
 
 def run_bloom_word_stream(
@@ -985,15 +931,7 @@ def run_bloom_word_stream(
         .groupBy("word")
         .agg(F.expr("bit_or(bit)").alias("bits"))
     )
-    query = (
-        words.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(words, query_name, "complete")
 
 
 def _cusum_update(key, pdfs, state):
@@ -1092,15 +1030,7 @@ def run_cusum_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(out, query_name, "update")
 
 
 SPECS: dict[str, QuerySpec] = {

@@ -637,23 +637,23 @@ def test_compact_small_files_oracle_and_layout(spark):
         COMPACT_ROWS_PER_FILE,
         COMPACT_SHARDS,
         SPECS as LSPECS,
-        _sf_tag,
     )
+    from gcp_dbt_data_engineering_spark.sources.registry import source_key
 
     spec = LSPECS["compact_small_files"]
     res = compare(spec.spark(spark, SF), spec.oracle, SF)
     assert res["match"], res
 
     # The r8 staleness fix (22bce61) keyed the layout dirs on the
-    # source's mtime+size (_sf_tag(sf, 'orders')) and e63fa4d made the
-    # compacted output per-PID; this glob kept the pre-r8 paths and
+    # source's mtime+size (source_key(sf, 'orders')) and e63fa4d made
+    # the compacted output per-PID; this glob kept the pre-r8 paths and
     # only stayed green while pre-r8 leftover dirs lingered under
     # .artifacts/ — a fresh checkout exposed it (r11 inherited-state
     # fix). The spec runs in THIS process, so its compacted dir
     # carries our pid.
-    tag = _sf_tag(SF, "orders")
-    comp_dir = f"{ART}/{tag}_compacted_orders-{os.getpid()}"
-    frag = glob.glob(f"{ART}/{tag}_fragmented_orders/*.parquet")
+    frag_dir = f"{ART}/fragmented_orders@{source_key(SF, 'orders')}"
+    comp_dir = f"{frag_dir}_compacted_orders-{os.getpid()}"
+    frag = glob.glob(f"{frag_dir}/*.parquet")
     comp = glob.glob(f"{comp_dir}/part-*.parquet")
     assert len(frag) == COMPACT_SHARDS
     n = spark.read.parquet(f"{SF}/orders.parquet").count()

@@ -233,12 +233,35 @@ def test_dsir_topk_is_takeordered(spark):
     assert "TakeOrderedAndProject" in p
 
 
+def test_runtime_conf_is_modifiable_and_builder_conf_is_not(spark):
+    """tune() sets only confs a live session can change; the static and
+    core confs live in BUILDER_CONF, which only get_spark applies."""
+    from gcp_dbt_data_engineering_spark import session as s
+
+    assert [k for k in s.RUNTIME_CONF if not spark.conf.isModifiable(k)] == []
+    assert [k for k in s.BUILDER_CONF if spark.conf.isModifiable(k)] == []
+    assert spark.conf.get("spark.speculation") == "true"
+
+
+def test_tune_raises_on_a_conf_it_cannot_set(spark):
+    """An override the live session cannot take fails loudly instead of
+    being dropped without a word."""
+    from pyspark.errors import AnalysisException
+
+    from gcp_dbt_data_engineering_spark import session as s
+
+    with pytest.raises(AnalysisException):
+        s.tune(spark, overrides={"spark.speculation": "false"})
+    assert spark.conf.get("spark.speculation") == "true"
+
+
 def test_tune_overrides_beat_runtime_conf(spark):
     """An explicit extra_conf must survive tune()'s post-build runtime
     pass: a caller's argument wins over RUNTIME_CONF, and a later plain
     tune() restores the engine value. (A core conf such as
-    spark.speculation cannot be set on a live session at all; get_spark
-    passes extra_conf to the builder for those.)"""
+    spark.speculation cannot be set on a live session at all: get_spark
+    passes extra_conf to the builder, and to tune() only the keys the
+    live session can modify.)"""
     from gcp_dbt_data_engineering_spark import session as s
 
     key = "spark.sql.session.timeZone"

@@ -296,3 +296,33 @@ def test_collect_table_stats_keys_on_tables(spark):
     stats = collect_table_stats(spark, sf)
     assert sorted(stats) == sorted(reg.TABLES) and len(stats) == 10
     assert stats["nation"]["rows"] > 0
+
+
+def test_staging_reaps_a_dead_writers_tmp_dir(spark, tmp_path, stage_dir):
+    """A tmp dir that another process left under STAGE_DIR (it died
+    before its rename) is removed once older than the TTL; a young
+    one may belong to a live writer and stays."""
+    import time
+
+    rows = 60_000
+    sf = str(tmp_path / "sfreap")
+    os.makedirs(sf)
+    path = reg.table_path(sf, "orders")
+    keys = [(i * 2_654_435_761) % (1 << 61) for i in range(rows)]
+    pq.write_table(
+        pa.table({"k": pa.array(keys, type=pa.int64())}),
+        path,
+        row_group_size=rows,
+    )
+    assert os.path.getsize(path) >= reg.STAGE_MIN_BYTES
+    os.makedirs(stage_dir)
+    dead = os.path.join(stage_dir, "orders@sfreap-1-1.tmp-999999")
+    live = os.path.join(stage_dir, "orders@sfreap-1-1.tmp-999998")
+    os.makedirs(dead)
+    os.makedirs(live)
+    then = time.time() - reg.STAGE_TTL_S - 60
+    os.utime(dead, (then, then))
+    staged = reg._stage_if_unsplittable(spark, path, "orders", sf)
+    assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+    assert not os.path.exists(dead)
+    assert os.path.exists(live)

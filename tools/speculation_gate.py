@@ -1,6 +1,6 @@
 """Speculative-execution determinism gate → SPECULATION_GATE.json.
 
-``spark.speculation`` is ON in the engine's default RUNTIME_CONF
+``spark.speculation`` is ON in the engine's BUILDER_CONF
 (session.py — a 1000-executor cluster always has stragglers), but no
 gate previously PROVED that a duplicate speculative attempt cannot
 double-count in any aggregate, accumulator, or write path: local[N]
