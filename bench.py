@@ -254,32 +254,11 @@ def main() -> None:
 
     duck: dict[str, float] = {}
     if os.environ.get("BENCH_DUCKDB", "1") != "0":
-        import duckdb
-
-        from gcp_dbt_data_engineering_spark.sources import TABLES, table_path
-
-        con = duckdb.connect()
-        # bound the oracle engine so it cannot OOM-kill the shared
-        # process or fill the disk at large SFs (see correctness_full)
-        con.execute(
-            "SET memory_limit = "
-            f"'{os.environ.get('DUCKDB_MEMORY_LIMIT', '48GB')}'"
-        )
-        con.execute(
-            "SET temp_directory = "
-            f"'{os.environ.get('DUCKDB_TEMP_DIR', '/tmp/duckdb_spill')}'"
-        )
-        con.execute(
-            "SET max_temp_directory_size = "
-            f"'{os.environ.get('DUCKDB_TEMP_MAX', '60GB')}'"
-        )
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{table_path(sf_dir, t)}')"
-            )
         import tempfile
 
+        from tests.oracle_harness import connect
+
+        con = connect(sf_dir)
         matdir = tempfile.mkdtemp(prefix="bench_duck_mat_")
         skip_rx = None
         if os.environ.get("BENCH_DUCKDB_SKIP"):

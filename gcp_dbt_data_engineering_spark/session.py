@@ -83,18 +83,10 @@ HADOOP_CONF: dict[str, str] = {
 }
 
 
-def tune(
-    spark: SparkSession, overrides: dict[str, str] | None = None
-) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session.
-
-    ``overrides`` (highest precedence) lets get_spark re-apply its
-    caller's explicit ``extra_conf`` at runtime too — without it, this
-    post-build pass would clobber runtime-settable extra_conf keys
-    with the RUNTIME_CONF value. A conf the live session cannot change
-    raises, as ``spark.conf.set`` does.
-    """
-    for k, v in {**RUNTIME_CONF, **(overrides or {})}.items():
+def tune(spark: SparkSession) -> SparkSession:
+    """Apply the engine's runtime confs to an existing session (every
+    ``load_table`` does, so no other runtime value holds for long)."""
+    for k, v in RUNTIME_CONF.items():
         spark.conf.set(k, v)
     try:
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -189,7 +181,16 @@ def get_spark(
     and shuffle partitions sized to the core count — at 100 TB on a real
     cluster you'd instead size shuffle partitions to ~128-256 MB of
     shuffle data each (or let AQE coalesce from a high initial number).
+    ``extra_conf`` may not change a ``RUNTIME_CONF`` value.
     """
+    clash = sorted(
+        k for k, v in (extra_conf or {}).items() if RUNTIME_CONF.get(k, v) != v
+    )
+    if clash:
+        raise ValueError(
+            f"extra_conf changes {clash}, which tune() resets on every table "
+            "load: set session.RUNTIME_CONF before the session exists instead"
+        )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_cpus = os.cpu_count() or 8 if cpus == "*" else int(cpus)
     # Local-mode shuffle sizing: the test/bench scale factors carry tens
@@ -231,9 +232,4 @@ def get_spark(
     )
     for k, v in {**RUNTIME_CONF, **BUILDER_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    runtime = {
-        k: v for k, v in (extra_conf or {}).items()
-        if spark.conf.isModifiable(k)
-    }
-    return tune(spark, overrides=runtime)
+    return tune(builder.getOrCreate())

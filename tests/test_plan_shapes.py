@@ -243,32 +243,17 @@ def test_runtime_conf_is_modifiable_and_builder_conf_is_not(spark):
     assert spark.conf.get("spark.speculation") == "true"
 
 
-def test_tune_raises_on_a_conf_it_cannot_set(spark):
-    """An override the live session cannot take fails loudly instead of
-    being dropped without a word."""
-    from pyspark.errors import AnalysisException
-
+def test_get_spark_refuses_a_runtime_conf_tune_would_reset(monkeypatch):
+    """``tune`` re-applies RUNTIME_CONF on every table load, so an
+    extra_conf that changes a RUNTIME_CONF value could not hold: get_spark
+    raises before it builds a session. The engine's own value passes."""
     from gcp_dbt_data_engineering_spark import session as s
 
-    with pytest.raises(AnalysisException):
-        s.tune(spark, overrides={"spark.speculation": "false"})
-    assert spark.conf.get("spark.speculation") == "true"
+    def no_build(*a, **k):
+        raise AssertionError("a session was built")
 
-
-def test_tune_overrides_beat_runtime_conf(spark):
-    """An explicit extra_conf must survive tune()'s post-build runtime
-    pass: a caller's argument wins over RUNTIME_CONF, and a later plain
-    tune() restores the engine value. (A core conf such as
-    spark.speculation cannot be set on a live session at all: get_spark
-    passes extra_conf to the builder, and to tune() only the keys the
-    live session can modify.)"""
-    from gcp_dbt_data_engineering_spark import session as s
-
-    key = "spark.sql.session.timeZone"
-    assert s.RUNTIME_CONF[key] == "UTC"
-    try:
-        s.tune(spark, overrides={key: "America/New_York"})
-        assert spark.conf.get(key) == "America/New_York"
-    finally:
-        s.tune(spark)
-    assert spark.conf.get(key) == "UTC"
+    monkeypatch.setattr(s.SparkSession.Builder, "getOrCreate", no_build)
+    with pytest.raises(ValueError, match="RUNTIME_CONF"):
+        s.get_spark(extra_conf={"spark.sql.adaptive.enabled": "false"})
+    with pytest.raises(AssertionError, match="a session was built"):
+        s.get_spark(extra_conf={"spark.sql.adaptive.enabled": "true"})

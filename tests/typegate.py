@@ -16,9 +16,9 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests.oracle_harness import connect  # noqa: E402
 
 DUCK_TO_SPARK = {
     "BIGINT": "bigint",
@@ -50,16 +50,10 @@ def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     import __spark_entry__ as e
     from gcp_dbt_data_engineering_spark import get_spark
-    from gcp_dbt_data_engineering_spark.sources import TABLES, table_path
 
     spark = get_spark(app_name="typegate", shuffle_partitions=8,
                       master="local[8]")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{table_path(sf, t)}')"
-        )
+    con = connect(sf)
     qs, oracles = e.queries(), e.oracle_sql()
     bad = 0
     for name, fn in sorted(qs.items()):

@@ -8,54 +8,48 @@ scale the driver uses — and records the same row/schema/hash verdicts
 plus a sha256 of the canonical result, writing ``CORRECTNESS_full.json``
 at the repo root for the judge to audit.
 
-Comparison is EXACT (no float rounding): columns sorted by name, rows
-sorted lexicographically, values compared as collected Python objects
-(Decimal compares numerically, NaN normalized to a sentinel).  That is
-at least as strict as the driver's pandas-sort + value-hash.
+Comparison is EXACT, ``tests/oracle_harness.check``: no float rounding,
+columns sorted by name, rows sorted lexicographically, values compared
+as collected Python objects.  That is at least as strict as the
+driver's pandas-sort + value-hash.
+
+Oracle-drift guard: each record carries ``oracle_text_sha`` (a hash of
+the oracle SQL text). Before overwriting its output file the run reads
+the recorded hashes, prints the specs whose oracle text changed and
+stores them as ``oracle_text_changed``; specs with no recorded hash are
+counted under ``oracle_text_unrecorded``.
 
 Run:  python tools/correctness_full.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import re
 import sys
 import traceback
 from typing import Any
 
-import duckdb
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def _norm(v: Any) -> Any:
-    """Exact canonical form: no rounding; NaN and containers normalized."""
-    if isinstance(v, float) and math.isnan(v):
-        return "__NaN__"
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _norm(x)) for k, x in v.items()))
-    return v
+from tests.oracle_harness import check, connect  # noqa: E402
 
 
-def _canon(cols: list[str], rows: list[tuple]) -> list[tuple]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_norm(row[i]) for i in order) for row in rows), key=repr
-    )
-
-
-def _sha(canon: list[tuple]) -> str:
-    h = hashlib.sha256()
-    for row in canon:
-        h.update(repr(row).encode())
-    return h.hexdigest()[:16]
+def oracle_drift(previous: dict, current: dict) -> tuple[list[str], int]:
+    """Specs whose ``oracle_text_sha`` differs between two ``specs``
+    maps, and the number of specs ``previous`` has no hash for."""
+    changed, unrecorded = [], 0
+    for name, rec in sorted(current.items()):
+        if "oracle_text_sha" not in rec:
+            continue
+        old = previous.get(name, {}).get("oracle_text_sha")
+        if old is None:
+            unrecorded += 1
+        elif old != rec["oracle_text_sha"]:
+            changed.append(name)
+    return changed, unrecorded
 
 
 def main() -> int:
@@ -63,7 +57,6 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from gcp_dbt_data_engineering_spark import get_spark
-    from gcp_dbt_data_engineering_spark.sources import TABLES, table_path
 
     spark = get_spark(app_name="correctness_full")
     specs = entry._all_specs()
@@ -72,42 +65,13 @@ def main() -> int:
         rx = re.compile(only)
         specs = {n: s for n, s in specs.items() if rx.search(n)}
 
-    con = duckdb.connect()
-    # Bound the oracle engine: DuckDB's default memory limit is ~80 % of
-    # RAM, which alongside a 24 g Spark driver JVM OOM-kills the process
-    # at large SFs, and several gates running concurrently take the
-    # whole sweep down (a sf10 dedup oracle once hit 37 GB RSS); capped,
-    # a big-SF oracle spills to the temp dir instead. An unbounded spill
-    # once filled the disk on a quadratic oracle (sf10 shingle
-    # self-join), so the spill is capped too. Both are properties of the
-    # ORACLE, not the engine under test.
-    con.execute(
-        "SET memory_limit = "
-        f"'{os.environ.get('DUCKDB_MEMORY_LIMIT', '16GB')}'"
-    )
-    con.execute(
-        "SET temp_directory = "
-        f"'{os.environ.get('DUCKDB_TEMP_DIR', '/tmp/duckdb_spill')}'"
-    )
-    con.execute(
-        "SET max_temp_directory_size = "
-        f"'{os.environ.get('DUCKDB_TEMP_MAX', '60GB')}'"
-    )
+    con = connect(sf_dir)
     # Oracles that are intractable in DuckDB at the chosen SF (e.g. a
     # hot-shingle self-join that spills > disk at sf10) can be demoted
     # to the driver's weaker rows-only check without editing specs.
     oracle_skip = None
     if os.environ.get("ORACLE_SKIP"):
         oracle_skip = re.compile(os.environ["ORACLE_SKIP"])
-    for t in TABLES:
-        # partial-SF dirs (e.g. .artifacts/sf100 holds only documents +
-        # embeddings for the rows-only scale-slope pass) skip the rest
-        if not os.path.exists(table_path(sf_dir, t)):
-            continue
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{table_path(sf_dir, t)}')"
-        )
 
     out: dict[str, dict] = {}
     n_pass = n_weak = n_fail = 0
@@ -140,12 +104,10 @@ def main() -> int:
         }
         try:
             df = spec.spark(spark, sf_dir)
-            s_cols = df.columns
-            s_rows = [tuple(r) for r in df.collect()]
-            rec["spark_rows"] = len(s_rows)
             skipped = oracle_skip is not None and oracle_skip.search(name)
             if spec.oracle is None or skipped:
                 # driver's weaker rows-only check for non-SQL ops
+                rec["spark_rows"] = len(df.collect())
                 rec["rows_match"] = rec["schema_match"] = True
                 rec["hash_match"] = (
                     "rows-only (oracle intractable at this sf)"
@@ -154,35 +116,19 @@ def main() -> int:
                 )
                 n_weak += 1
                 out[name] = rec
-                print(f"WEAK  {name}: {len(s_rows)} rows (no oracle)")
+                print(f"WEAK  {name}: {rec['spark_rows']} rows (no oracle)")
                 continue
-            cur = con.execute(spec.oracle)
-            d_cols = [d[0] for d in cur.description]
-            d_rows = cur.fetchall()
-            rec["oracle_rows"] = len(d_rows)
-            rec["rows_match"] = len(s_rows) == len(d_rows)
-            rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
-            s_canon = _canon(s_cols, s_rows)
-            d_canon = _canon(d_cols, d_rows)
-            rec["hash_match"] = s_canon == d_canon
-            rec["spark_sha"] = _sha(s_canon)
-            rec["oracle_sha"] = _sha(d_canon)
+            rec.update(check(df, spec.oracle, con))
             ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
             n_pass += ok
             n_fail += not ok
             status = "PASS " if ok else "FAIL*"
-            print(f"{status} {name}: spark={len(s_rows)} duck={len(d_rows)}")
+            print(
+                f"{status} {name}: spark={rec['spark_rows']} "
+                f"duck={rec['oracle_rows']}"
+            )
             if not ok:
-                diff = next(
-                    (
-                        {"spark": repr(a)[:200], "duck": repr(b)[:200]}
-                        for a, b in zip(s_canon, d_canon)
-                        if a != b
-                    ),
-                    None,
-                )
-                rec["first_diff"] = diff
-                print(f"      first_diff: {diff}")
+                print(f"      first_diff: {rec['first_diff']}")
         except Exception:  # noqa: BLE001
             rec["err"] = traceback.format_exc(limit=3)
             n_fail += 1
@@ -192,6 +138,13 @@ def main() -> int:
     path = os.path.join(
         REPO, os.environ.get("CORRECTNESS_OUT", "CORRECTNESS_full.json")
     )
+    previous: dict = {}
+    if os.path.exists(path):
+        with open(path) as f:
+            previous = json.load(f).get("specs", {})
+    changed, unrecorded = oracle_drift(previous, out)
+    for name in changed:
+        print(f"ORACLE TEXT CHANGED {name}")
     with open(path, "w") as f:
         json.dump(
             {
@@ -200,6 +153,8 @@ def main() -> int:
                 "n_pass": n_pass,
                 "n_rows_only": n_weak,
                 "n_fail": n_fail,
+                "oracle_text_changed": changed,
+                "oracle_text_unrecorded": unrecorded,
                 "specs": out,
             },
             f,
@@ -207,7 +162,8 @@ def main() -> int:
         )
     print(
         f"\ncorrectness_full: {len(specs)} specs — {n_pass} exact-pass, "
-        f"{n_weak} rows-only, {n_fail} fail -> {path}"
+        f"{n_weak} rows-only, {n_fail} fail, {len(changed)} oracle texts "
+        f"changed -> {path}"
     )
     spark.stop()
     return 1 if n_fail else 0

@@ -19,22 +19,20 @@ RNG/time dependence, non-idempotent Arrow kernels, partial-aggregate
 state leaking across attempts. All engine arithmetic is deterministic
 hashes + fixed-order folds, so the expected answer is: identical.
 
+``SPECS``, ``_wrap_scans`` and ``run_specs`` are shared with
+``tools/speculation_gate.py``.
+
 Run:  python tools/retry_gate.py [sf_dir] [out_json]
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-# must be set before the session module builds the SparkSession
-os.environ.setdefault("SPARK_GRAFT_MASTER", "local[8,3]")
 
 #: one spec per operator family: scans+joins, global agg, window,
 #: hash-threshold sampling, shingle dedup, LSH, quantized similarity,
@@ -55,31 +53,10 @@ SPECS = [
 ]
 
 
-def _norm(v):
-    if isinstance(v, float) and math.isnan(v):
-        return "__NaN__"
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
-def _sha(cols, rows) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    canon = sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows), key=repr
-    )
-    h = hashlib.sha256()
-    for row in canon:
-        h.update(repr(row).encode())
-    return h.hexdigest()[:16]
-
-
-def _install_failing_scan_wrapper() -> str:
-    """Wrap sources.load_table so every scan's partition 0 fails its
-    first attempt. Patched on the registry AND on every module that
-    imported the symbol directly. Returns the marker-file path whose
-    line count proves failures actually fired — zero at the end means
-    the gate was vacuous and it fails."""
+def _wrap_scans(passthrough, partitions: int | None = None) -> None:
+    """Route every ``load_table`` scan through ``mapInPandas(passthrough)``,
+    after a repartition to ``partitions`` tasks when given. Patched on
+    the registry AND on every module that imported the symbol directly."""
     import importlib
     import pkgutil
 
@@ -87,43 +64,48 @@ def _install_failing_scan_wrapper() -> str:
     from gcp_dbt_data_engineering_spark.sources import registry
 
     real = registry.load_table
-    # Spark DROPS accumulator updates from failed tasks, so the proof
-    # that failures actually fired is a marker file appended by the
-    # executor right before raising (valid here: local-mode executors
-    # share the driver's filesystem).
-    marker = os.path.join(
-        "/tmp", f"retry_gate_markers_{os.getpid()}.log"
-    )
 
-    def flaky_load_table(spark, sf_dir, name):
+    def wrapped_load_table(spark, sf_dir, name):
         df = real(spark, sf_dir, name)
-        schema = df.schema
-
-        def passthrough(batches):
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            if ctx is not None and ctx.partitionId() == 0 and (
-                ctx.attemptNumber() == 0
-            ):
-                with open(marker, "a") as f:
-                    f.write("injected\n")
-                raise RuntimeError(
-                    "retry-gate: injected first-attempt failure"
-                )
-            yield from batches
-
-        return df.mapInPandas(passthrough, schema=schema)
+        if partitions:
+            df = df.repartition(partitions)
+        return df.mapInPandas(passthrough, schema=df.schema)
 
     patched = []
     for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
         mod = importlib.import_module(m.name)
         if getattr(mod, "load_table", None) is real:
-            mod.load_table = flaky_load_table
+            mod.load_table = wrapped_load_table
             patched.append(m.name)
-    registry.load_table = flaky_load_table
+    registry.load_table = wrapped_load_table
     print(f"patched load_table in {len(patched)} modules")
-    return marker
+
+
+def run_specs(spark, sf_dir: str) -> tuple[dict[str, dict], int]:
+    """Run every spec of ``SPECS`` and check it against its oracle.
+
+    Memos are cleared before each spec, so each spec's own jobs scan
+    (and meet the injected fault): a memo an earlier spec filled would
+    hide, e.g., the k-means fit job. Returns the per-spec records and
+    the number that did not pass.
+    """
+    import __spark_entry__ as entry
+    from gcp_dbt_data_engineering_spark.session import clear_caches
+    from tests.oracle_harness import check, connect
+
+    con = connect(sf_dir)
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    results: dict[str, dict] = {}
+    for name in SPECS:
+        clear_caches(spark)
+        try:
+            rec = check(qs[name](spark, sf_dir), oracles[name], con)
+            ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+            results[name] = {"pass": ok, **rec}
+        except Exception as exc:  # noqa: BLE001 - recorded, not raised
+            results[name] = {"pass": False, "err": repr(exc)[:400]}
+        print(("PASS " if results[name]["pass"] else "FAIL ") + name, flush=True)
+    return results, sum(not r["pass"] for r in results.values())
 
 
 def main() -> int:
@@ -131,57 +113,34 @@ def main() -> int:
     out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         REPO, "RETRY_GATE.json"
     )
+    # must be set before get_spark builds the SparkSession
+    os.environ.setdefault("SPARK_GRAFT_MASTER", "local[8,3]")
 
-    import duckdb
-
-    import __spark_entry__ as entry
     from gcp_dbt_data_engineering_spark import get_spark
-    from gcp_dbt_data_engineering_spark.session import clear_caches
 
     spark = get_spark(app_name="retry_gate")
     assert "local[8,3]" in spark.sparkContext.master
-    marker = _install_failing_scan_wrapper()
+    # Spark DROPS accumulator updates from failed tasks, so the proof
+    # that failures actually fired is a marker file appended by the
+    # executor right before raising (valid here: local-mode executors
+    # share the driver's filesystem). Zero lines at the end means the
+    # gate was vacuous, and it fails.
+    marker = os.path.join("/tmp", f"retry_gate_markers_{os.getpid()}.log")
 
-    con = duckdb.connect()
-    from gcp_dbt_data_engineering_spark.sources import TABLES
+    def passthrough(batches):
+        from pyspark import TaskContext
 
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        ctx = TaskContext.get()
+        if ctx is not None and ctx.partitionId() == 0 and (
+            ctx.attemptNumber() == 0
+        ):
+            with open(marker, "a") as f:
+                f.write("injected\n")
+            raise RuntimeError("retry-gate: injected first-attempt failure")
+        yield from batches
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
-    results: dict[str, dict] = {}
-    n_fail = 0
-    for name in SPECS:
-        # clean memos, so each spec's own jobs scan (and retry): a memo
-        # an earlier spec filled would hide, e.g., the k-means fit job
-        clear_caches(spark)
-        try:
-            df = qs[name](spark, sf_dir)
-            s_rows = [tuple(r) for r in df.collect()]
-            s_sha = _sha(df.columns, s_rows)
-            cur = con.execute(oracles[name])
-            o_cols = [d[0] for d in cur.description]
-            o_rows = cur.fetchall()
-            o_sha = _sha(o_cols, o_rows)
-            ok = s_sha == o_sha and len(s_rows) == len(o_rows)
-            results[name] = {
-                "pass": ok,
-                "spark_rows": len(s_rows),
-                "oracle_rows": len(o_rows),
-                "spark_sha": s_sha,
-                "oracle_sha": o_sha,
-            }
-        except Exception as exc:  # noqa: BLE001
-            results[name] = {"pass": False, "err": str(exc)[:400]}
-        if not results[name]["pass"]:
-            n_fail += 1
-        print(
-            ("PASS " if results[name]["pass"] else "FAIL ") + name,
-            flush=True,
-        )
+    _wrap_scans(passthrough)
+    results, n_fail = run_specs(spark, sf_dir)
 
     n_injected = 0
     if os.path.exists(marker):

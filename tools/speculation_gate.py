@@ -11,9 +11,10 @@ Mechanism (VERDICT r8 item 6): the session runs on a REAL two-executor
 (100 ms checks, 1.5x multiplier, 5 % quantile), and every
 ``load_table`` scan is widened to 8 tasks and wrapped in a
 pass-through ``mapInPandas`` whose partition-0 FIRST attempt sleeps —
-a guaranteed straggler the scheduler must flag. Representative specs
-from each operator family then run end-to-end and must EXACTLY match
-the DuckDB oracle (rows + canonical hash), the correctness-gate bar.
+a guaranteed straggler the scheduler must flag. The retry gate's
+representative specs (one per operator family) then run end-to-end,
+memos cleared before each, and must EXACTLY match the DuckDB oracle
+(rows + canonical hash), the correctness-gate bar.
 
 Honest single-host limitation, established empirically against Spark
 4.1.2: the scheduler DOES mark the straggler ("Marking task 0 ... as
@@ -37,9 +38,7 @@ Run:  python tools/speculation_gate.py [sf_dir] [out_json]
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 
@@ -51,101 +50,11 @@ os.environ.setdefault("SPARK_GRAFT_MASTER", "local-cluster[2,1,2048]")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
 os.environ.setdefault("PYTHONPATH", REPO)
 
+from retry_gate import SPECS, _wrap_scans, run_specs  # noqa: E402
+
 #: how long the doomed first attempt sleeps — long enough that the
 #: 100 ms speculation scan flags it against sub-second medians.
 STRAGGLE_S = 8.0
-
-#: one spec per operator family (same set as the retry gate): scans +
-#: joins, global agg, windows, shingle dedup, LSH, quantized
-#: similarity, Arrow kernel, sketch partials, per-day series.
-SPECS = [
-    "revenue_by_region",
-    "pricing_summary",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "similarity_topk_cosine",
-    "multimodal_byte_features",
-    "text_token_stats",
-    "sketch_hll_distinct_users",
-    "stats_bootstrap_ci",
-    "events_sessionize",
-]
-
-
-def _norm(v):
-    if isinstance(v, float) and math.isnan(v):
-        return "__NaN__"
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
-def _sha(cols, rows) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    canon = sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows), key=repr
-    )
-    h = hashlib.sha256()
-    for row in canon:
-        h.update(repr(row).encode())
-    return h.hexdigest()[:16]
-
-
-def _install_straggling_scan_wrapper() -> str:
-    """Wrap sources.load_table so every scan's partition 0 sleeps on
-    its first attempt (attemptNumber 0). Speculative copies arrive
-    with attemptNumber > 0 and run at full speed. Every attempt logs
-    ``partition-attempt`` to the marker file (local-cluster executors
-    share the driver's /tmp), so attempt numbers > 0 in the log prove
-    speculative duplicates really ran."""
-    import importlib
-    import pkgutil
-
-    import gcp_dbt_data_engineering_spark as pkg
-    from gcp_dbt_data_engineering_spark.sources import registry
-
-    real = registry.load_table
-    marker = os.path.join(
-        "/tmp", f"speculation_gate_markers_{os.getpid()}.log"
-    )
-    straggle = STRAGGLE_S
-
-    def straggling_load_table(spark, sf_dir, name):
-        # the tiny gate corpus scans as ONE task per stage, and the
-        # quantile rule can never flag the only task (first run was
-        # vacuous: 0 speculative attempts) — widen every scan to 8
-        # tasks so 7 fast siblings establish the median the straggler
-        # is judged against. Plan purity is irrelevant here; the gate
-        # checks speculation semantics, and outputs stay oracle-gated.
-        df = real(spark, sf_dir, name).repartition(8)
-        schema = df.schema
-
-        def passthrough(batches):
-            import time as _t
-
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            if ctx is not None:
-                with open(marker, "a") as f:
-                    f.write(
-                        f"{ctx.partitionId()}-{ctx.attemptNumber()}\n"
-                    )
-                if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
-                    _t.sleep(straggle)
-            yield from batches
-
-        return df.mapInPandas(passthrough, schema=schema)
-
-    patched = []
-    for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
-        mod = importlib.import_module(m.name)
-        if getattr(mod, "load_table", None) is real:
-            mod.load_table = straggling_load_table
-            patched.append(m.name)
-    registry.load_table = straggling_load_table
-    print(f"patched load_table in {len(patched)} modules")
-    return marker
 
 
 def main() -> int:
@@ -154,9 +63,6 @@ def main() -> int:
         REPO, "SPECULATION_GATE.json"
     )
 
-    import duckdb
-
-    import __spark_entry__ as entry
     from gcp_dbt_data_engineering_spark import get_spark
 
     spark = get_spark(
@@ -179,43 +85,38 @@ def main() -> int:
     # setLogLevel("INFO") emits nothing, "DEBUG" emits both) — so DEBUG
     # it is; the parent captures stderr in memory and greps it.
     spark.sparkContext.setLogLevel("DEBUG")
-    marker = _install_straggling_scan_wrapper()
+    # Every attempt logs ``partition-attempt`` to the marker file
+    # (local-cluster executors share the driver's /tmp), so attempt
+    # numbers > 0 in the log prove speculative duplicates really ran.
+    marker = os.path.join(
+        "/tmp", f"speculation_gate_markers_{os.getpid()}.log"
+    )
+    straggle = STRAGGLE_S
 
-    con = duckdb.connect()
-    from gcp_dbt_data_engineering_spark.sources import TABLES
+    def passthrough(batches):
+        # partition 0 sleeps on its first attempt (attemptNumber 0);
+        # speculative copies arrive with attemptNumber > 0 and run at
+        # full speed
+        import time as _t
 
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        from pyspark import TaskContext
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
-    results: dict[str, dict] = {}
-    n_fail = 0
-    for name in SPECS:
-        try:
-            df = qs[name](spark, sf_dir)
-            s_rows = [tuple(r) for r in df.collect()]
-            s_sha = _sha(df.columns, s_rows)
-            cur = con.execute(oracles[name])
-            o_cols = [d[0] for d in cur.description]
-            o_rows = cur.fetchall()
-            o_sha = _sha(o_cols, o_rows)
-            ok = s_sha == o_sha and len(s_rows) == len(o_rows)
-            results[name] = {
-                "pass": ok,
-                "spark_rows": len(s_rows),
-                "oracle_rows": len(o_rows),
-                "spark_sha": s_sha,
-                "oracle_sha": o_sha,
-            }
-        except Exception as exc:  # noqa: BLE001 - recorded, not raised
-            ok = False
-            results[name] = {"pass": False, "error": repr(exc)[:400]}
-        if not ok:
-            n_fail += 1
-        print(name, "PASS" if ok else "FAIL", flush=True)
+        ctx = TaskContext.get()
+        if ctx is not None:
+            with open(marker, "a") as f:
+                f.write(f"{ctx.partitionId()}-{ctx.attemptNumber()}\n")
+            if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+                _t.sleep(straggle)
+        yield from batches
+
+    # the tiny gate corpus scans as ONE task per stage, and the
+    # quantile rule can never flag the only task (first run was
+    # vacuous: 0 speculative attempts) — widen every scan to 8 tasks so
+    # 7 fast siblings establish the median the straggler is judged
+    # against. Plan purity is irrelevant here; the gate checks
+    # speculation semantics, and outputs stay oracle-gated.
+    _wrap_scans(passthrough, partitions=8)
+    results, n_fail = run_specs(spark, sf_dir)
 
     attempts = []
     if os.path.exists(marker):
