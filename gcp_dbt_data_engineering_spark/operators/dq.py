@@ -1385,7 +1385,8 @@ def events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             "n",
             # 1970-01-05 was a Monday: dow 0=Mon .. 6=Sun
-            "datediff(d, DATE '1970-01-05') % 7 AS dow",
+            # BIGINT like the oracle's: the same values, one type
+            "CAST(datediff(d, DATE '1970-01-05') % 7 AS BIGINT) AS dow",
         )
         .selectExpr(
             "CAST(d AS STRING) AS day",

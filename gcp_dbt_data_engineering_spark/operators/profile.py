@@ -5,23 +5,25 @@ profile_multiple_tables(table_list, fecha)`` honoring config
 ``sample_size`` / ``include_schema_info`` / ``calculate_histograms``
 (``tests/profiling_example.py:14-17,52-57``), stamps ``run_id`` /
 ``environment`` (``:20-21``) and appends to a results table (``:24-28``).
-We design its internals Spark-first:
+We design its internals Spark-first, scanning each table in place and
+shipping no row that a later operator does not need:
 
-- the table melts to LONG FORM first — ``explode`` of one struct per
-  column per row — and every statistic is then a single narrow
-  ``groupBy(table, column)`` aggregation. The plan has ~15 expressions
-  regardless of how many tables/columns are profiled (the previous
-  wide-agg design carried ~50 expressions per table and spent 10x the
-  query's runtime in Catalyst analysis + codegen, re-paid every run);
-  at 100 TB the profile costs one scan + one combine-friendly shuffle,
-  never one scan per column.
-- distinct counts ride the same pass: a single ``countDistinct`` over
-  the column's injective string key plans as a two-phase hash
-  aggregate over (table, column, value) — the standard distributed
-  distinct shape, no Expand of the input.
-- string/date min-max run in a second, strings-only long pass:
-  an immutable agg buffer (min/max on strings) would downgrade the
-  whole shared aggregate to SortAggregate (see BASELINE.md log).
+- every statistic but the distinct count is a GLOBAL aggregate: one
+  wide ``SELECT COUNT(*), COUNT(c), MIN(..), MAX(..), SUM(..) ..``
+  per table, with no melt. Each map task ships one pre-aggregated row
+  to the final stage, so the shuffle is a few hundred bytes per task
+  whatever the table's size, and the wide row is turned back into one
+  row per column with ``inline``. String min/max buffers are
+  immutable, so these aggregates plan as SortAggregate; with no
+  grouping key that costs no sort.
+- distinct counts run over one narrow long form of every table:
+  ``(cid, CAST(c AS STRING))`` — the column id and an injective
+  string key, so ``COUNT(DISTINCT k)`` == ``COUNT(DISTINCT c)`` —
+  grouped by the integer id. It plans as a two-phase hash aggregate
+  over (cid, k), the standard distributed distinct shape, no Expand
+  of the input. It is the profile's one row-scale shuffle, so each
+  distinct key carries an int id and nothing else: no names, no
+  statistic buffers.
 - results stay long format (one row per column) with a stable schema
   so daily profiles append into one history table.
 - ``sample_size`` takes the n rows with the SMALLEST md5 over the row
@@ -37,6 +39,10 @@ We design its internals Spark-first:
   dependent way that can't hash-match across engines).
 - histograms (``calculate_histograms``) are equi-width bucket counts
   via ``floor((x-min)/width)`` + groupBy — see ``profile_histogram``.
+
+Parquet footers could answer counts and min/max without a scan, but
+distinct counts and the exact decimal sums need the scan anyway: a
+footer path would add a second code path and save no job.
 """
 
 from __future__ import annotations
@@ -47,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.spec import QuerySpec, sql_dbl2dec
-from ..sources import TABLE_DTYPES, load_table, spread
+from ..sources import TABLE_DTYPES, load_table
 
 NUMERIC_KINDS = {"float", "int"}
 
@@ -88,101 +94,73 @@ def _hash_sample(df: DataFrame, n: int) -> DataFrame:
 def _profile_sql(parts: list[tuple[str, str, dict[str, str]]]) -> str:
     """One SQL statement for the whole multi-table profile.
 
-    Every table melts to one row per (source row, profiled column):
-    ``dval`` (numeric value as double), ``sval`` (the string/date
-    display form used for min/max_str), ``kval`` (an injective string
-    key, so COUNT(DISTINCT kval) == COUNT(DISTINCT col)) and a null
-    flag. Pass A (counts, distinct, numeric stats) hash-aggregates the
-    long form of every table at once; pass B (string/date min-max)
-    runs its own strings-only long pass, so its immutable agg buffers
-    cannot downgrade pass A to SortAggregate, and broadcast-joins in.
+    Every profiled column gets an integer id ``cid``. Three parts:
+
+    - ``stats``: per table ONE global aggregate over the table's view —
+      ``COUNT(*)`` and, per column, ``COUNT(c)``, min/max of the
+      double-widened value, the exact decimal sum and sum of squares
+      (numeric kinds) and min/max of the string/date display form —
+      turned back into one row per ``cid`` by ``inline``.
+    - ``d``: ``COUNT(DISTINCT k) GROUP BY cid`` over the union of every
+      table's narrow ``(cid, k = CAST(c AS STRING))`` long form.
+    - the GRID of declared columns (metadata, known without data)
+      left-joins both on ``cid``, so an EMPTY table still reports every
+      column: counts 0, value stats NULL, like the per-column
+      scalar-aggregate oracle.
+
     One statement, so Catalyst analyzes the tree ONCE. ``parts`` is a
     list of (view_name, table_label, dtypes).
     """
-
-    def cell_struct(c: str, kind: str) -> str:
-        numeric = kind in NUMERIC_KINDS
-        dval = f"CAST({c} AS DOUBLE)" if numeric else "CAST(NULL AS DOUBLE)"
-        if kind == "date":
-            sval = f"CAST(CAST({c} AS DATE) AS STRING)"
-        elif kind == "string":
-            sval = c
-        else:
-            sval = "CAST(NULL AS STRING)"
-        return (
-            f"named_struct('column_name', '{c}', 'dtype', '{kind}',"
-            f" 'dval', {dval}, 'sval', {sval},"
-            f" 'kval', CAST({c} AS STRING),"
-            f" 'isnull', CAST(({c} IS NULL) AS BIGINT))"
-        )
-
-    long_sel, str_sel = [], []
+    grid, stats, keys = [], [], []
     for view, table, dtypes in parts:
-        cells = ",\n      ".join(cell_struct(c, k) for c, k in dtypes.items())
-        long_sel.append(
-            f"SELECT '{table}' AS table_name, r.* FROM"
-            f" (SELECT explode(array(\n      {cells})) AS r FROM {view})"
-        )
-        scells = ",\n      ".join(
-            f"named_struct('column_name', '{c}', 'sval',"
-            + (f" CAST(CAST({c} AS DATE) AS STRING))" if k == "date" else f" {c})")
-            for c, k in dtypes.items()
-            if k in ("string", "date")
-        )
-        if scells:
-            str_sel.append(
-                f"SELECT '{table}' AS table_name, r.* FROM"
-                f" (SELECT explode(array(\n      {scells})) AS r FROM {view})"
+        aggs, rows, cells = ["COUNT(*) AS n"], [], []
+        for c, kind in dtypes.items():
+            i = len(grid)
+            grid.append(f"({i}, '{table}', '{c}', '{kind}')")
+            aggs.append(f"COUNT({c}) AS nn{i}")
+            num = ["CAST(NULL AS DOUBLE)"] * 4
+            if kind in NUMERIC_KINDS:
+                d = f"CAST({c} AS DOUBLE)"
+                aggs += [
+                    f"MIN({d}) AS lo{i}", f"MAX({d}) AS hi{i}",
+                    f"CAST(SUM(CAST({d} AS DECIMAL(22,6))) AS DOUBLE) AS s{i}",
+                    f"CAST(SUM(CAST({d} * {d} AS DECIMAL(38,8))) AS DOUBLE)"
+                    f" AS ss{i}",
+                ]
+                num = [f"lo{i}", f"hi{i}", f"s{i}", f"ss{i}"]
+            txt = ["CAST(NULL AS STRING)"] * 2
+            if kind in ("string", "date"):
+                sval = f"CAST(CAST({c} AS DATE) AS STRING)" if kind == "date" else c
+                aggs += [f"MIN({sval}) AS slo{i}", f"MAX({sval}) AS shi{i}"]
+                txt = [f"slo{i}", f"shi{i}"]
+            rows.append(
+                f"named_struct('cid', {i}, 'total_count', n,"
+                f" 'null_count', n - nn{i}, 'min_num', {num[0]},"
+                f" 'max_num', {num[1]}, '__sum', {num[2]}, '__sumsq', {num[3]},"
+                f" 'min_str', {txt[0]}, 'max_str', {txt[1]})"
             )
-    long_all = "\nUNION ALL\n".join(long_sel)
+            cells.append(f"named_struct('cid', {i}, 'k', CAST({c} AS STRING))")
+        sep = ",\n      "
+        stats.append(
+            f"SELECT inline(array(\n      {sep.join(rows)}))\n"
+            f"FROM (SELECT {', '.join(aggs)} FROM {view})"
+        )
+        keys.append(f"SELECT inline(array(\n      {sep.join(cells)})) FROM {view}")
+    union = "\nUNION ALL\n"
+    grid_vals = ",\n  ".join(grid)
     numeric_in = ", ".join(f"'{k}'" for k in sorted(NUMERIC_KINDS))
     n = "(total_count - null_count)"
     var = f"((__sumsq - __sum * __sum / {n}) / ({n} - 1))"
-    b_cte, b_join, b_cols = "", "", (
-        "CAST(NULL AS STRING) AS min_str, CAST(NULL AS STRING) AS max_str"
-    )
-    if str_sel:
-        str_all = "\nUNION ALL\n".join(str_sel)
-        b_cte = f""",
-str_all AS (
-{str_all}),
-b AS (
-  SELECT table_name, column_name,
-         MIN(sval) AS min_str, MAX(sval) AS max_str
-  FROM str_all GROUP BY table_name, column_name)"""
-        b_join = (" LEFT JOIN b ON a.table_name = b.table_name"
-                  " AND a.column_name = b.column_name")
-        b_cols = "min_str, max_str"
-    # the column GRID is metadata (known without data): emit a row per
-    # declared column even when a table is EMPTY — counts coalesce to
-    # 0, value stats stay NULL. Wave 7: the melt-groupBy alone yields
-    # zero groups on an empty table while the reference profiler (and
-    # the per-column scalar-aggregate oracle) reports every column.
-    grid_vals = ",\n  ".join(
-        f"('{table}', '{c}', '{k}')"
-        for _view, table, dtypes in parts
-        for c, k in dtypes.items()
-    )
-    if b_join:
-        b_join = (" LEFT JOIN b ON g.table_name = b.table_name"
-                  " AND g.column_name = b.column_name")
     return f"""
-WITH long_all AS (
-{long_all}),
-a AS (
-  SELECT table_name, column_name, dtype,
-         COUNT(*) AS total_count,
-         SUM(isnull) AS null_count,
-         COUNT(DISTINCT kval) AS distinct_count,
-         MIN(dval) AS min_num, MAX(dval) AS max_num,
-         CAST(SUM(CAST(dval AS DECIMAL(22,6))) AS DOUBLE) AS __sum,
-         CAST(SUM(CAST(dval * dval AS DECIMAL(38,8))) AS DOUBLE) AS __sumsq
-  FROM long_all GROUP BY table_name, column_name, dtype){b_cte},
+WITH stats AS (
+{union.join(stats)}),
+d AS (
+  SELECT cid, COUNT(DISTINCT k) AS distinct_count
+  FROM ({union.join(keys)}) GROUP BY cid),
 grid AS (
   SELECT * FROM (VALUES
-  {grid_vals}) AS g(table_name, column_name, dtype))
-SELECT {"/*+ BROADCAST(b) */" if str_sel else ""} g.table_name,
-       g.column_name, g.dtype,
+  {grid_vals}) AS g(cid, table_name, column_name, dtype))
+SELECT g.table_name, g.column_name, g.dtype,
        CAST(COALESCE(total_count, 0) AS BIGINT) AS total_count,
        CAST(COALESCE(null_count, 0) AS BIGINT) AS null_count,
        CAST(COALESCE(distinct_count, 0) AS BIGINT) AS distinct_count,
@@ -194,9 +172,8 @@ SELECT {"/*+ BROADCAST(b) */" if str_sel else ""} g.table_name,
             THEN CAST(CAST(sqrt(greatest({var}, 0.0)) AS DECIMAL(28,6))
                       AS DOUBLE)
        END AS stddev_num,
-       {b_cols}
-FROM grid g LEFT JOIN a ON g.table_name = a.table_name
-  AND g.column_name = a.column_name{b_join}
+       min_str, max_str
+FROM grid g LEFT JOIN stats s ON g.cid = s.cid LEFT JOIN d ON g.cid = d.cid
 """
 
 
@@ -212,18 +189,14 @@ class SimpleDataProfiler:
         self, tables: list[str], sf_dir: str, fecha: str | None = None,
         date_column: str | None = None,
     ) -> DataFrame:
+        """Profile every column of ``tables`` in one statement (see
+        ``_profile_sql``). Each table is registered as a view after the
+        ``fecha`` day filter and the ``sample_size`` cap; both parts of
+        the statement read those views."""
         parts = []
         sample = self.settings.get("sample_size")
-        # spread: the long-form explode multiplies rows x columns; an
-        # unsplittable single-partition scan would run that expansion
-        # on one core (see sources.spread). Each table takes a 1/N
-        # slice of the target parallelism so the fused union totals
-        # one wave of tasks instead of N waves of tiny ones.
-        per_table = max(
-            2, self.spark.sparkContext.defaultParallelism // max(1, len(tables))
-        )
         for t in tables:
-            df = spread(load_table(self.spark, sf_dir, t), per_table)
+            df = load_table(self.spark, sf_dir, t)
             if fecha and date_column and date_column in df.columns:
                 df = df.filter(F.col(date_column).cast("date") == F.lit(fecha))
             if sample:
@@ -234,11 +207,9 @@ class SimpleDataProfiler:
                 c: k for c, k in TABLE_DTYPES[t].items() if k != "array"
             }
             parts.append((view, t, dtypes))
-        # All tables fuse into two jobs AND one analyzer pass: the whole
-        # melt + aggregate + join is generated as a single SQL statement.
-        # The previous DSL chain (~20 Dataset steps over a growing tree)
-        # cost ~1.5 s of eager per-step Catalyst analysis per run —
-        # measured to dominate this operator's wall-clock at sf0.1.
+        # one generated SQL statement, not a DSL chain: a chain of ~20
+        # Dataset steps re-analyzes the growing tree at every step
+        # (~1.5 s of driver time per run at sf0.1)
         return self.spark.sql(_profile_sql(parts))
 
     def with_run_metadata(
@@ -276,27 +247,38 @@ class SimpleDataProfiler:
 def profile_histogram(
     df: DataFrame, column: str, buckets: int = 10
 ) -> DataFrame:
-    """Equi-width histogram: two scans (min/max, then bucket counts).
+    """Equi-width histogram in one lazy plan: the 1-row min/max
+    aggregate is cross-joined (broadcast) into the bucket-count pass,
+    so building the DataFrame runs no Spark job.
 
-    The bucket id is ``floor((x - min) / width)`` clamped to
-    ``buckets-1`` — a pure-projection groupBy that scales linearly.
+    The bucket id is ``floor((x - lo) / width)`` clamped to
+    ``buckets-1`` — a pure-projection groupBy that scales linearly. A
+    column with no values, or a single value, gets ``[lo, lo + 1)`` as
+    its range (``lo`` 0.0 when there are no values).
     """
-    lo, hi = df.agg(
-        F.min(column).cast("double"), F.max(column).cast("double")
-    ).first()
-    if lo is None or hi is None or hi <= lo:
-        lo, hi = (lo or 0.0), (lo or 0.0) + 1.0
-    width = (hi - lo) / buckets
+    mm = df.agg(
+        F.min(column).cast("double").alias("lo"),
+        F.max(column).cast("double").alias("hi"),
+    )
+    lo0, hi0 = F.col("lo"), F.col("hi")
+    flat = lo0.isNull() | hi0.isNull() | (hi0 <= lo0)
+    lo = F.coalesce(lo0, F.lit(0.0))
+    hi = F.when(flat, lo + F.lit(1.0)).otherwise(hi0)
+    bounds = mm.select(
+        lo.alias("__lo"), ((hi - lo) / F.lit(buckets)).alias("__w")
+    )
+    lo, width = F.col("__lo"), F.col("__w")
     bucket = F.least(
-        F.floor((F.col(column) - F.lit(lo)) / F.lit(width)),
-        F.lit(buckets - 1),
+        F.floor((F.col(column) - lo) / width), F.lit(buckets - 1)
     ).cast("bigint")
     return (
         df.filter(F.col(column).isNotNull())
-        .groupBy(bucket.alias("bucket"))
+        .crossJoin(bounds)
+        .groupBy(bucket.alias("bucket"), "__lo", "__w")
         .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("bucket_lo", F.lit(lo) + F.col("bucket") * F.lit(width))
-        .withColumn("bucket_hi", F.lit(lo) + (F.col("bucket") + 1) * F.lit(width))
+        .withColumn("bucket_lo", lo + F.col("bucket") * width)
+        .withColumn("bucket_hi", lo + (F.col("bucket") + 1) * width)
+        .drop("__lo", "__w")
     )
 
 
@@ -313,8 +295,9 @@ def _oracle_table_profile(table: str) -> str:
         numeric = kind in NUMERIC_KINDS
         if numeric:
             # numeric stats run over the double-widened cell value
-            # (long-form dval), so every product/sum below widens to
-            # DOUBLE before the decimal cast on both engines
+            # (the profiler's CAST(c AS DOUBLE)), so every product/sum
+            # below widens to DOUBLE before the decimal cast on both
+            # engines
             d = f"CAST({c} AS DOUBLE)"
             min_num = f"MIN({d})"
             max_num = f"MAX({d})"
@@ -417,7 +400,8 @@ GROUP BY bucket, lo, hi
 SPECS: dict[str, QuerySpec] = {
     "profile_core_tables": QuerySpec(
         "profile_core_tables", profile_core_tables, ORACLE_PROFILE,
-        "single-agg-pass column profiler over 4 tables, long format",
+        "column profiler over 4 tables: a global aggregate per table "
+        "plus one narrow distinct pass, long format",
     ),
     "profile_histogram_orders": QuerySpec(
         "profile_histogram_orders", profile_histogram_orders,

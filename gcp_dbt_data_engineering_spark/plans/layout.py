@@ -75,9 +75,11 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     for src, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
         name = f"b_{src}_{source_key(sf_dir, src)}"
         name = name.replace(".", "_").replace("-", "_")
-        _prune_stale_catalog(spark, f"b_{src}_", name)
         names.append(name)
         if not spark.catalog.tableExists(name):
+            # listing the catalog runs jobs: prune only on a (re)write,
+            # the one time a new name can have made an older one stale
+            _prune_stale_catalog(spark, f"b_{src}_", name)
             # always (re)write on a fresh session: the bucket spec
             # lives in catalog metadata, and registering a bare path
             # with createTable would silently drop it — the one-time
@@ -247,20 +249,24 @@ _ZX = "CAST(user_id & 65535 AS BIGINT)"
 _ZY = "CAST(CAST(hour(ts) AS BIGINT) * 60 + CAST(minute(ts) AS BIGINT) AS BIGINT)"
 
 
-def _zorder_events(spark: SparkSession, sf_dir: str) -> str:
+def _zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-partition + sort on z = Delta's OPTIMIZE ZORDER BY: each
     # output file covers a compact z-range, hence a bounded rectangle in
     # (user, minute) space, so per-file min/max stats prune on BOTH
     # dimensions at scan time.
-    return stage_artifact(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
+        "*", f"{_z_expr(_ZX, _ZY)} AS z"
+    )
+    path = stage_artifact(
         ART, "events_zorder", sf_dir, "events",
-        lambda t: load_table(spark, sf_dir, "events")
-        .selectExpr("*", f"{_z_expr(_ZX, _ZY)} AS z")
-        .repartitionByRange(8, F.col("z"))
+        lambda t: ev.repartitionByRange(8, F.col("z"))
         .sortWithinPartitions("z")
         .write.mode("overwrite")
         .parquet(t),
     )
+    # the written schema is known: reading with it skips the footer
+    # inference job every rebuild would pay
+    return spark.read.schema(ev.schema).parquet(path)
 
 
 def events_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,10 +282,9 @@ def events_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-user slice and scanning the table: min/max stats per file on
     both dims, no second sort key needed.
     """
-    path = _zorder_events(spark, sf_dir)
-    ev = spark.read.parquet(path)
     return (
-        ev.selectExpr(
+        _zorder_events(spark, sf_dir)
+        .selectExpr(
             "z >> 14 AS z_cell",
             f"{_ZX} AS ux",
             f"{_ZY} AS minute_of_day",

@@ -50,11 +50,33 @@ def test_profiler_distinct_pass_stays_hash_aggregated(spark):
     )
 
     plan = _plan(profile_core_tables(spark, SF))
-    # long-form profiler invariants: the single countDistinct plans as
-    # a two-phase HASH aggregate with NO Expand of the input; sort
-    # aggregation exists only for the strings-only min/max pass.
+    # the distinct counts run over one narrow (cid, key) long form: the
+    # single countDistinct plans as a two-phase HASH aggregate with NO
+    # Expand of the input. Every other statistic is a per-table global
+    # aggregate (SortAggregate: immutable string min/max buffers) over
+    # the scan itself, so no table is round-robined first.
     assert "HashAggregate" in plan
     assert "Expand" not in plan
+    assert "RoundRobinPartitioning" not in plan
+
+
+def test_profiler_warm_work_pin(spark):
+    """A warm profile (table handles kept) runs at most 10 jobs and
+    writes under 1 MB of shuffle at sf0.01 (9 jobs, 0.47 MB). A melt
+    that ships names and statistic buffers with each distinct key, and
+    round-robins the small tables first, runs 14 jobs and writes
+    3.07 MB."""
+    from gcp_dbt_data_engineering_spark.operators.profile import (
+        profile_core_tables,
+    )
+    from gcp_dbt_data_engineering_spark.status import StatusReader
+
+    assert profile_core_tables(spark, SF).toArrow().num_rows == 21
+    reader = StatusReader(spark)
+    assert profile_core_tables(spark, SF).toArrow().num_rows == 21
+    got = reader.read()
+    assert got["jobs"] <= 10, got
+    assert 0 < got["shuffle_write_b"] < 1_000_000, got
 
 
 def test_no_cartesian_products_anywhere(spark):

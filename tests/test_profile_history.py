@@ -7,6 +7,8 @@ import os
 
 import shutil
 
+from pyspark.sql import functions as F
+
 from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
 from gcp_dbt_data_engineering_spark.operators.profile import (
     PROFILE_TABLES,
@@ -45,6 +47,28 @@ def test_sample_size_caps_profiled_rows(spark):
     p = SimpleDataProfiler(spark, settings={"sample_size": 10})
     rows = p.profile_multiple_tables(["customer"], SF).collect()
     assert all(r.total_count == 10 for r in rows)
+
+
+def test_fecha_profiles_one_day(spark):
+    """``fecha`` / ``date_column`` profile that day's rows only."""
+    from gcp_dbt_data_engineering_spark.sources import load_table
+
+    day = (
+        load_table(spark, SF, "orders")
+        .groupBy(F.col("o_orderdate").cast("date").alias("d"))
+        .count()
+        .orderBy(F.desc("count"), "d")
+        .first()
+    )
+    assert day["count"] > 1
+    rows = SimpleDataProfiler(spark).profile_multiple_tables(
+        ["orders"], SF, fecha=str(day["d"]), date_column="o_orderdate"
+    ).collect()
+    assert len(rows) == 6
+    assert {r.total_count for r in rows} == {day["count"]}
+    date = next(r for r in rows if r.column_name == "o_orderdate")
+    assert date.min_str == date.max_str == str(day["d"])
+    assert date.distinct_count == 1
 
 
 def test_hash_sample_deterministic_and_unbiased(spark):
