@@ -91,23 +91,20 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact, a :func:`session.memo` entry every shingle consumer
     derives its relation from (rows, sizes, ranks, MinHash signatures).
 
-    A narrow projection after the ``doc_id`` repartition: the
-    documents table arrives as one small parquet file -> one
-    partition, so rows spread across cores BEFORE the CPU-heavy
-    hashing, and ``array_distinct`` + ``array_sort`` make the set
-    per row, with no explode + distinct or groupBy + collect_list
-    shuffle. Docs shorter than the shingle width (n = 0) and NULL text
-    drop out, like the oracle's unnest. Persisted once per (session,
-    sf_dir) and count()-materialized for the accurate-stats reason in
+    A narrow projection over the documents scan, which
+    :func:`sources.load_table` already splits across cores:
+    ``array_distinct`` + ``array_sort`` make the set per row, with no
+    explode + distinct or groupBy + collect_list shuffle. Docs shorter
+    than the shingle width (n = 0) and NULL text drop out, like the
+    oracle's unnest. Persisted once per (session, sf_dir) and
+    count()-materialized for the accurate-stats reason in
     :func:`_materialized`; a per-CALL persist would leak one cached
     copy per spec per run into the shared session (the round-1
     contamination persist bug).
     """
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        docs = load_table(spark, sf_dir, "documents")
         hs = th.shingle_hashes("text", SHINGLE_N, "spark")
         return _materialized(
             docs.selectExpr(
@@ -1416,9 +1413,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language. Same two-shuffle profile as the contamination and
     boilerplate families.
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = load_table(spark, sf_dir, "documents")
     hits = docs.selectExpr(
         "doc_id",
         "lang",

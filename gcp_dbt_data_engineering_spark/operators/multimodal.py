@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..plans.spec import QuerySpec
 from ..session import memo
-from ..sources import load_table, spread_by_size
+from ..sources import load_table
 
 VIDEO_FPS = 24
 FRAME_STRIDE = 24  # sample one frame per second
@@ -326,21 +326,17 @@ def _assets_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["asset_id", "media_type", "src_len", "payload"]
             )
 
-    # spread_by_size() before the synthesis stage: the documents table
-    # is single-row-group parquet, so a big corpus would otherwise run
-    # the Python synthesis AND every downstream decode over the
-    # persisted relation on ONE core (guide §2.5: unsplittable input →
-    # repartition right after the read). Parallelism is sized to the
-    # INPUT BYTES, not the core count: every Python-boundary stage
-    # pays a ~10-20 ms per-task worker handshake, so fanning a ~2 MB
-    # corpus across 32 cores measured *slower* than one task (398 ms
-    # vs 181 ms identity mapInArrow) — small corpora keep their scan
-    # split count, large ones fan out to every core.
+    # The synthesis stage and every decode over the persisted relation
+    # run one task per scan split. load_table reads a documents table
+    # under STAGE_MIN_BYTES as its one raw file (one task: every
+    # Python-boundary task pays a ~10-20 ms worker handshake, so
+    # fanning a small corpus out costs more than it saves) and stages
+    # a larger one into one part per core.
     return memo(
         spark,
         "assets",
         sf_dir,
-        lambda: spread_by_size(_assets(spark, sf_dir))
+        lambda: _assets(spark, sf_dir)
         .mapInPandas(
             synth,
             schema="asset_id bigint, media_type string, src_len bigint,"

@@ -33,7 +33,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table, spread
+from ..sources import load_table
 from ..plans.spec import QuerySpec
 from ..session import memo
 from . import texthash as th
@@ -51,18 +51,14 @@ def _contam_shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A lazily persisted :func:`session.memo` entry: the 5-gram fold is
     the CPU of both contamination operators, and this is the relation
-    a production pipeline materializes per corpus snapshot. Spread
-    before the fold — the fixture parquet is one scan split. It stays
+    a production pipeline materializes per corpus snapshot. It stays
     separate from dedup's 3-gram ``_shingle_sets`` artifact: different
     shingle width, rows keyed by ``source`` as well as ``doc_id``.
     """
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
         return (
-            docs.selectExpr(
+            load_table(spark, sf_dir, "documents").selectExpr(
                 "doc_id",
                 "source",
                 f"{th.shingle_hashes('text', CONTAM_N, 'spark')} AS hs",
@@ -157,7 +153,6 @@ def contamination_external_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``load_source``; here it is built from the fixture tuple.
     """
     docs = load_table(spark, sf_dir, "documents")
-    docs = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     phrases = spark.createDataFrame(
         [(p,) for p in BENCH_PHRASES], "phrase string"
     )
@@ -979,7 +974,7 @@ def boilerplate_chunk_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither shuffle has skew; at 100 TB the df-table is the artifact
     you materialize once per corpus snapshot.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     rows = docs.selectExpr(
         "doc_id",
         "source",
@@ -1072,7 +1067,7 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered (no global sort shuffle). Docs with zero alphanumeric
     tokens have no evidence and are absent, as in the LM-scoring specs.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     src_set = ", ".join(f"'{s}'" for s in BENCH_SOURCES)
     toks = docs.selectExpr(
         "doc_id",
@@ -1212,7 +1207,7 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per language — docs/tokens kept vs total, the threshold
     quality, and the budget fill ratio.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     base = docs.selectExpr(
         "doc_id",
         "lang",
@@ -1367,7 +1362,7 @@ def curate_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages; Catalyst sees the funnel as one tree and collapses the
     flag projections into the scan.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     phr = " OR ".join(
         f"contains(norm, '{p}')" for p in BENCH_PHRASES
     )

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..plans.spec import QuerySpec
 from ..session import memo
-from ..sources import load_table, spread
+from ..sources import load_table
 from .dedup import EMB_DIM as DIM  # single source of truth for dim
 from .dedup import QSCALE, quant_transform, usable_embedding_pred
 from .sketch import _hll_hash
@@ -151,17 +151,13 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — a corrupt ±1e30 component would overflow the int64 norm
         # fold), and all-zero quantized vectors (no representable
         # direction) are excluded — cosine is undefined for them.
-        # spread() before the CPU-heavy downstream folds: a
-        # fat-row-group corpus (sf100 ships 2M rows in TWO parquet row
-        # groups) caps the scan at 2 tasks, and the persisted relation
-        # would inherit that — every Lloyd assignment / banding /
-        # candidate fold then runs on 2 of 32 cores (measured: the
-        # sf100 occupancy audit sat at 6% CPU for 2 h). One round-robin
-        # shuffle at cache-build time fixes the parallelism for the
-        # lifetime of the persisted artifact; real multi-file lakes
-        # split at the scan and spread() skips the shuffle entirely.
+        # The persisted relation inherits the scan's split count, so
+        # every Lloyd assignment / banding / candidate fold runs on as
+        # many cores as the scan had tasks. load_table stages a source
+        # with fewer row groups than cores (sf100 ships 2M rows in TWO
+        # row groups) into one part per core, so no shuffle is needed.
         return (
-            spread(load_table(spark, sf_dir, "embeddings"))
+            load_table(spark, sf_dir, "embeddings")
             .filter(F.expr(usable_embedding_pred("embedding", "spark")))
             .selectExpr(
                 "vec_id",

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.spec import QuerySpec
-from ..sources import load_table, spread
+from ..sources import load_table
 from . import texthash as th
 
 #: BPE-ish token pattern: word, integer, or single non-alnum mark.
@@ -86,7 +86,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     usual cheap proxy for tokenizer cost when budgeting a training
     mix. One projection + one hash aggregate on ``source``.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.selectExpr(
         "source",
         f"size({th.words('text', 'spark')}) AS n_words",
@@ -142,7 +142,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     'en' — the deliverable is the deterministic classifier plumbing
     (reproduced exactly by the oracle), not label accuracy.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     feats = docs.selectExpr(
         "doc_id",
         "lang",
@@ -229,7 +229,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; deterministic double arithmetic.
     """
     feats = _quality_feats("spark")
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.selectExpr(
             "doc_id", *[f"{e} AS {name}" for name, e in feats.items()]
@@ -283,11 +283,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-dup detector). ``n_docs_same_fp`` counts docs sharing
     ``fp_min`` via a window — a cheap near-dup signal.
     """
-    # single-file table -> repartition so the per-char hash folds run
-    # on all cores, not one.
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.selectExpr(
         "doc_id",
         f"array_min({th.char_shingle_hashes('lower(text)', FP_GRAM, 'spark')})"
@@ -379,7 +375,7 @@ def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer inputs so the double division is deterministic.
     """
     pos, neg = _polarity_counts("ws", "spark")
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.selectExpr("doc_id", f"{th.words('text', 'spark')} AS ws")
         .selectExpr("doc_id", f"{pos} AS n_pos", f"{neg} AS n_neg")
@@ -445,7 +441,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     words = docs.selectExpr(
         "doc_id", f"explode({th.words('text', 'spark')}) AS term"
     )
@@ -539,10 +535,7 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc. Ratios are single int/int double divisions — bit-stable in
     both engines.
     """
-    # spread: the fixture parquet is one row group -> one scan split;
-    # without the round-robin repartition every downstream ngram fold
-    # runs on a single core (12x wall-clock on local[32]).
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     per = docs.selectExpr(
         "doc_id", f"{th.words('text', 'spark')} AS ws"
     )
@@ -686,7 +679,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-heavy — AQE skew-join or a broadcast of the top-K head plus a
     join for the tail), one per-doc rollup.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.selectExpr(
         "doc_id", f"explode({th.words('text', 'spark')}) AS w"
     )
@@ -744,7 +737,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs with <2 words have no bigrams and are absent in both engines
     alike.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     per = docs.selectExpr("doc_id", f"{th.words('text', 'spark')} AS ws")
     doc_pair = (
         per.selectExpr(
@@ -853,7 +846,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     code units (non-BMP chars become surrogate halves) while DuckDB
     splits codepoints.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     chars = docs.filter("length(text) > 0").selectExpr(
         "doc_id", "explode(split(lower(text), '')) AS c"
     )
@@ -975,7 +968,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern (``plans/spec.py`` rules: per-row double → DECIMAL(22,6),
     exact associative sum, one final double division).
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     scored = docs.selectExpr(
         "source",
         f"size({th.words('text', 'spark')}) AS n_tok",
@@ -1056,7 +1049,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase rollup shuffles on the 8-byte-ish phrase text only after
     per-phrase aggregation. No driver-side text processing.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
     stops = ", ".join(f"'{w}'" for w in _RAKE_STOPS)
     toks = docs.selectExpr(
         "doc_id", f"posexplode({th.words('text', 'spark')}) AS (pos, w)"

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources import load_table, spread
+from ..sources import load_table
 from .spec import (
     QuerySpec,
     money_avg,
@@ -89,9 +89,7 @@ GROUP BY r_name
 # ---------------------------------------------------------------------------
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread: 8 decimal partial-aggs per row dominate; an unsplittable
-    # single-row-group scan would serialize them on one core.
-    li = spread(_t(spark, sf_dir, "lineitem")).filter(
+    li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp_ntz")
     )
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -806,7 +804,7 @@ def events_props_udtf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     coerce to their literal text, matching the oracle's
     ``json_extract_string``.
     """
-    ev = spread(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.select(
             F.explode(F.from_json("props", "map<string,string>")).alias(
@@ -851,9 +849,7 @@ def props_explode_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         yield event_id, k, str(v)
 
     spark.udtf.register("props_explode", PropsExplode)
-    # spread: the per-row Python eval is the cost; a single-split scan
-    # would serialize it on one core (and one Python worker).
-    spread(_t(spark, sf_dir, "events")).createOrReplaceTempView(
+    _t(spark, sf_dir, "events").createOrReplaceTempView(
         "__events_udtf_src"
     )
     return spark.sql("""
@@ -881,7 +877,7 @@ def events_props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a non-integral ``$.k`` becomes NULL like the oracle's
     TRY_CAST, instead of a runtime error.
     """
-    ev = spread(_t(spark, sf_dir, "events"))
+    ev = _t(spark, sf_dir, "events")
     return (
         ev.selectExpr(
             "event_type",

@@ -2255,18 +2255,18 @@ def dbt_sources_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         (f"source.{r['source']}.{r['table']}", "freshness", r["status"])
         for r in fresh
     ]
-    # fold over the model rows (not collect()[0]): on an EMPTY events
-    # source the grouped model has zero rows and the summary must read
-    # 0, matching the oracle's global COUNT (wave 7 empty-corpus gate)
-    n = (
-        out["src_purchase_stats"]
-        .agg(F.coalesce(F.sum("n_events"), F.lit(0)).alias("n"))
-        .collect()[0]["n"]
+    # a global fold over the model rows, fetched with the graded rows
+    # (no driver round-trip): on an EMPTY events source the grouped
+    # model has zero rows and the summary must read 0, matching the
+    # oracle's global COUNT (wave 7 empty-corpus gate)
+    n_events = out["src_purchase_stats"].agg(
+        F.lit("model.src_purchase_stats").alias("node"),
+        F.lit("n_events").alias("metric"),
+        F.coalesce(F.sum("n_events"), F.lit(0)).cast("string").alias("value"),
     )
-    rows.append(("model.src_purchase_stats", "n_events", str(n)))
     return spark.createDataFrame(
         rows, "node string, metric string, value string"
-    )
+    ).unionByName(n_events)
 
 
 def _oracle_freshness() -> str:

@@ -5,8 +5,6 @@ from .registry import (  # noqa: F401
     load_source,
     load_table,
     register_all,
-    spread,
-    spread_by_size,
     stats_informed_join,
     table_path,
     write_sink,

@@ -97,11 +97,10 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-#: Fact tables below this size stay on the raw single file; above it a
-#: one-row-group file would serialize every scan's decode on one core.
-#: 400 KB catches documents/embeddings at sf0.1 — their staged layout
-#: also lets spread() skip its repartition shuffle in every corpus
-#: operator (measured: unigram-logprob 0.92->0.50 s, minhash 0.82->0.69).
+#: Files below this size stay raw: their one scan task is cheaper than
+#: fanning out. Above it, a file with fewer row groups than cores would
+#: run every scan's decode, and every operator above the scan, on that
+#: few cores. 400 KB catches documents/embeddings at sf0.1.
 STAGE_MIN_BYTES = 400_000
 STAGE_DIR = os.path.join(ARTIFACTS_DIR, "staged")
 
@@ -189,25 +188,36 @@ def stage_artifact(
 
 
 def _split_parquet(path: str, out_dir: str, n: int) -> None:
-    """Write ``path`` back as ``n`` contiguous row slices under ``out_dir``.
+    """Write ``path`` back as contiguous row slices under ``out_dir``.
 
-    One ``part-<i>.parquet`` per slice, each ONE row group, with the
+    Each of the source's ``R`` row groups is read alone and cut into
+    ``ceil(n / R)`` slices, so there are at least ``n`` slices and
+    memory holds one row group at a time. A row group is read through
+    the dataset scanner, ``pq.read_table``'s own reader, so a
+    one-row-group source is sliced from the same Arrow batches as a
+    whole-file read and writes the same bytes. One
+    ``part-<i>.parquet`` per slice, each ONE row group, with the
     source's Arrow schema (metadata included) and the writer's default
-    codec. Part names sort in slice order, so the parts concatenated by
-    name are the source table row for row.
+    codec. Part names sort in slice order, so the parts concatenated
+    by name are the source table row for row.
     """
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
-    table = pq.read_table(path)
-    step = -(-table.num_rows // n)
+    (src,) = ds.dataset(path, format="parquet").get_fragments()
+    groups = src.split_by_row_group()
+    per_group = -(-n // len(groups))
     os.makedirs(out_dir)
-    for i in range(n):
-        part = table.slice(i * step, step)
-        pq.write_table(
-            part,
-            os.path.join(out_dir, f"part-{i:05d}.parquet"),
-            row_group_size=max(1, part.num_rows),
-        )
+    for g, group in enumerate(groups):
+        table = group.to_table()
+        step = -(-table.num_rows // per_group)
+        for j in range(per_group):
+            part = table.slice(j * step, step)
+            pq.write_table(
+                part,
+                os.path.join(out_dir, f"part-{g * per_group + j:05d}.parquet"),
+                row_group_size=max(1, part.num_rows),
+            )
     open(os.path.join(out_dir, "_SUCCESS"), "w").close()
 
 
@@ -216,48 +226,50 @@ def _stage_if_unsplittable(
 ) -> str:
     """Return a readable path whose parquet layout splits across cores.
 
-    The driver fixtures are ONE row group per table, and parquet only
-    splits at row-group boundaries — so Spark decodes a 600k-row
-    lineitem on a single core no matter what ``maxPartitionBytes``
-    says, on every scan of every query (``spread()`` can't help: the
-    serial decode happens *before* its shuffle). The fix is the same
-    one-time ingest/compaction step any lake runs (Delta OPTIMIZE,
-    Iceberg rewrite_data_files): rewrite the table once into
-    ``n = min(16, defaultParallelism)`` files under ``.artifacts/staged``
-    and read that, so the scan splits one file per task and ``spread()``
-    skips its repartition.
+    The engine's one decision on how a source table splits. Parquet
+    splits only at row-group boundaries, so a file with fewer row
+    groups than cores (the driver fixtures are ONE row group per table)
+    decodes on that few cores no matter what ``maxPartitionBytes``
+    says, and so does every operator above the scan until a shuffle.
+    The fix is the same one-time ingest/compaction step any lake runs
+    (Delta OPTIMIZE, Iceberg rewrite_data_files): rewrite a file of at
+    least :data:`STAGE_MIN_BYTES` with fewer than ``n = min(16,
+    defaultParallelism)`` row groups once into at least ``n`` files
+    under ``.artifacts/staged`` and read that, so the scan splits one
+    file per task and no operator needs a repartition to use every
+    core.
 
     The rewrite runs on the driver with pyarrow (:func:`_split_parquet`):
-    one Arrow read of the row group, then ``n`` contiguous slices, each
-    written as one row group with the source's exact Arrow schema — so
-    a nanosecond timestamp stays nanoseconds and Spark reads the staged
-    files with the same schema as the raw one. It launches no Spark job
-    and shuffles nothing. Slices keep the source's row order, and the
-    part names sort in that order, so the staged table concatenated by
-    name equals the raw table, which a test checks with ``Table.equals``.
+    one Arrow read per row group, each cut into contiguous slices, each
+    slice written as one row group with the source's exact Arrow schema
+    — so a nanosecond timestamp stays nanoseconds and Spark reads the
+    staged files with the same schema as the raw one. It launches no
+    Spark job and shuffles nothing. Slices keep the source's row order,
+    and the part names sort in that order, so the staged table
+    concatenated by name equals the raw table, which a test checks
+    with ``Table.equals``.
 
-    Memory: the Arrow read holds the whole decoded row group in driver
-    memory at once, where Spark's one task streamed it in batches. The
-    cost is bounded by one row group, the unit the source's writer
-    already buffered whole, and that is why only single-row-group files
-    are staged. Multi-row-group lakes split at their row groups and are
-    read raw, at any size.
+    Memory: an Arrow read holds one decoded row group in driver memory,
+    where Spark's task streamed it in batches. The cost is bounded by
+    one row group, the unit the source's writer already buffered whole.
+    Files with at least ``n`` row groups already split across every
+    core and are read raw, at any size.
 
     Keying, atomic publication and cleanup are :func:`stage_artifact`'s;
     layout only — row *contents* are identical, which every DuckDB
     oracle (reading the RAW file) re-proves on each gate run.
     """
+    n = min(16, spark.sparkContext.defaultParallelism)
     try:
         import pyarrow.parquet as pq
 
         if (
             os.path.getsize(path) < STAGE_MIN_BYTES
-            or pq.ParquetFile(path).metadata.num_row_groups > 1
+            or pq.ParquetFile(path).metadata.num_row_groups >= n
         ):
             return path  # small, or already splittable: read the raw file
     except Exception:
         return path
-    n = min(16, spark.sparkContext.defaultParallelism)
     return stage_artifact(
         STAGE_DIR, name, sf_dir, name, lambda tmp: _split_parquet(path, tmp, n)
     )
@@ -342,103 +354,6 @@ def write_sink(
     if fmt == "csv":
         writer = writer.option("header", "true")
     getattr(writer, fmt)(path)
-
-
-#: Byte-size suffixes per Spark's JavaUtils.byteStringAsBytes (binary
-#: powers; bare numbers are bytes).
-_BYTE_SUFFIX = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-    "p": 1 << 50, "pb": 1 << 50,
-}
-
-
-def _parse_bytes(raw: str) -> int:
-    """Parse a Spark byte-size conf value ('128m', '1g', '134217728b').
-
-    Stripping non-digits (the old behavior) read '128m' as 128 *bytes*,
-    inflating the split estimate ~10^6x and silently disabling
-    :func:`spread`'s repartition. Mirror Spark's suffix semantics
-    instead; raise on anything unrecognized so the caller falls back to
-    the RDD partition count rather than acting on garbage.
-    """
-    s = raw.strip().lower()
-    num = s.rstrip("kmgtpb")
-    mult = _BYTE_SUFFIX[s[len(num):]]
-    return int(num) * mult
-
-
-def spread(df: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """Round-robin repartition when the source cannot be split.
-
-    The driver test files are single-row-group parquet, so Spark reads
-    each table as ONE partition and any CPU-heavy aggregate runs on
-    one core. This helper pays one cheap shuffle to spread rows across
-    the cluster when (and only when) the scan came back under-split;
-    real multi-row-group/multi-file lakes split at the scan and skip
-    the shuffle entirely.
-    """
-    sc = df.sparkSession.sparkContext
-    n = parallelism or sc.defaultParallelism
-    # Estimate the scan's split count from file sizes instead of
-    # df.rdd.getNumPartitions(): the DF->RDD conversion forces a full
-    # plan analysis (~80 ms per call, paid per profiled table per run);
-    # file listing + stat is sub-millisecond and AQE never *merges*
-    # splits below the size-derived count, so the estimate is exact for
-    # plain file scans.
-    try:
-        files = df.inputFiles()
-        raw = df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728b"
-        )
-        maxpb = _parse_bytes(raw)
-        est = sum(
-            max(1, -(-os.path.getsize(f.removeprefix("file:")) // maxpb))
-            for f in files
-        )
-    except Exception:  # non-file plan or remote FS: fall back to the RDD
-        files = []
-        est = df.rdd.getNumPartitions()
-    if not files:
-        est = df.rdd.getNumPartitions()
-    if n <= est:
-        # already at (or above) the requested parallelism: a
-        # repartition would be a pure extra exchange
-        return df
-    if est < max(2, n // 2):
-        return df.repartition(n)
-    return df
-
-
-def spread_by_size(
-    df: DataFrame, bytes_per_task: int = 8 << 20
-) -> DataFrame:
-    """:func:`spread` with DATA-proportional parallelism.
-
-    For stages whose per-task fixed overhead is material (every
-    Python-boundary stage pays a ~10-20 ms worker handshake per task,
-    measured §4 of OPTIMIZATION_r11), core-count fan-out of a tiny
-    input buys nothing and the handshakes add up. Target a minimum
-    payload per task instead: parallelism = clamp(input_bytes /
-    bytes_per_task, 1, cores). Small corpora stay at their scan split
-    count (no shuffle at all); large corpora fan out to every core —
-    the same call is right at sf0.001 and at 100 TB.
-    """
-    sc = df.sparkSession.sparkContext
-    try:
-        size = sum(
-            os.path.getsize(f.removeprefix("file:"))
-            for f in df.inputFiles()
-        )
-    except Exception:
-        size = 0
-    if not size:
-        return df
-    n = max(1, min(sc.defaultParallelism, -(-size // bytes_per_task)))
-    return spread(df, n)
 
 
 def register_all(

@@ -284,22 +284,3 @@ def test_footer_stats_max_plan_and_path_guards(spark, tmp_path, monkeypatch):
         ModelGraph._parquet_stats_max(spark, "orders", "o_orderdate")
         is None
     )
-
-
-def test_spread_by_size_remote_paths_noop(spark, monkeypatch):
-    """r12 (VERDICT r11 item 7): spread_by_size sizes its fan-out from
-    local file sizes; on a remote filesystem (inputFiles returns
-    hdfs://-shaped paths os.path.getsize cannot stat) it must be a
-    SAFE NO-OP — same DataFrame back, no exception, no repartition."""
-    from gcp_dbt_data_engineering_spark.sources import (
-        load_table,
-        spread_by_size,
-    )
-
-    df = load_table(spark, "/root/testdata/sf0.001", "documents")
-    monkeypatch.setattr(
-        type(df),
-        "inputFiles",
-        lambda self: ["s3a://bucket/warehouse/documents/part-0.parquet"],
-    )
-    assert spread_by_size(df) is df

@@ -6,12 +6,13 @@ from __future__ import annotations
 import datetime
 import decimal
 import importlib.util
+import json
 import os
 
 import duckdb
 
 from gcp_dbt_data_engineering_spark import REPO_ROOT
-from tools.correctness_full import oracle_drift
+from tools.correctness_full import drift_report, oracle_drift
 
 from .oracle_harness import canon, check, result_sha
 
@@ -80,3 +81,23 @@ def test_oracle_drift_lists_changed_and_counts_unrecorded():
         "rows_only": {"hash_match": "rows-only"},
     }
     assert oracle_drift(previous, current) == (["edited"], 2)
+
+
+def test_drift_report_names_its_baseline_or_says_it_compared_nothing(
+    tmp_path,
+):
+    current = {"q": {"oracle_text_sha": "aaaa"}}
+    fields, phrase = drift_report(None, current)
+    assert fields == {
+        "oracle_baseline": None,
+        "oracle_text_changed": None,
+        "oracle_text_unrecorded": None,
+    }
+    assert phrase == "oracle texts not compared"
+    baseline = tmp_path / "CORRECTNESS_x.json"
+    baseline.write_text(json.dumps({"specs": {"q": {"oracle_text_sha": "b"}}}))
+    fields, phrase = drift_report(str(baseline), current)
+    assert fields["oracle_baseline"].endswith("CORRECTNESS_x.json")
+    assert fields["oracle_text_changed"] == ["q"]
+    assert fields["oracle_text_unrecorded"] == 0
+    assert phrase == "1 oracle texts changed"

@@ -2,8 +2,8 @@
 
 Round 10 shipped a plan audit generated hours BEFORE the last engine
 change, so the committed 100-TB-posture artifact no longer described
-HEAD's physical plans (the ``spread()`` cache-build exchange was
-missing from eight specs). This test re-audits a fixed sample of
+HEAD's physical plans (a cache-build repartition exchange of the
+``_quantized`` memo was missing from eight specs). This test re-audits a fixed sample of
 specs live — the whole ``_quantized`` family (the one that went stale)
 plus shape-diverse representatives — and asserts the committed
 per-spec feature rows still match exactly. Regenerate with
@@ -86,9 +86,9 @@ def test_plan_audit_matches_head(spark):
         # a memo such as _quantized has been EXECUTED — by an earlier
         # test, or by a sampled spec's own builder (dedup_semantic fits
         # k-means eagerly) — its materialized InMemoryRelation prints
-        # the finalized cached plan, including the spread() cache-build
-        # repartition exchange, inside every later consumer's formatted
-        # explain (reproduced: pq_adc.toArrow() first => 23/5/10/12 vs
+        # the finalized cached plan, including the exchanges of its
+        # build, inside every later consumer's formatted explain
+        # (reproduced: pq_adc.toArrow() first => 23/5/10/12 vs
         # 22/4/9/11; clear_caches restores the committed counts).
         clear_caches(spark)
         live = audit_spec(queries[name](spark, SF))

@@ -33,30 +33,28 @@ BUDGETS = {
     # all 7 parent sides broadcast at this SF
     "dq_referential_integrity": (21, 7),
     # map explode + per-key agg + countDistinct expand
-    "events_props_udtf_stats": (3, 0),
-    "text_token_stats": (2, 0),
+    "events_props_udtf_stats": (2, 0),
+    "text_token_stats": (1, 0),
     # sketch build + empty-bucket fill + exact-distinct rider
     "sketch_hll_distinct_users": (6, 1),
     # benchmark side broadcast, corpus side streams
-    "contamination_external_bench": (6, 1),
+    "contamination_external_bench": (5, 1),
     # r5: top-k mass now comes from a TakeOrdered limit branch (its own
     # count-agg exchange per key column) instead of a global row_number
     # window — two more exchanges per key, zero single-task sorts
     "events_key_skew_stats": (8, 0),  # 1-row topk attaches as BNLJ, not BHJ
     # round-6 waves: both bucket LMs broadcast, final top-K is a
     # TakeOrdered (asserted below), never a global sort
-    "dsir_importance_selection": (16, 2),
-    # centroid dim broadcasts; scoring map-side; +1 exchange is the
-    # r10 spread() round-robin repartition at _quantized cache build
-    # (operators/similarity.py:118-127) — paid once to break the
-    # 2-task fat-row-group parquet bottleneck at sf100
-    "embeddings_outlier_audit": (8, 2),
+    "dsir_importance_selection": (10, 2),
+    # centroid dim broadcasts; scoring map-side over the _quantized
+    # memo, which inherits the staged scan's split (no repartition)
+    "embeddings_outlier_audit": (6, 2),
     # histogram threshold broadcasts; boundary window keys (lang, q)
-    "token_budget_select": (8, 1),
+    "token_budget_select": (5, 1),
     # df-filter joins on the 8-byte hash; per-doc island windows
-    "dedup_repeated_spans": (9, 1),
+    "dedup_repeated_spans": (7, 1),
     # one tokenizer projection + dedup-hash window + lang agg, no joins
-    "curate_corpus_funnel": (4, 0),
+    "curate_corpus_funnel": (2, 0),
     # <=10-bucket conditional agg + broadcast totals
     "dq_psi_drift": (5, 0),
     # one user-partition carrying all three stage minima
@@ -71,7 +69,7 @@ BUDGETS = {
     # over-cap rows enter the ranking window
     "domain_cap_downsample": (7, 2),
     # shingle relation + one hash window + per-doc agg
-    "text_ngram_novelty": (4, 0),
+    "text_ngram_novelty": (2, 0),
     # daily rollup + per-weekday window over one row per day
     "events_seasonal_baseline": (2, 0),
     # B partial (Σw, Σw·x) pairs per map task; 1-row CI/point sides
@@ -87,12 +85,11 @@ BUDGETS = {
     "customer_revenue_gini": (14, 1),
     # 60-bit fingerprint, single-SQL compile; one groupBy(doc_id), one
     # 5-chunk candidate join on the banded key
-    "dedup_simhash": (8, 0),
+    "dedup_simhash": (5, 0),
     # MinHash signatures are array_min projections over the shingle-set
-    # memo (no groupBy(doc_id)); the count includes the memo's own
-    # cached lineage (repartition on doc_id) and the band self-join +
-    # candidate distinct + two verify joins
-    "dedup_minhash_lsh": (11, 0),
+    # memo (no groupBy(doc_id)); the band self-join + candidate
+    # distinct + two verify joins
+    "dedup_minhash_lsh": (4, 0),
     # top-V vocab broadcast, doc-keyed self-join, broadcast total
     "text_pmi_cooccurrence": (13, 2),
     # daily rollup + bounded calendar windows
@@ -138,6 +135,48 @@ def test_plan_shape_budget(spark, name):
         f"{name}: {got_bcast} broadcast joins < required {min_bcast}"
     )
     assert "Scan parquet" in p or "FileScan" in p  # really reads files
+
+
+#: specs that read the corpus or events scan, or a memo built from it:
+#: the staged scan of ``sources.load_table`` is the one place that
+#: splits a source across cores, so none of them may add a
+#: RoundRobinPartitioning of its own.
+STAGED_SPLIT_SPECS = (
+    "boilerplate_chunk_filter",
+    "curate_corpus_funnel",
+    "dedup_semantic",
+    "dsir_importance_selection",
+    "embeddings_outlier_audit",
+    "events_props_udtf_stats",
+    "events_props_variant_stats",
+    "similarity_ann_ivf",
+    "similarity_ann_ivf_kmeans",
+    "similarity_ann_lsh",
+    "similarity_pq_adc",
+    "similarity_pq_ivf",
+    "similarity_topk_cosine",
+    "text_bigram_logprob",
+    "text_char_entropy",
+    "text_gopher_repetition",
+    "text_language_id",
+    "text_quality_classifier",
+    "text_quality_score",
+    "text_rake_keywords",
+    "text_sentiment_lexicon",
+    "text_tfidf_top_terms",
+    "text_token_stats",
+    "text_unigram_logprob",
+    "token_budget_select",
+)
+
+
+def test_no_round_robin_repartition(spark):
+    round_robin = [
+        name
+        for name in STAGED_SPLIT_SPECS
+        if "RoundRobinPartitioning" in _plan(spark, name)
+    ]
+    assert round_robin == []
 
 
 #: specs rewritten from low-cardinality window partitions (VERDICT r4

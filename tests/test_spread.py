@@ -1,55 +1,16 @@
-"""spread(): file-size-based split estimation (no df.rdd analysis), and
-the registry's staging of single-row-group tables."""
+"""The registry's staging of tables with fewer row groups than cores,
+and the session memo caches over the staged scans."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from gcp_dbt_data_engineering_spark import ARTIFACTS_DIR
-from gcp_dbt_data_engineering_spark.sources import load_table, spread
 from gcp_dbt_data_engineering_spark.sources import registry as reg
 from gcp_dbt_data_engineering_spark.status import StatusReader
-
-
-ART = os.path.join(ARTIFACTS_DIR, "spread_test")
-
-
-def test_single_split_fixture_gets_repartitioned(spark):
-    df = load_table(spark, "/root/testdata/sf0.001", "orders")
-    out = spread(df)
-    assert out is not df  # one small file -> repartition applied
-    assert out.rdd.getNumPartitions() >= 8
-
-
-def test_multi_file_source_left_alone(spark):
-    shutil.rmtree(ART, ignore_errors=True)
-    load_table(spark, "/root/testdata/sf0.001", "orders").repartition(
-        8
-    ).write.parquet(ART)
-    df = spark.read.parquet(ART)
-    # 8 files >= max(2, defaultParallelism // 2) on local[8] -> the
-    # scan is already split; spread must be a no-op (no extra shuffle)
-    assert spread(df) is df
-    shutil.rmtree(ART, ignore_errors=True)
-
-
-def test_parse_bytes_suffixes():
-    from gcp_dbt_data_engineering_spark.sources.registry import _parse_bytes
-
-    assert _parse_bytes("134217728b") == 128 << 20
-    assert _parse_bytes("128m") == 128 << 20
-    assert _parse_bytes("128MB") == 128 << 20
-    assert _parse_bytes("1g") == 1 << 30
-    assert _parse_bytes("64") == 64
-    import pytest
-
-    with pytest.raises(Exception):
-        _parse_bytes("128x")
 
 
 def test_clear_caches_unpersists(spark):
@@ -192,22 +153,53 @@ def test_staging_launches_no_spark_job(spark, stage_dir):
     assert reader.read()["jobs"] == 0
 
 
-def test_staged_parts_concatenate_to_the_raw_table(spark, stage_dir):
+def _write_row_groups(sf: str, name: str, groups: int) -> str:
+    """Write a ``groups``-row-group table of at least STAGE_MIN_BYTES."""
+    rows = 64_000
+    os.makedirs(sf)
+    path = reg.table_path(sf, name)
+    keys = [(i * 2_654_435_761) % (1 << 61) for i in range(rows)]
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array(keys, type=pa.int64()),
+                "s": pa.array([f"v{k % 10_007}" for k in keys]),
+            }
+        ),
+        path,
+        row_group_size=-(-rows // groups),
+    )
+    assert os.path.getsize(path) >= reg.STAGE_MIN_BYTES
+    assert pq.ParquetFile(path).metadata.num_row_groups == groups
+    return path
+
+
+def test_staged_parts_concatenate_to_the_raw_table(spark, tmp_path, stage_dir):
     """Each staged part is one row group; in part order the parts are
-    the raw table, schema and schema metadata included."""
+    the raw table, schema and schema metadata included. A source with
+    fewer row groups than cores is staged into at least one part per
+    core; one with at least as many row groups is read raw."""
     sf = "/root/testdata/sf0.1"
     n = min(16, spark.sparkContext.defaultParallelism)
-    for name in STAGED_SF01:
-        path = reg.table_path(sf, name)
-        staged = reg._stage_if_unsplittable(spark, path, name, sf)
+    sf2 = str(tmp_path / "sf2")
+    _write_row_groups(sf2, "orders", 2)
+    inputs = [(sf, name) for name in STAGED_SF01] + [(sf2, "orders")]
+    for sf_dir, name in inputs:
+        path = reg.table_path(sf_dir, name)
+        staged = reg._stage_if_unsplittable(spark, path, name, sf_dir)
         assert staged.startswith(stage_dir), name
         parts = _parts(staged)
-        assert len(parts) == n, name
+        assert len(parts) >= n, name
+        if pq.ParquetFile(path).metadata.num_row_groups == 1:
+            assert len(parts) == n, name
         assert all(
             pq.ParquetFile(f).metadata.num_row_groups == 1 for f in parts
         ), name
         got = pa.concat_tables(pq.read_table(f) for f in parts)
         assert got.equals(pq.read_table(path), check_metadata=True), name
+    sfn = str(tmp_path / "sfn")
+    many = _write_row_groups(sfn, "orders", max(2, n))
+    assert reg._stage_if_unsplittable(spark, many, "orders", sfn) == many
 
 
 def test_staged_nanos_nulls_and_lists_read_like_the_raw_file(
@@ -304,17 +296,8 @@ def test_staging_reaps_a_dead_writers_tmp_dir(spark, tmp_path, stage_dir):
     one may belong to a live writer and stays."""
     import time
 
-    rows = 60_000
     sf = str(tmp_path / "sfreap")
-    os.makedirs(sf)
-    path = reg.table_path(sf, "orders")
-    keys = [(i * 2_654_435_761) % (1 << 61) for i in range(rows)]
-    pq.write_table(
-        pa.table({"k": pa.array(keys, type=pa.int64())}),
-        path,
-        row_group_size=rows,
-    )
-    assert os.path.getsize(path) >= reg.STAGE_MIN_BYTES
+    path = _write_row_groups(sf, "orders", 1)
     os.makedirs(stage_dir)
     dead = os.path.join(stage_dir, "orders@sfreap-1-1.tmp-999999")
     live = os.path.join(stage_dir, "orders@sfreap-1-1.tmp-999998")

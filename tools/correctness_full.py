@@ -17,7 +17,10 @@ Oracle-drift guard: each record carries ``oracle_text_sha`` (a hash of
 the oracle SQL text). Before overwriting its output file the run reads
 the recorded hashes, prints the specs whose oracle text changed and
 stores them as ``oracle_text_changed``; specs with no recorded hash are
-counted under ``oracle_text_unrecorded``.
+counted under ``oracle_text_unrecorded``. The file compared against is
+recorded as ``oracle_baseline``; when the output file does not exist
+yet there is nothing to compare, the baseline and both drift fields are
+``null`` and the summary says "oracle texts not compared".
 
 Run:  python tools/correctness_full.py [sf_dir]
 """
@@ -50,6 +53,27 @@ def oracle_drift(previous: dict, current: dict) -> tuple[list[str], int]:
         elif old != rec["oracle_text_sha"]:
             changed.append(name)
     return changed, unrecorded
+
+
+def drift_report(baseline: str | None, current: dict) -> tuple[dict, str]:
+    """The drift fields of the output JSON for ``current`` compared
+    against the ``baseline`` gate file (``None``: no file), and the
+    summary line's drift phrase."""
+    if baseline is None:
+        fields = dict.fromkeys(
+            ("oracle_baseline", "oracle_text_changed", "oracle_text_unrecorded")
+        )
+        return fields, "oracle texts not compared"
+    with open(baseline) as f:
+        changed, unrecorded = oracle_drift(json.load(f).get("specs", {}), current)
+    for name in changed:
+        print(f"ORACLE TEXT CHANGED {name}")
+    fields = {
+        "oracle_baseline": os.path.relpath(baseline, REPO),
+        "oracle_text_changed": changed,
+        "oracle_text_unrecorded": unrecorded,
+    }
+    return fields, f"{len(changed)} oracle texts changed"
 
 
 def main() -> int:
@@ -138,13 +162,9 @@ def main() -> int:
     path = os.path.join(
         REPO, os.environ.get("CORRECTNESS_OUT", "CORRECTNESS_full.json")
     )
-    previous: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            previous = json.load(f).get("specs", {})
-    changed, unrecorded = oracle_drift(previous, out)
-    for name in changed:
-        print(f"ORACLE TEXT CHANGED {name}")
+    drift, drift_phrase = drift_report(
+        path if os.path.exists(path) else None, out
+    )
     with open(path, "w") as f:
         json.dump(
             {
@@ -153,8 +173,7 @@ def main() -> int:
                 "n_pass": n_pass,
                 "n_rows_only": n_weak,
                 "n_fail": n_fail,
-                "oracle_text_changed": changed,
-                "oracle_text_unrecorded": unrecorded,
+                **drift,
                 "specs": out,
             },
             f,
@@ -162,8 +181,7 @@ def main() -> int:
         )
     print(
         f"\ncorrectness_full: {len(specs)} specs — {n_pass} exact-pass, "
-        f"{n_weak} rows-only, {n_fail} fail, {len(changed)} oracle texts "
-        f"changed -> {path}"
+        f"{n_weak} rows-only, {n_fail} fail, {drift_phrase} -> {path}"
     )
     spark.stop()
     return 1 if n_fail else 0
