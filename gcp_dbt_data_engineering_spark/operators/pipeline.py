@@ -50,10 +50,13 @@ def _contam_shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, source, 5-gram hash) rows, staged once.
 
     A lazily persisted :func:`session.memo` entry: the 5-gram fold is
-    the CPU of both contamination operators, and this is the relation
-    a production pipeline materializes per corpus snapshot. It stays
-    separate from dedup's 3-gram ``_shingle_sets`` artifact: different
-    shingle width, rows keyed by ``source`` as well as ``doc_id``.
+    the CPU of :func:`contamination_ngram_check`, its only reader, and
+    this is the relation a production pipeline materializes per corpus
+    snapshot. :func:`contamination_external_bench` does not read it: it
+    joins the corpus's distinct 5-gram hashes against a broadcast
+    phrase set straight from the scan. It stays separate from dedup's
+    3-gram ``_shingle_sets`` artifact: different shingle width, rows
+    keyed by ``source`` as well as ``doc_id``.
     """
 
     def build() -> DataFrame:
@@ -82,16 +85,16 @@ def contamination_ngram_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     sh = _contam_shingle_rows(spark, sf_dir)
-    # Single-pass shape: referencing `sh` from separate bench/candidate
-    # branches makes Spark recompute the shingle fold once PER BRANCH
-    # (filter pushdown specializes each branch's scan, so no exchange
-    # reuse — measured 3x the operator's CPU), and a persist() would
-    # leak cached blocks into the caller's session. Instead flag each
-    # hash's bench membership with one window over h — shingles are
-    # computed exactly once, no cache, no broadcast build. At 100 TB
-    # with a small benchmark set, stage `sh` to a table once and use
-    # the broadcast semi-join variant instead; the window-by-h shuffle
-    # here is the right trade only while the corpus side dominates.
+    # Single-pass shape: `sh` is the persisted memo, but splitting it
+    # into separate bench/candidate branches still costs two reads of
+    # the cached blocks and a join between them (and, before the memo
+    # existed, recomputed the shingle fold once PER BRANCH — measured
+    # 3x the operator's CPU). Instead flag each hash's bench
+    # membership with one window over h — the memo is read exactly
+    # once, no broadcast build. At 100 TB with a small benchmark set,
+    # stage `sh` to a table once and use the broadcast semi-join
+    # variant instead; the window-by-h shuffle here is the right trade
+    # only while the corpus side dominates.
     in_bench = F.max(
         F.when(F.col("source").isin(*BENCH_SOURCES), 1).otherwise(0)
     ).over(Window.partitionBy("h"))

@@ -32,10 +32,6 @@ from .spec import (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # flagship: revenue by region (TPC-H Q5 shape)
 # Exercises the reference's join surface (dq_sql_notes.md:35-43 equi-join
@@ -43,14 +39,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
     )
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     # orders is date-pruned but still fact-sized → shuffle join with
     # lineitem on the key; customer/nation/region are dims → broadcast.
     return (
@@ -89,7 +85,7 @@ GROUP BY r_name
 # ---------------------------------------------------------------------------
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp_ntz")
     )
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -129,9 +125,9 @@ GROUP BY l_returnflag, l_linestatus
 
 def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1996-03-15").cast("timestamp_ntz")
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     agg = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -168,11 +164,11 @@ LIMIT 10
 # ---------------------------------------------------------------------------
 
 def order_priority_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
     )
-    returned = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    returned = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         orders.join(
             returned, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi"
@@ -199,8 +195,8 @@ GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .groupBy("c_mktsegment")
@@ -226,8 +222,8 @@ GROUP BY c_mktsegment
 # ---------------------------------------------------------------------------
 
 def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     joined = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
     return joined.agg(
@@ -260,8 +256,8 @@ FROM agg
 # ---------------------------------------------------------------------------
 
 def top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     per_cust = orders.groupBy("o_custkey").agg(
         money_sum(F.col("o_totalprice"), "revenue"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -295,9 +291,9 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def supplier_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -325,7 +321,7 @@ GROUP BY n_name
 # ---------------------------------------------------------------------------
 
 def brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return part.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_parts"),
         money_avg(F.col("p_retailprice"), "avg_price"),
@@ -351,7 +347,7 @@ GROUP BY p_brand
 # ---------------------------------------------------------------------------
 
 def events_daily_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.col("ts").cast("date").alias("day"),
@@ -381,7 +377,7 @@ GROUP BY CAST(ts AS DATE), event_type
 # ---------------------------------------------------------------------------
 
 def events_json_k_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("bigint")
     return (
         ev.select(k.alias("k"), F.col("value"))
@@ -421,8 +417,8 @@ TOLERANCE_FACTOR = 0.5
 
 
 def price_tolerance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice"
     )
     # unit price is UNDEFINED for l_quantity <= 0: such a line cannot
@@ -491,7 +487,7 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
 def events_daily_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.col("ts").cast("date").cast("string")
     )
     piv = (
@@ -536,7 +532,7 @@ def orders_rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame
     # sum and the (status) / () groupings re-aggregate it losslessly
     # (counts add; decimal sums add exactly; one double cast per
     # output row) — also cheaper than Expand-based rollup at scale.
-    od = _t(spark, sf_dir, "orders")
+    od = load_table(spark, sf_dir, "orders")
     g = od.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(22,6)")).alias("dp"),
@@ -592,7 +588,7 @@ SALT = 16
 
 
 def events_type_value_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     partial = (
         ev.withColumn("salt", (F.col("event_id") % SALT).cast("int"))
         .groupBy("event_type", "salt")
@@ -643,7 +639,7 @@ def events_salted_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicated side is too big to broadcast but far smaller than the
     skewed fact side.)
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     dim = spark.createDataFrame(
         [(t, w) for t, w in sorted(TYPE_DIM.items())],
         "event_type string, weight int",
@@ -712,7 +708,7 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     of each suffices. The oracle keeps the textbook full-outer SQL,
     re-proving the fold equivalent on every gate run.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
 
     def _in(win) -> F.Column:
         lo, hi = win
@@ -804,7 +800,7 @@ def events_props_udtf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     coerce to their literal text, matching the oracle's
     ``json_extract_string``.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             F.explode(F.from_json("props", "map<string,string>")).alias(
@@ -849,7 +845,7 @@ def props_explode_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         yield event_id, k, str(v)
 
     spark.udtf.register("props_explode", PropsExplode)
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
+    load_table(spark, sf_dir, "events").createOrReplaceTempView(
         "__events_udtf_src"
     )
     return spark.sql("""
@@ -877,7 +873,7 @@ def events_props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a non-integral ``$.k`` becomes NULL like the oracle's
     TRY_CAST, instead of a runtime error.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.selectExpr(
             "event_type",

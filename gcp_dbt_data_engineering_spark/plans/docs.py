@@ -61,29 +61,32 @@ def generate_docs(
 ) -> dict[str, Any]:
     """Manifest + catalog for every model in ``graph``.
 
-    Materializes the graph (idempotent — same ``run`` the specs use),
-    then records per model: config, DAG edges, schema.yml docs, and
-    the observed Spark schema. Ephemeral models appear in the manifest
+    Materializes the graph (idempotent — same ``run`` the specs use,
+    target/ included), then records per model what that walk recorded
+    — the resolved config and the compiled SQL, exactly as written to
+    ``target/compiled/`` — plus DAG edges, schema.yml docs, and the
+    observed Spark schema. Ephemeral models appear in the manifest
     (they have SQL and dependents) but not in the catalog (they are
     never materialized — dbt does the same).
     """
     schema_info = schema_info or {}
-    materialized = graph.run(spark)
     manifest: dict[str, Any] = {}
     catalog: dict[str, Any] = {}
-    for name in graph.topo_order():
+    for rec in graph._run_records(spark):
+        if rec["kind"] != "model":
+            continue
+        name = rec["node"]
         model = graph.models[name]
-        sql, cfg = model.render(graph.defaults)
         info = schema_info.get(name, {})
         manifest[name] = {
             "raw_sql": model.raw_sql.strip(),
-            "compiled_sql": sql,
-            "config": cfg,
+            "compiled_sql": rec["compiled_sql"],
+            "config": rec["config"],
             "depends_on": [r for r in model.refs if r in graph.models],
             "description": info.get("description", ""),
             "columns": info.get("columns", {}),
         }
-        if name in materialized:
+        if rec["df"] is not None:
             catalog[name] = {
                 "columns": [
                     {
@@ -91,7 +94,7 @@ def generate_docs(
                         "dtype": f.dataType.simpleString(),
                         "nullable": f.nullable,
                     }
-                    for f in materialized[name].schema.fields
+                    for f in rec["df"].schema.fields
                 ]
             }
     return {"manifest": manifest, "catalog": catalog}

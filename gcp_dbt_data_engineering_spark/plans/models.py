@@ -45,6 +45,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
@@ -103,7 +104,6 @@ def _recover_swap(path: str) -> None:
     * otherwise → the staging write itself died; drop the partial
       staging and roll BACK to ``__old`` if present.
     """
-    import shutil
 
     staging, old = f"{path}__staging", f"{path}__old"
     if os.path.exists(path):
@@ -133,7 +133,6 @@ def _swap_in(path: str, staging: str) -> None:
     On HDFS/S3A the same protocol holds (dir rename is atomic on HDFS;
     on S3 this seam is where a transactional table format plugs in).
     """
-    import shutil
 
     old = f"{path}__old"
     shutil.rmtree(old, ignore_errors=True)
@@ -250,6 +249,119 @@ def _table_lock(path: str, ttl_s: float = _LOCK_TTL_S):
             os.rmdir(lock)
         except OSError:
             pass
+
+
+def _merge_rows(
+    name: str, batch: DataFrame, prior: DataFrame | None, cfg: dict
+) -> DataFrame:
+    """dbt's incremental ``unique_key`` strategy: rows in this batch
+    REPLACE prior rows with the same key, all other prior rows survive
+    (anti-join + union; :meth:`ModelGraph._publish` swaps it in)."""
+    key = cfg.get("unique_key")
+    if not key:
+        raise ValueError(f"merge model {name} needs unique_key")
+    if prior is None:
+        return batch
+    keys = [k.strip() for k in key.split(",")]
+    # the batch is consumed TWICE — once to build the broadcast
+    # anti-join key set, once in the union. A lazy persist() is NOT
+    # enough: inside the one write action the broadcast-build thread
+    # and the union both race the cache fill and each recompute the
+    # full batch aggregate from the source scan (measured r12: the
+    # 16-task scan+agg ran 3x per batch, 5 jobs). An EAGER
+    # localCheckpoint runs the aggregate exactly once and cuts the
+    # lineage, so both consumers read the checkpointed blocks (guide
+    # §5; same device the incremental self-ref path uses). The batch
+    # is one run's output slice, small by construction; blocks are
+    # freed by the context cleaner when the handle drops.
+    batch = batch.localCheckpoint(eager=True)
+    # no .distinct() on the key set: left_anti drops a row if ANY
+    # build-side match exists, so duplicate keys cannot change the
+    # result — the distinct only shrank the broadcast, at the price of
+    # a 2-job shuffle over the checkpointed batch. dbt's merge contract
+    # has ~1 row per unique_key per batch, so the broadcast is the same
+    # size without it. No forced-broadcast hint: the planner/AQE picks
+    # BHJ when the key projection fits (verified) and may demote to a
+    # shuffled join for a batch too big to broadcast safely at scale.
+    survivors = prior.join(batch.select(*keys), on=keys, how="left_anti")
+    return survivors.unionByName(batch)
+
+
+def _snapshot_rows(
+    name: str, batch: DataFrame, prior: DataFrame | None, cfg: dict
+) -> DataFrame:
+    """dbt snapshot, timestamp strategy (SCD2).
+
+    The reference declares snapshots/ (dbt_project.yml:19) but ships
+    none — this supplies the materialization. A source row whose
+    ``updated_at`` is newer than the open version's closes it
+    (``valid_to`` = new ``updated_at``) and opens a new version;
+    replaying a batch is a no-op (equal ``updated_at`` is not newer).
+    """
+    from pyspark.sql.window import Window
+
+    key = cfg.get("unique_key")
+    updated = cfg.get("updated_at")
+    if not key or not updated:
+        raise ValueError(
+            f"snapshot model {name} needs unique_key + updated_at"
+        )
+    # dbt snapshot semantics assume one row per unique_key per batch; a
+    # batch carrying several versions of a key would open multiple
+    # valid_to-NULL rows and double-close the prior version on the next
+    # run. Keep only the latest updated_at per key (window, one shuffle
+    # on the key — same key the joins below shuffle on anyway). Ties on
+    # (key, updated_at) with DIFFERENT payloads would otherwise pick an
+    # arbitrary survivor (dbt errors on such batches); a stable hash of
+    # the remaining columns makes the survivor deterministic across
+    # runs and partitionings.
+    payload = [c for c in batch.columns if c not in (key, updated)]
+    rn = F.row_number().over(
+        Window.partitionBy(key).orderBy(
+            F.col(updated).desc(),
+            *([F.xxhash64(*payload).desc()] if payload else []),
+        )
+    )
+    batch = (
+        batch.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
+    )
+    src = batch.withColumn("valid_from", F.col(updated)).withColumn(
+        "valid_to", F.lit(None).cast(batch.schema[updated].dataType)
+    )
+    if prior is None:
+        return src
+    is_open = F.col("valid_to").isNull()
+    closed = prior.filter(~is_open)
+    opened = prior.filter(is_open)
+    newer = src.select(
+        F.col(key).alias("__k"), F.col(updated).alias("__new_upd")
+    )
+    joined = opened.join(newer, opened[key] == F.col("__k"), "left")
+    still_open = joined.filter(
+        F.col("__new_upd").isNull() | (F.col("__new_upd") <= F.col(updated))
+    ).select(*prior.columns)
+    now_closed = (
+        joined.filter(F.col("__new_upd") > F.col(updated))
+        .withColumn("valid_to", F.col("__new_upd"))
+        .select(*prior.columns)
+    )
+    # new versions: keys that closed a row or are new
+    prior_upd = opened.select(
+        F.col(key).alias("__pk"), F.col(updated).alias("__prior_upd")
+    )
+    fresh = (
+        src.join(prior_upd, src[key] == F.col("__pk"), "left")
+        .filter(
+            F.col("__prior_upd").isNull()
+            | (F.col(updated) > F.col("__prior_upd"))
+        )
+        .select(*src.columns)
+    )
+    return (
+        closed.unionByName(still_open)
+        .unionByName(now_closed)
+        .unionByName(fresh)
+    )
 
 
 def _seed_reader(spark):
@@ -494,6 +606,27 @@ class Model:
         return sql.strip(), cfg
 
 
+def _inliner(ephemeral: dict[str, str]):
+    """ref() resolver: an ephemeral model's rendered SQL inlines as a
+    parenthesized subquery; any other ref names its relation."""
+    return lambda n: f"({ephemeral[n]})" if n in ephemeral else n
+
+
+#: the fields of a walk record that ``build`` returns
+_STATUS_KEYS = ("node", "kind", "status", "detail", "failures_table")
+
+
+def _reported(rec: dict) -> bool:
+    """Whether a walk record is a node ``build`` reports and ``run``
+    returns: every error (a dependency seed's or an ephemeral's failure
+    is the visible root cause of its dependents' skips), and otherwise
+    the selected seeds, the non-ephemeral models and the tests."""
+    return rec["status"] == "error" or (
+        rec["kind"] != "seed (dependency)"
+        and rec.get("config", {}).get("materialized") != "ephemeral"
+    )
+
+
 class ModelGraph:
     """Load, topo-sort, and materialize a set of SQL models.
 
@@ -627,6 +760,11 @@ class ModelGraph:
             cfg.update(self.dir_defaults[best])
         return cfg
 
+    def _config(self, name: str) -> dict:
+        """A model's resolved config (graph < directory < inline),
+        without rendering its refs or sources."""
+        return self.models[name].render(self._defaults_for(name))[1]
+
     def _source_relation(self, src: str, table: str) -> str:
         """Resolve ``{{ source('src', 'table') }}`` to its relation.
 
@@ -644,14 +782,14 @@ class ModelGraph:
 
     def _render_node(
         self, name: str, resolve, full_refresh: bool = False
-    ) -> tuple[str, dict, bool]:
+    ) -> tuple[str, bool]:
         """Full render of one model: config + ref()/source() + the
         ``{% if is_incremental() %}`` guard + ``{{ this }}``.
 
         is_incremental() is true iff the materialization carries state
         (incremental/merge/snapshot), the target already exists, and
         the run is not a full refresh — dbt's exact rule. Returns
-        (sql, cfg, incremental_active)."""
+        (sql, incremental_active)."""
         sql, cfg = self.models[name].render(
             self._defaults_for(name), resolve, self._source_relation
         )
@@ -664,7 +802,7 @@ class ModelGraph:
             lambda m: m.group(1) if active else " ", sql
         )
         sql = _THIS_RE.sub(name, sql)
-        return sql.strip(), cfg, active
+        return sql.strip(), active
 
     @staticmethod
     def _freshness_hours(spec: dict | None) -> float | None:
@@ -969,26 +1107,24 @@ class ModelGraph:
         ``ref()`` them. Returns name → DataFrame. ``names`` narrows to
         a selected subset (dbt --select covers seed nodes).
         """
-        out: dict[str, DataFrame] = {}
-        for name, path in sorted(self.seeds.items()):
-            if names is not None and name not in names:
-                continue
-            schema = self.seed_schemas.get(name)
-            reader = _seed_reader(spark)
-            if schema:
-                reader = reader.schema(schema)
-            else:
-                reader = reader.option("inferSchema", "true")
-            df = reader.csv(path)
-            wpath = f"{self.warehouse_dir}/{name}"
-            df.write.options(**_NO_SUCCESS).mode("overwrite").parquet(wpath)
-            # stub + read_table: the read-back resolves its schema from
-            # the stub (catalog role) instead of a footer-inference job
-            _write_schema_stub(wpath, df)
-            df = read_table(spark, wpath)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-        return out
+        return {
+            name: self._load_seed(spark, name)
+            for name in sorted(self.seeds)
+            if names is None or name in names
+        }
+
+    def _load_seed(self, spark: SparkSession, name: str) -> DataFrame:
+        """Load one csv seed and publish it like a ``table`` model.
+
+        Column types come from ``seed_schemas`` (dbt's
+        ``column_types``), else from csv inference."""
+        schema = self.seed_schemas.get(name)
+        reader = _seed_reader(spark)
+        if schema:
+            reader = reader.schema(schema)
+        else:
+            reader = reader.option("inferSchema", "true")
+        return self._publish(spark, name, reader.csv(self.seeds[name]), {})
 
     def _seeds_for(self, selected: set[str]) -> set[str]:
         """Seeds that must be LOADED for this selection: the selected
@@ -1006,63 +1142,61 @@ class ModelGraph:
         Non-ephemeral ancestors stop the walk: their relations must
         already exist per run()'s contract, seeds included."""
         needed = {s for s in self.seeds if s in selected}
-
-        def _ephemeral(n: str) -> bool:
-            _, cfg = self.models[n].render(self._defaults_for(n))
-            return cfg.get("materialized", "view") == "ephemeral"
-
         stack = [n for n in selected if n in self.models]
         seen = set(stack)
         while stack:
             for r in self.models[stack.pop()].refs:
                 if r in self.seeds:
                     needed.add(r)
-                elif r in self.models and r not in seen and _ephemeral(r):
+                elif (
+                    r in self.models
+                    and r not in seen
+                    and self._config(r)["materialized"] == "ephemeral"
+                ):
                     seen.add(r)
                     stack.append(r)
         return needed
 
     def clean(self) -> None:
         """``dbt clean``: drop the target and warehouse artifacts."""
-        import shutil
-
         for d in (self.target_dir, self.warehouse_dir):
             if d:
                 shutil.rmtree(d, ignore_errors=True)
 
-    def _write_compiled(
-        self,
-        compiled: dict[str, tuple[str, dict]],
-        analyses: dict[str, str] | None = None,
-    ) -> None:
-        """Persist rendered SQL + resolved configs (``dbt compile``);
-        analyses land under compiled/analyses/, models in compiled/."""
+    def _write_compiled(self, records: list[dict]) -> None:
+        """Persist rendered SQL + resolved configs (``dbt compile``):
+        every model the walk rendered lands in compiled/; analyses,
+        rendered with the same ref()/ephemeral inlining and never run,
+        in compiled/analyses/."""
         if not self.target_dir:
             return
-        import json
-
+        compiled = [r for r in records if r.get("compiled_sql") is not None]
+        ephemeral = [r for r in compiled if r["config"]["materialized"] == "ephemeral"]
+        resolve = _inliner({r["node"]: r["compiled_sql"] for r in ephemeral})
+        # (manifest key, path under compiled/, sql, config, refs)
+        entries = [
+            (r["node"], f"{r['node']}.sql", r["compiled_sql"], r["config"],
+             self.models[r["node"]].refs)
+            for r in compiled
+        ]
+        for name, raw in self.analyses.items():
+            sql, _ = Model(name, raw).render(
+                self._defaults_for(name), resolve, self._source_relation
+            )
+            entries.append((f"analysis:{name}", f"analyses/{name}.sql", sql,
+                            {"materialized": "analysis"}, _REF_RE.findall(raw)))
         cdir = os.path.join(self.target_dir, "compiled")
-        os.makedirs(cdir, exist_ok=True)
+        os.makedirs(
+            os.path.join(cdir, "analyses") if self.analyses else cdir,
+            exist_ok=True,
+        )
         manifest = {}
-        for name, (sql, cfg) in compiled.items():
-            with open(os.path.join(cdir, f"{name}.sql"), "w") as f:
+        for key, rel, sql, cfg, refs in entries:
+            with open(os.path.join(cdir, rel), "w") as f:
                 f.write(sql + "\n")
-            manifest[name] = {
-                "config": cfg,
-                "refs": self.models[name].refs,
-                "compiled_path": f"compiled/{name}.sql",
+            manifest[key] = {
+                "config": cfg, "refs": refs, "compiled_path": f"compiled/{rel}"
             }
-        if analyses:
-            adir = os.path.join(cdir, "analyses")
-            os.makedirs(adir, exist_ok=True)
-            for name, sql in analyses.items():
-                with open(os.path.join(adir, f"{name}.sql"), "w") as f:
-                    f.write(sql + "\n")
-                manifest[f"analysis:{name}"] = {
-                    "config": {"materialized": "analysis"},
-                    "refs": _REF_RE.findall(self.analyses[name]),
-                    "compiled_path": f"compiled/analyses/{name}.sql",
-                }
         with open(os.path.join(self.target_dir, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
 
@@ -1090,12 +1224,8 @@ class ModelGraph:
         return edges
 
     def _node_tags(self, name: str) -> set[str]:
-        _, cfg = self.models[name].render(self._defaults_for(name))
-        return {
-            t.strip()
-            for t in str(cfg.get("tags", "")).replace(",", " ").split()
-            if t.strip()
-        }
+        tags = str(self._config(name).get("tags", ""))
+        return set(tags.replace(",", " ").split())
 
     def select_nodes(
         self, select: str | None = None, exclude: str | None = None
@@ -1160,6 +1290,82 @@ class ModelGraph:
         )
         return selected - parse(exclude)
 
+    def _walk(
+        self,
+        spark: SparkSession,
+        select: str | None = None,
+        exclude: str | None = None,
+        full_refresh: bool = False,
+        schema_tests: dict | None = None,
+        store_failures: bool = False,
+    ) -> list[dict]:
+        """The one DAG pass behind ``run``, ``build`` and the docs.
+
+        Visits the seeds the selection needs (:meth:`_seeds_for`), then
+        every model in :meth:`topo_order`. Each model renders once:
+        an ephemeral one is never executed, its SQL inlines as a
+        subquery wherever a descendant ``ref()``s it (topo order puts
+        the text in place before any consumer renders), so ephemerals
+        render whether or not they are selected. A selected model is
+        materialized, and its ``schema_tests`` (if the caller passed
+        any) run right after it succeeds. A node whose load, render or
+        materialization raises is recorded as ``error``; every node
+        downstream of an ``error`` or ``skipped`` node is ``skipped``
+        and independent nodes still run — dbt's failure isolation.
+
+        Returns one record per visited node, in execution order:
+        ``node``, ``kind`` (``seed``, ``seed (dependency)``, ``model``,
+        ``test``), ``status`` (success|error|skipped, pass|fail for
+        tests) and ``detail``; seed and model records also carry the
+        resolved ``config``, the ``compiled_sql`` (models that
+        rendered), the materialized ``df`` and the raised ``error``.
+        :func:`_reported` tells the records ``build`` reports.
+        """
+        selected = self.select_nodes(select, exclude)
+        edges = self._edges()
+        ephemeral: dict[str, str] = {}
+        resolve = _inliner(ephemeral)
+        failed: set[str] = set()
+        records: list[dict] = []
+        nodes = [(n, "seed") for n in sorted(self._seeds_for(selected))]
+        for name, kind in nodes + [(n, "model") for n in self.topo_order()]:
+            cfg = {"materialized": "seed"}
+            if kind == "model":
+                cfg = self._config(name)
+            if name not in selected and kind == "seed":
+                kind = "seed (dependency)"
+            elif name not in selected and cfg["materialized"] != "ephemeral":
+                continue
+            rec = {"node": name, "kind": kind, "status": "success",
+                   "detail": None, "config": cfg, "compiled_sql": None,
+                   "df": None, "error": None}
+            records.append(rec)
+            upstream_failed = sorted(set(edges[name]) & failed)
+            try:
+                if upstream_failed:
+                    rec["status"] = "skipped"
+                    rec["detail"] = f"upstream failed: {upstream_failed}"
+                elif kind != "model":
+                    rec["df"] = self._load_seed(spark, name)
+                else:
+                    sql, active = self._render_node(name, resolve, full_refresh)
+                    rec["compiled_sql"] = sql
+                    if cfg["materialized"] == "ephemeral":
+                        ephemeral[name] = sql
+                    else:
+                        rec["df"] = self._materialize(
+                            spark, name, sql, cfg, active, full_refresh
+                        )
+            except Exception as exc:  # noqa: BLE001 - per-node isolation
+                rec.update(status="error", detail=str(exc)[:300], error=exc)
+            if rec["status"] != "success":
+                failed.add(name)
+            elif kind == "model" and rec["df"] is not None and schema_tests:
+                records += self._run_schema_tests(
+                    spark, name, schema_tests.get(name, {}), store_failures
+                )
+        return records
+
     def run(
         self,
         spark: SparkSession,
@@ -1167,313 +1373,44 @@ class ModelGraph:
         exclude: str | None = None,
         full_refresh: bool = False,
     ) -> dict[str, DataFrame]:
-        """Materialize every (selected) model in dependency order;
-        returns name→DF.
+        """``dbt run``: materialize every (selected) model in
+        dependency order; returns name→DF.
 
         Ephemeral models (dbt's 4th materialization) are never
-        executed or registered: their rendered SQL inlines as a
-        parenthesized subquery wherever downstream models ref() them
-        (topo order guarantees the text exists before any consumer
-        renders). They do not appear in the returned dict.
+        executed or registered, and do not appear in the returned dict.
 
         ``select``/``exclude`` follow dbt selector syntax
         (``select_nodes``). Like dbt, only selected nodes RUN —
         non-ephemeral upstreams must already exist (built by a prior
         run or registered as sources); ephemeral ancestors of selected
         nodes always render so their text can inline.
+
+        A node that raises does not stop the pass (:meth:`_walk`):
+        its dependents are skipped and independent nodes still run.
+        Then target/ is written and the first node's exception is
+        raised again, like ``dbt run``'s non-zero exit.
         """
-        out: dict[str, DataFrame] = {}
-        ephemeral: dict[str, str] = {}
-        compiled: dict[str, tuple[str, dict]] = {}
-        selected = self.select_nodes(select, exclude)
-
-        if self.seeds:
-            loaded = self.seed(spark, names=self._seeds_for(selected))
-            # only SELECTED seeds count as run nodes; dependency seeds
-            # are registered (views exist for refs) but not reported
-            out.update(
-                {n: df for n, df in loaded.items() if n in selected}
-            )
-
-        def resolve(n: str) -> str:
-            return f"({ephemeral[n]})" if n in ephemeral else n
-
-        for name in self.topo_order():
-            sql, cfg, incr_active = self._render_node(
-                name, resolve, full_refresh
-            )
-            mat = cfg.get("materialized", "view")
-            if mat == "ephemeral":
-                # always rendered: a selected descendant may inline it
-                ephemeral[name] = sql
-                compiled[name] = (sql, cfg)
-                continue
-            if name not in selected:
-                continue
-            compiled[name] = (sql, cfg)
-            out[name] = self._materialize(
-                spark, name, sql, cfg, incr_active, full_refresh
-            )
-        # analyses: compiled with the same ref/macro pipeline, written
-        # to target/, never executed (dbt analysis-paths semantics,
-        # dbt_project.yml:15)
-        analyses_compiled = {
-            n: Model(n, sql).render(
-                self._defaults_for(n), resolve, self._source_relation
-            )[0]
-            for n, sql in self.analyses.items()
+        return {
+            r["node"]: r["df"]
+            for r in self._run_records(spark, select, exclude, full_refresh)
+            if r["df"] is not None and _reported(r)
         }
-        self._write_compiled(compiled, analyses_compiled)
-        return out
 
-    def _materialize(
+    def _run_records(
         self,
-        spark,
-        name,
-        sql,
-        cfg,
-        incr_active: bool = False,
+        spark: SparkSession,
+        select: str | None = None,
+        exclude: str | None = None,
         full_refresh: bool = False,
-    ) -> DataFrame:
-        """Execute one rendered model and materialize per its config;
-        returns the registered result DataFrame. Shared by ``run`` and
-        ``build``.
-
-        When the incremental guard is active and the model reads its
-        own target (a rendered ``{{ this }}``), the prior state is
-        registered under the model's name and the batch is EAGERLY
-        localCheckpoint'ed before the write — Spark refuses to
-        overwrite a path its lazy plan still reads (on Delta/Iceberg
-        MERGE INTO handles this transactionally and the checkpoint
-        disappears). The checkpointed batch is the model's OUTPUT
-        slice (one run's partitions), small by construction.
-        """
-        mat = cfg.get("materialized", "view")
-        for hook in self.hooks.get(name, {}).get("pre", []):
-            spark.sql(self._render_hook(name, hook))
-        if full_refresh and mat in _STATEFUL_MATS:
-            # dbt --full-refresh: drop and rebuild stateful targets
-            import shutil
-
-            shutil.rmtree(
-                f"{self.warehouse_dir}/{name}", ignore_errors=True
-            )
-        self_ref = (
-            incr_active
-            and re.search(rf"\b{re.escape(name)}\b", sql) is not None
-        )
-        if self_ref:
-            read_table(
-                spark, f"{self.warehouse_dir}/{name}"
-            ).createOrReplaceTempView(name)
-        df = spark.sql(sql)
-        if self_ref:
-            df = df.localCheckpoint(eager=True)
-        if mat == "view":
-            df.createOrReplaceTempView(name)
-        elif mat == "table":
-            path = f"{self.warehouse_dir}/{name}"
-            df.write.options(**_NO_SUCCESS).mode("overwrite").parquet(path)
-            _write_schema_stub(path, df)
-            df = read_table(spark, path)
-            df.createOrReplaceTempView(name)
-        elif mat == "incremental":
-            path = f"{self.warehouse_dir}/{name}"
-            part = cfg.get("partition_by")
-            if not part:
-                raise ValueError(f"incremental model {name} needs partition_by")
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            # repartition by the partition column first: otherwise
-            # every shuffle partition writes a sliver into every
-            # output partition (30 dirs x 8 files here) and commit
-            # overhead dominates; one task per partition writes one
-            # file. Same rule at cluster scale, plus a range/hash
-            # split within hot partitions if one day >> executors.
-            writer = (
-                df.repartition(F.col(part))
-                .write.options(**_NO_SUCCESS)
-                .mode("overwrite")
-                .partitionBy(part)
-            )
-            # dynamic mode: only partitions present in df are replaced
-            writer.parquet(path)
-            _write_schema_stub(path, df)
-            df = read_table(spark, path)
-            df.createOrReplaceTempView(name)
-        elif mat == "merge":
-            # dbt's incremental unique_key strategy: rows in this
-            # batch REPLACE existing rows with the same key, all
-            # other existing rows survive. Without a transactional
-            # table format the upsert is anti-join + union into a
-            # staged snapshot, then an atomic directory swap (you
-            # cannot overwrite a parquet dir Spark is lazily
-            # reading from). On Delta/Iceberg this branch becomes
-            # a real MERGE INTO with file-level pruning on the
-            # key — this seam is where that engine plugs in.
-            path = f"{self.warehouse_dir}/{name}"
-            with _table_lock(path):
-                _recover_swap(path)
-                key = cfg.get("unique_key")
-                if not key:
-                    raise ValueError(f"merge model {name} needs unique_key")
-                keys = [k.strip() for k in key.split(",")]
-                merged = df
-                if os.path.exists(path):
-                    # the batch is consumed TWICE — once to build the
-                    # broadcast anti-join key set, once in the union.
-                    # A lazy persist() is NOT enough: inside the one
-                    # write action the broadcast-build thread and the
-                    # union both race the cache fill and each recompute
-                    # the full batch aggregate from the source scan
-                    # (measured r12: the 16-task scan+agg ran 3x per
-                    # batch, 5 jobs). An EAGER localCheckpoint runs the
-                    # aggregate exactly once and cuts the lineage, so
-                    # both consumers read the checkpointed blocks
-                    # (guide §5; same device the incremental self-ref
-                    # path uses). The batch is one run's output slice,
-                    # small by construction; blocks are freed by the
-                    # context cleaner when the handle drops.
-                    df = df.localCheckpoint(eager=True)
-                    existing = read_table(spark, path)
-                    # no .distinct() on the key set: left_anti drops a
-                    # row if ANY build-side match exists, so duplicate
-                    # keys cannot change the result — the distinct only
-                    # shrank the broadcast, at the price of a 2-job
-                    # shuffle over the checkpointed batch. dbt's merge
-                    # contract has ~1 row per unique_key per batch, so
-                    # the broadcast is the same size without it. No
-                    # forced-broadcast hint: the planner/AQE picks BHJ
-                    # when the key projection fits (verified) and may
-                    # demote to a shuffled join for a batch too big to
-                    # broadcast safely at scale.
-                    survivors = existing.join(
-                        df.select(*keys), on=keys, how="left_anti"
-                    )
-                    merged = survivors.unionByName(df)
-                staging = f"{path}__staging"
-                merged.write.mode("overwrite").parquet(staging)
-                _swap_in(path, staging)
-                _write_schema_stub(path, merged)
-            df = read_table(spark, path)
-            df.createOrReplaceTempView(name)
-        elif mat == "snapshot":
-            # dbt snapshot, timestamp strategy (SCD2): the
-            # reference declares snapshots/ (dbt_project.yml:19)
-            # but ships none — this supplies the materialization.
-            # A source row whose updated_at is newer than the open
-            # version's closes it (valid_to = new updated_at) and
-            # opens a new version; replaying a batch is a no-op
-            # (equal updated_at is not newer). Same staged-swap
-            # write as merge; on Delta/Iceberg this becomes
-            # MERGE INTO with a key-pruned file scan.
-            from pyspark.sql import functions as SF
-
-            path = f"{self.warehouse_dir}/{name}"
-            with _table_lock(path):
-                _recover_swap(path)
-                key = cfg.get("unique_key")
-                updated = cfg.get("updated_at")
-                if not key or not updated:
-                    raise ValueError(
-                        f"snapshot model {name} needs unique_key + updated_at"
-                    )
-                # dbt snapshot semantics assume one row per unique_key
-                # per batch; a batch carrying several versions of a key
-                # would open multiple valid_to-NULL rows and
-                # double-close the prior version on the next run. Keep
-                # only the latest updated_at per key (window, one
-                # shuffle on the key — same key the joins below shuffle
-                # on anyway). Ties on (key, updated_at) with DIFFERENT
-                # payloads would otherwise pick an arbitrary survivor
-                # (dbt errors on such batches); a stable hash of the
-                # remaining columns makes the survivor deterministic
-                # across runs and partitionings.
-                from pyspark.sql.window import Window as _W
-
-                _payload = [c for c in df.columns if c not in (key, updated)]
-                _rn = SF.row_number().over(
-                    _W.partitionBy(key).orderBy(
-                        SF.col(updated).desc(),
-                        *(
-                            [SF.xxhash64(*_payload).desc()]
-                            if _payload
-                            else []
-                        ),
-                    )
-                )
-                df = (
-                    df.withColumn("__rn", _rn)
-                    .filter(SF.col("__rn") == 1)
-                    .drop("__rn")
-                )
-                src = df.withColumn(
-                    "valid_from", SF.col(updated)
-                ).withColumn("valid_to", SF.lit(None).cast(df.schema[updated].dataType))
-                if os.path.exists(path):
-                    # read_table: schema from the stub (every snapshot
-                    # write leaves one), not a footer-inference job
-                    snap = read_table(spark, path)
-                    is_open = SF.col("valid_to").isNull()
-                    closed = snap.filter(~is_open)
-                    opened = snap.filter(is_open)
-                    newer = src.select(
-                        SF.col(key).alias("__k"),
-                        SF.col(updated).alias("__new_upd"),
-                    )
-                    joined = opened.join(
-                        newer, opened[key] == SF.col("__k"), "left"
-                    )
-                    still_open = joined.filter(
-                        SF.col("__new_upd").isNull()
-                        | (SF.col("__new_upd") <= SF.col(updated))
-                    ).select(*snap.columns)
-                    now_closed = joined.filter(
-                        SF.col("__new_upd") > SF.col(updated)
-                    ).withColumn("valid_to", SF.col("__new_upd")).select(
-                        *snap.columns
-                    )
-                    # new versions: keys that closed a row or are new
-                    prior_upd = opened.select(
-                        SF.col(key).alias("__pk"),
-                        SF.col(updated).alias("__prior_upd"),
-                    )
-                    fresh = (
-                        src.join(prior_upd, src[key] == SF.col("__pk"), "left")
-                        .filter(
-                            SF.col("__prior_upd").isNull()
-                            | (SF.col(updated) > SF.col("__prior_upd"))
-                        )
-                        .select(*src.columns)
-                    )
-                    merged = closed.unionByName(still_open).unionByName(
-                        now_closed
-                    ).unionByName(fresh)
-                else:
-                    merged = src
-                staging = f"{path}__staging"
-                merged.write.mode("overwrite").parquet(staging)
-                _swap_in(path, staging)
-                _write_schema_stub(path, merged)
-            df = read_table(spark, path)
-            df.createOrReplaceTempView(name)
-        else:
-            raise ValueError(f"unknown materialization {mat!r} for {name}")
-        for hook in self.hooks.get(name, {}).get("post", []):
-            spark.sql(self._render_hook(name, hook))
-        return df
-
-    def _render_hook(self, name: str, sql: str) -> str:
-        """Render a pre/post hook: macros, ref() (to relation names),
-        source(), and {{ this }} (the hooked model itself)."""
-        sql = expand_macros(sql, self.macros)
-        sql = _REF_RE.sub(lambda m: m.group(1), sql)
-        sql = _SOURCE_RE.sub(
-            lambda m: self._source_relation(m.group(1), m.group(2)), sql
-        )
-        return _THIS_RE.sub(name, sql).strip()
-
+    ) -> list[dict]:
+        """``run``'s walk records, after writing target/ and raising
+        the first recorded node exception."""
+        records = self._walk(spark, select, exclude, full_refresh)
+        self._write_compiled(records)
+        for r in records:
+            if r["error"] is not None:
+                raise r["error"]
+        return records
 
     def build(
         self,
@@ -1490,98 +1427,130 @@ class ModelGraph:
         ``schema_tests``: {model: {column: ["unique", "not_null"]}}
         (schema.yml shape); each test runs right after its model
         materializes, like dbt build's interleaved test execution.
-        Returns one status dict per node:
+        Returns one status dict per reported node (:func:`_reported`):
         {"node", "kind", "status": success|error|skipped|pass|fail,
-         "detail"}.
+         "detail"}, plus "failures_table" for a stored failing test.
         """
-        results: list[dict] = []
-        failed: set[str] = set()
-        selected = self.select_nodes(select, exclude)
-        tests = schema_tests or {}
+        records = self._walk(
+            spark, select, exclude,
+            schema_tests=schema_tests, store_failures=store_failures,
+        )
+        return [
+            {k: r[k] for k in _STATUS_KEYS if k in r}
+            for r in records
+            if _reported(r)
+        ]
 
-        needed_seeds = self._seeds_for(selected)
-        for name, path in sorted(self.seeds.items()):
-            if name not in needed_seeds:
-                continue
-            try:
-                schema = self.seed_schemas.get(name)
-                reader = _seed_reader(spark)
-                reader = (
-                    reader.schema(schema)
-                    if schema
-                    else reader.option("inferSchema", "true")
-                )
-                df = reader.csv(path)
-                wpath = f"{self.warehouse_dir}/{name}"
-                df.write.options(**_NO_SUCCESS).mode(
-                    "overwrite"
-                ).parquet(wpath)
-                # stub + read_table: schema from the stub, not a
-                # footer-inference job (same as seed())
-                _write_schema_stub(wpath, df)
-                read_table(spark, wpath).createOrReplaceTempView(name)
-                if name in selected:
-                    results.append(
-                        {"node": name, "kind": "seed",
-                         "status": "success", "detail": None}
-                    )
-            except Exception as exc:  # noqa: BLE001 - per-node isolation
-                failed.add(name)
-                # ADVICE r7: a DEPENDENCY seed that fails to load must
-                # still surface in the results — otherwise downstream
-                # selected models report skipped/failed with no visible
-                # root cause. Distinct kind so callers can tell it was
-                # pulled in as a dependency, not selected.
-                results.append(
-                    {"node": name,
-                     "kind": "seed" if name in selected
-                     else "seed (dependency)",
-                     "status": "error",
-                     "detail": str(exc)[:300]}
-                )
+    def _materialize(
+        self,
+        spark,
+        name,
+        sql,
+        cfg,
+        incr_active: bool = False,
+        full_refresh: bool = False,
+    ) -> DataFrame:
+        """Execute one rendered model and materialize per its config;
+        returns the registered result DataFrame.
 
-        ephemeral: dict[str, str] = {}
+        When the incremental guard is active and the model reads its
+        own target (a rendered ``{{ this }}``), the prior state is
+        registered under the model's name and the batch is EAGERLY
+        localCheckpoint'ed before the write — Spark refuses to
+        overwrite a path its lazy plan still reads (on Delta/Iceberg
+        MERGE INTO handles this transactionally and the checkpoint
+        disappears). The checkpointed batch is the model's OUTPUT
+        slice (one run's partitions), small by construction.
+        """
+        mat = cfg.get("materialized", "view")
+        for hook in self.hooks.get(name, {}).get("pre", []):
+            spark.sql(self._render_hook(name, hook))
+        if full_refresh and mat in _STATEFUL_MATS:
+            # dbt --full-refresh: drop and rebuild stateful targets
+            shutil.rmtree(f"{self.warehouse_dir}/{name}", ignore_errors=True)
+        self_ref = (
+            incr_active
+            and re.search(rf"\b{re.escape(name)}\b", sql) is not None
+        )
+        if self_ref:
+            read_table(
+                spark, f"{self.warehouse_dir}/{name}"
+            ).createOrReplaceTempView(name)
+        df = spark.sql(sql)
+        if self_ref:
+            df = df.localCheckpoint(eager=True)
+        if mat == "view":
+            df.createOrReplaceTempView(name)
+        else:
+            df = self._publish(spark, name, df, cfg)
+        for hook in self.hooks.get(name, {}).get("post", []):
+            spark.sql(self._render_hook(name, hook))
+        return df
 
-        def resolve(n: str) -> str:
-            return f"({ephemeral[n]})" if n in ephemeral else n
+    def _publish(
+        self, spark: SparkSession, name: str, df: DataFrame, cfg: dict
+    ) -> DataFrame:
+        """Land ``df`` as warehouse table ``name`` and register it.
 
-        edges = self._edges()
-        for name in self.topo_order():
-            sql, cfg, incr_active = self._render_node(name, resolve)
-            if cfg.get("materialized") == "ephemeral":
-                ephemeral[name] = sql
-                continue
-            if name not in selected:
-                continue
-            ups = set(edges.get(name, ())) | (
-                set(self.models[name].refs) & set(self.seeds)
-            )
-            if ups & failed:
-                failed.add(name)
-                results.append(
-                    {"node": name, "kind": "model", "status": "skipped",
-                     "detail": f"upstream failed: {sorted(ups & failed)}"}
-                )
-                continue
-            try:
-                self._materialize(spark, name, sql, cfg, incr_active)
-                results.append(
-                    {"node": name, "kind": "model", "status": "success",
-                     "detail": None}
-                )
-            except Exception as exc:  # noqa: BLE001 - per-node isolation
-                failed.add(name)
-                results.append(
-                    {"node": name, "kind": "model", "status": "error",
-                     "detail": str(exc)[:300]}
-                )
-                continue
-            results.extend(
-                self._run_schema_tests(
-                    spark, name, tests.get(name, {}), store_failures
-                )
-            )
-        return results
+        The one publish step of seeds (``cfg`` ``{}``) and of every
+        on-disk materialization: write, record the schema stub beside
+        the files, read back with :func:`read_table` (schema from the
+        stub, not a footer-inference job) and register the temp view.
+
+        - ``table`` (and a seed) overwrites the directory;
+        - ``incremental`` overwrites only the partitions present in
+          ``df`` (dynamic partition overwrite keyed on
+          ``partition_by``);
+        - ``merge`` and ``snapshot`` combine ``df`` with the prior
+          state (:func:`_merge_rows`, :func:`_snapshot_rows`) into a
+          complete staged snapshot and swap it in, all under the
+          table lock (you cannot overwrite a parquet dir Spark is
+          lazily reading from; on Delta/Iceberg this becomes a real
+          MERGE INTO with key-pruned file scans).
+        """
+        mat = cfg.get("materialized", "table")
+        path = f"{self.warehouse_dir}/{name}"
+        if mat in ("merge", "snapshot"):
+            combine = _merge_rows if mat == "merge" else _snapshot_rows
+            with _table_lock(path):
+                _recover_swap(path)
+                prior = read_table(spark, path) if os.path.exists(path) else None
+                df = combine(name, df, prior, cfg)
+                staging = f"{path}__staging"
+                df.write.mode("overwrite").parquet(staging)
+                _swap_in(path, staging)
+                _write_schema_stub(path, df)
+        else:
+            writer = df.write
+            if mat == "incremental":
+                part = cfg.get("partition_by")
+                if not part:
+                    raise ValueError(f"incremental model {name} needs partition_by")
+                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+                # repartition by the partition column first: otherwise
+                # every shuffle partition writes a sliver into every
+                # output partition (30 dirs x 8 files here) and commit
+                # overhead dominates; one task per partition writes one
+                # file. Same rule at cluster scale, plus a range/hash
+                # split within hot partitions if one day >> executors.
+                writer = df.repartition(F.col(part)).write.partitionBy(part)
+            elif mat != "table":
+                raise ValueError(f"unknown materialization {mat!r} for {name}")
+            writer.options(**_NO_SUCCESS).mode("overwrite").parquet(path)
+            _write_schema_stub(path, df)
+        out = read_table(spark, path)
+        out.createOrReplaceTempView(name)
+        return out
+
+    def _render_hook(self, name: str, sql: str) -> str:
+        """Render a pre/post hook: macros, ref() (to relation names),
+        source(), and {{ this }} (the hooked model itself)."""
+        sql = expand_macros(sql, self.macros)
+        sql = _REF_RE.sub(lambda m: m.group(1), sql)
+        sql = _SOURCE_RE.sub(
+            lambda m: self._source_relation(m.group(1), m.group(2)), sql
+        )
+        return _THIS_RE.sub(name, sql).strip()
 
     def _run_schema_tests(
         self,
@@ -1935,10 +1904,6 @@ def model_incremental_daily_revenue(
     spark: SparkSession, sf_dir: str,
     warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse_incr"),
 ) -> DataFrame:
-    import shutil
-
-    from pyspark.sql import functions as F
-
     shutil.rmtree(warehouse_dir, ignore_errors=True)
     events = register_all(spark, sf_dir, tables=("events",))["events"]
     graph = ModelGraph(INCREMENTAL_MODEL, warehouse_dir=warehouse_dir)
@@ -2007,10 +1972,6 @@ def model_merge_customer_state(
     spark: SparkSession, sf_dir: str,
     warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse_merge"),
 ) -> DataFrame:
-    import shutil
-
-    from pyspark.sql import functions as F
-
     shutil.rmtree(warehouse_dir, ignore_errors=True)
     orders = register_all(spark, sf_dir, tables=("orders",))["orders"]
     graph = ModelGraph(MERGE_MODEL, warehouse_dir=warehouse_dir)
@@ -2338,8 +2299,6 @@ def model_incremental_late_data(
     spark: SparkSession, sf_dir: str,
     warehouse_dir: str = os.path.join(ARTIFACTS_DIR, "warehouse_incr_guard"),
 ) -> DataFrame:
-    import shutil
-
     shutil.rmtree(warehouse_dir, ignore_errors=True)
     events = register_all(spark, sf_dir, tables=("events",))["events"]
     graph = ModelGraph(INCR_GUARD_MODEL, warehouse_dir=warehouse_dir)

@@ -45,10 +45,6 @@ from ..sources import load_table
 from .spec import QuerySpec, money_sum, sql_dec2dbl, sql_money_sum
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # TPC-H Q13 shape: distribution of orders-per-customer, including the
 # zero-order customers a plain inner join would drop. Two aggregations:
@@ -58,8 +54,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    od = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
+    cust = load_table(spark, sf_dir, "customer")
+    od = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
     per_cust = (
         cust.join(od, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -91,12 +87,12 @@ GROUP BY c_count
 # ---------------------------------------------------------------------------
 
 def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    od = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    od = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
 
     cust_asia = (
         cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -164,10 +160,10 @@ GROUP BY o_year
 # ---------------------------------------------------------------------------
 
 def returned_items_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    od = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    od = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(od, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -210,7 +206,7 @@ LIMIT 20
 # ---------------------------------------------------------------------------
 
 def lineitem_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(12,2)")
     y = F.col("l_extendedprice").cast("decimal(12,2)")
     comp = (
@@ -343,7 +339,7 @@ _QUANT_BUCKET_EXPR = (
 
 
 def orders_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    od = _t(spark, sf_dir, "orders")
+    od = load_table(spark, sf_dir, "orders")
     rows = od.selectExpr(
         "o_orderpriority", "o_totalprice AS v", "o_orderkey"
     ).selectExpr("*", f"{_QUANT_BUCKET_EXPR} AS __bkt")
@@ -472,7 +468,7 @@ ORACLE_QUANTILES = _sql_quantiles()
 # ---------------------------------------------------------------------------
 
 def orders_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    od = _t(spark, sf_dir, "orders")
+    od = load_table(spark, sf_dir, "orders")
     sampled = od.filter(
         F.md5(F.col("o_orderkey").cast("string")).substr(1, 1) == "0"
     )
@@ -510,7 +506,7 @@ def orders_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale it costs one pass over the already-aggregated frame.
     """
     wide = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
         .agg(
             money_sum(F.col("o_totalprice"), "o_totalprice_sum"),
@@ -573,7 +569,7 @@ def orders_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     NTILE(10) OVER (PARTITION BY priority ORDER BY price, orderkey).
     """
     B = _DECILE_BUCKETS
-    od = _t(spark, sf_dir, "orders").select(
+    od = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice", "o_orderkey"
     )
     bounds = od.groupBy("o_orderpriority").agg(
@@ -708,7 +704,7 @@ def dq_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: one projection + one 9-group aggregate with
     map-side partials; the observed/expected comparison is 9 rows.
     """
-    od = _t(spark, sf_dir, "orders")
+    od = load_table(spark, sf_dir, "orders")
     digits = od.filter(F.col("o_totalprice") >= 1).selectExpr(
         "CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)"
         " AS STRING), 1, 1) AS INT) AS digit"
@@ -853,7 +849,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort, month) rollup. months_since is pure integer month
     arithmetic; revenue is the exact-decimal money sum.
     """
-    od = _t(spark, sf_dir, "orders").selectExpr(
+    od = load_table(spark, sf_dir, "orders").selectExpr(
         "o_custkey",
         "o_totalprice",
         "YEAR(o_orderdate) * 12 + MONTH(o_orderdate) - 1 AS m",
@@ -1187,7 +1183,7 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (support, part_a, part_b): total-order deterministic.
     """
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -1281,7 +1277,7 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     anyway. Revenue sums are exact DECIMAL; rank cross-products stay
     exact DECIMAL(38,6); the final G is one double division.
     """
-    od = _t(spark, sf_dir, "orders")
+    od = load_table(spark, sf_dir, "orders")
     rev = od.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(22,6)")).alias("r")
     )

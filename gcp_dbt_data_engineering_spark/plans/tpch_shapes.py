@@ -35,10 +35,6 @@ from ..sources import load_table
 from .spec import QuerySpec, money_sum, sql_money_sum
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _TS = "timestamp_ntz"
 
 
@@ -50,7 +46,7 @@ _TS = "timestamp_ntz"
 # ---------------------------------------------------------------------------
 
 def forecast_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast(_TS))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast(_TS))
         & (F.col("l_discount") >= 0.04)
@@ -83,17 +79,17 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 # ---------------------------------------------------------------------------
 
 def nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast(_TS))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast(_TS))
     )
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    n1 = _t(spark, sf_dir, "nation").select(
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
     )
     return (
@@ -143,10 +139,10 @@ GROUP BY n1.n_name, n2.n_name, EXTRACT(year FROM l_shipdate)
 # ---------------------------------------------------------------------------
 
 def part_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
         "l_quantity"
     ) * F.col("p_retailprice") * F.lit(0.6)
@@ -186,7 +182,7 @@ GROUP BY n_name, EXTRACT(year FROM l_shipdate)
 # ---------------------------------------------------------------------------
 
 def top_supplier_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast(_TS))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast(_TS))
     )
@@ -196,7 +192,7 @@ def top_supplier_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    supplier = _t(spark, sf_dir, "supplier")
+    supplier = load_table(spark, sf_dir, "supplier")
     return (
         revenue.join(
             F.broadcast(max_rev),
@@ -231,8 +227,8 @@ WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
 # ---------------------------------------------------------------------------
 
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "SMALL")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "SMALL")
     avg_qty = (
         li.groupBy(F.col("l_partkey").alias("ap_partkey"))
         .agg(
@@ -280,15 +276,15 @@ WHERE p_type = 'SMALL' AND l_quantity < 0.5 * avg_qty
 # ---------------------------------------------------------------------------
 
 def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy(F.col("l_orderkey").alias("g_orderkey"))
         .agg(F.sum(F.col("l_quantity").cast("decimal(22,6)")).alias("dq"))
         .filter(F.col("dq") > 180)
         .select("g_orderkey", F.col("dq").cast("double").alias("total_qty"))
     )
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         orders.join(big, F.col("o_orderkey") == F.col("g_orderkey"))
         .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
@@ -328,8 +324,8 @@ JOIN customer ON o_custkey = c_custkey
 # ---------------------------------------------------------------------------
 
 def disjunctive_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     cond = (
         (
             (F.col("p_brand") == "Brand#1")
@@ -384,9 +380,9 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
 # ---------------------------------------------------------------------------
 
 def idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
+    customer = load_table(spark, sf_dir, "customer")
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast(_TS))
         .select("o_custkey")
     )
@@ -438,11 +434,11 @@ def min_balance_supplier_per_part(
     # join is a ~5%-selective semi-filter, so the distinct's shuffle
     # carries 20× fewer rows (1.36s → 0.80s at sf0.1; at 100 TB the
     # distinct is the only fact-sized shuffle in this plan).
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= 10) & (F.col("p_type") == "STANDARD")
     )
-    supplier = _t(spark, sf_dir, "supplier")
+    supplier = load_table(spark, sf_dir, "supplier")
     pairs = (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .select("p_partkey", "p_brand", "l_suppkey")
@@ -493,13 +489,13 @@ _Q11_NATIONS = ("NATION_1", "NATION_2", "NATION_3")
 
 
 def important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").filter(
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin(*_Q11_NATIONS)
     )
     value = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     filtered = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
     )
@@ -544,11 +540,11 @@ HAVING CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
 # ---------------------------------------------------------------------------
 
 def lateness_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast(_TS))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast(_TS))
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     lag = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
     band = (
         F.when(lag > 120, "very_late")
@@ -603,14 +599,14 @@ def supplier_part_attribute_counts(
     # and the distinct lands directly on the output grain
     # (brand,type,size,suppkey) so the final count is a plain count,
     # not a countDistinct re-shuffle (0.96s → 0.59s at sf0.1).
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(*_Q16_SIZES)
     )
     excluded = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -651,8 +647,8 @@ GROUP BY p_brand, p_type, p_size
 # ---------------------------------------------------------------------------
 
 def excess_shipper_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "SMALL")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "SMALL")
     in96 = (F.col("l_shipdate") >= F.lit("1996-01-01").cast(_TS)) & (
         F.col("l_shipdate") < F.lit("1997-01-01").cast(_TS)
     )
@@ -674,8 +670,8 @@ def excess_shipper_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    supplier = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         supplier.join(
             excess_keys, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi"
@@ -721,8 +717,8 @@ WHERE s_suppkey IN (SELECT l_suppkey FROM shipped
 # ---------------------------------------------------------------------------
 
 def waiting_orders_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
         "INTERVAL 60 DAYS"
     )
@@ -742,7 +738,7 @@ def waiting_orders_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter((F.col("ns") >= 2) & (F.col("nlate") == 1))
     )
-    supplier = _t(spark, sf_dir, "supplier")
+    supplier = load_table(spark, sf_dir, "supplier")
     return (
         per_order.join(
             F.broadcast(supplier), F.col("late_supp") == F.col("s_suppkey")

@@ -33,10 +33,6 @@ from ..sources import load_table
 from .spec import QuerySpec, money_sum, sql_money_sum
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # running totals + lag: per-customer order history (explicit ROWS frame).
 # The custkey slice keeps the spec's output review-sized at any SF; the
@@ -47,7 +43,7 @@ CUST_SLICE = 101  # o_custkey % CUST_SLICE == 0 → ~1% of customers
 
 
 def customer_orders_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    od = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") % CUST_SLICE == 0)
+    od = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") % CUST_SLICE == 0)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wrows = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     orderdate = F.col("o_orderdate").cast("date")
@@ -92,7 +88,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 
 def orders_daily_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # undated orders belong to no day of the sequential window
-    od = _t(spark, sf_dir, "orders").where("o_orderdate IS NOT NULL")
+    od = load_table(spark, sf_dir, "orders").where("o_orderdate IS NOT NULL")
     daily = od.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(22,6)")).alias("rev_dec"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -134,9 +130,9 @@ WINDOW w7 AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 # ---------------------------------------------------------------------------
 
 def nation_customer_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    od = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    od = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     per_cust = od.groupBy("o_custkey").agg(
         money_sum(F.col("o_totalprice"), "revenue")
     )
@@ -188,7 +184,7 @@ QUALIFY rn <= 5
 # ---------------------------------------------------------------------------
 
 def part_brand_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     large = part.filter(F.col("p_size") >= 45).select("p_brand").distinct()
     promo = part.filter(F.col("p_type") == "PROMO").select("p_brand").distinct()
     tag = lambda df, m: df.select(  # noqa: E731
@@ -230,7 +226,7 @@ def events_cube_type_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal sums add exactly; the double cast happens once per
     # output row) — cheaper at scale than Expand-based cube, which
     # multiplies shuffle rows 4x.
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load_table(spark, sf_dir, "events").withColumn(
         "cohort", (F.col("user_id") % 4).cast("bigint")
     )
     g = ev.groupBy("event_type", "cohort").agg(
@@ -281,7 +277,7 @@ GROUP BY CUBE (event_type, user_id % 4)
 # ---------------------------------------------------------------------------
 
 def events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     touch_us = F.when(F.col("event_type") != "purchase", us)
     w = (
@@ -347,7 +343,7 @@ VALUE_BANDS: tuple[tuple[str, float, float], ...] = (
 
 
 def events_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bands = spark.createDataFrame(
         list(VALUE_BANDS), schema="band string, lo double, hi double"
     )
@@ -400,7 +396,7 @@ INTERVAL_W_US = 3600 * 1_000_000
 
 
 def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"),
@@ -488,7 +484,7 @@ def events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — spec.py rules), so every level is bit-identical to direct
     aggregation of the facts.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     hour = (
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"))
         .agg(
@@ -541,7 +537,7 @@ SELECT 'month', strftime(b, '%Y-%m-%d %H:%M'), n_events,
 
 
 def events_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("date").alias("d")
     )
     first = ev.groupBy("user_id").agg(F.min("d").alias("first_d"))
@@ -605,7 +601,7 @@ def events_sequential_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user AND later ts" formulation is O(events²/user) and
     unrunnable at scale.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     byu = Window.partitionBy("user_id")
     s1, s2, s3 = FUNNEL_STEPS
     staged = (
@@ -730,7 +726,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # timeless rows (NULL ts) have no place in a per-user order —
     # and the engines disagree on NULL placement in ORDER BY defaults
-    ev = _t(spark, sf_dir, "events").where("ts IS NOT NULL")
+    ev = load_table(spark, sf_dir, "events").where("ts IS NOT NULL")
     byu = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
         ev.select("user_id", "event_id", "ts", "event_type")

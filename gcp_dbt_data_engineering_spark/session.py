@@ -169,6 +169,21 @@ def clear_caches(
     return cleared
 
 
+def default_driver_memory(physical_bytes: int) -> str:
+    """Local-mode driver heap: half the host's memory, at most 24 GiB.
+
+    Local mode packs the driver, every executor thread and every
+    persisted relation into ONE JVM; at 8g the block manager evicted
+    persisted shingle/pair relations mid-bench on a 32-core host (specs
+    measured 2-3x their isolated wall-clock), hence the 24 GiB cap. A
+    heap above what the host holds lets the JVM grow instead of
+    collecting until the kernel's OOM killer ends it, so the default
+    leaves the other half to the Python workers and the OS.
+    ``SPARK_DRIVER_MEMORY`` overrides it.
+    """
+    return f"{min(24 * 1024, (physical_bytes // 2) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "gcp-dbt-data-engineering-spark",
     master: str | None = None,
@@ -220,12 +235,16 @@ def get_spark(
                 )
             ),
         )
-        # local mode packs driver + all 32 executor threads + every
-        # persisted relation into ONE JVM; at 8g the block manager was
-        # evicting persisted shingle/pair relations mid-bench (specs
-        # measured 2-3x their isolated wall-clock). The sandbox has
-        # 128 GiB; on a real cluster this is a per-role deploy setting.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # local mode packs driver + all executor threads + every
+        # persisted relation into ONE JVM (see default_driver_memory);
+        # on a real cluster this is a per-role deploy setting.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -138,8 +138,10 @@ def stage_artifact(
     sf_dir: str,
     table: str,
     write: Callable[[str], None],
+    variant: str = "",
 ) -> str:
-    """Return ``<root>/<kind>@<source_key>``, built once by ``write(tmp)``.
+    """Return ``<root>/<kind>@<source_key><variant>``, built once by
+    ``write(tmp)``.
 
     The engine's one protocol for a table derived on disk from a source
     table (the split layouts below, the ORC, partitioned, z-ordered and
@@ -157,10 +159,15 @@ def stage_artifact(
       the same kind and scale factor, any process's tmp dirs, scratch
       dirs named after the artifact) older than :data:`STAGE_TTL_S` is
       removed. Other scale factors' artifacts are never touched.
+
+    ``variant`` names what the layout depends on besides the source's
+    version (the registry's split appends ``-n<parts>``): layouts that
+    differ in it are different artifacts, and the reap ages them out
+    like older versions.
     """
     key = source_key(sf_dir, table)
     prefix = f"{kind}@{key.rsplit('-', 2)[0]}-"  # any version of the source
-    path = os.path.join(root, f"{kind}@{key}")
+    path = os.path.join(root, f"{kind}@{key}{variant}")
     for d in os.listdir(root) if os.path.isdir(root) else ():
         full = os.path.join(root, d)
         if d.startswith(prefix) and full != path and is_stale(full):
@@ -255,9 +262,12 @@ def _stage_if_unsplittable(
     Files with at least ``n`` row groups already split across every
     core and are read raw, at any size.
 
-    Keying, atomic publication and cleanup are :func:`stage_artifact`'s;
-    layout only — row *contents* are identical, which every DuckDB
-    oracle (reading the RAW file) re-proves on each gate run.
+    The part count is part of the staged path (``-n<n>``), so a session
+    with another core count stages its own layout instead of reading one
+    split for fewer cores. Keying, atomic publication and cleanup are
+    :func:`stage_artifact`'s; layout only — row *contents* are
+    identical, which every DuckDB oracle (reading the RAW file)
+    re-proves on each gate run.
     """
     n = min(16, spark.sparkContext.defaultParallelism)
     try:
@@ -271,7 +281,12 @@ def _stage_if_unsplittable(
     except Exception:
         return path
     return stage_artifact(
-        STAGE_DIR, name, sf_dir, name, lambda tmp: _split_parquet(path, tmp, n)
+        STAGE_DIR,
+        name,
+        sf_dir,
+        name,
+        lambda tmp: _split_parquet(path, tmp, n),
+        variant=f"-n{n}",
     )
 
 

@@ -108,3 +108,36 @@ def test_from_dir_end_to_end(spark, tmp_path):
     ]
     md = render_markdown(docs)
     assert "A starter dbt model" in md
+
+
+def test_docs_record_what_the_run_compiled(spark, tmp_path):
+    """The docs manifest reports each model's resolved config
+    (directory defaults included) and the SQL the run compiled, with
+    ephemerals inlined — the same text as target/compiled/."""
+    mdir = tmp_path / "models"
+    (mdir / "staging").mkdir(parents=True)
+    (mdir / "marts").mkdir()
+    (mdir / "staging" / "stg_ids.sql").write_text(
+        "{{ config(materialized='ephemeral') }}\n"
+        "select 1 as id union all select 2 as id"
+    )
+    (mdir / "marts" / "mart_ids.sql").write_text(
+        "select count(*) as n from {{ ref('stg_ids') }}"
+    )
+    target = tmp_path / "target"
+    graph = ModelGraph.from_dir(
+        str(mdir),
+        warehouse_dir=str(tmp_path / "wh"),
+        target_dir=str(target),
+        dir_defaults={"marts": {"+materialized": "table"}},
+    )
+    docs = generate_docs(graph, spark)
+    mart = docs["manifest"]["mart_ids"]
+    assert mart["config"]["materialized"] == "table"
+    assert (target / "compiled" / "mart_ids.sql").read_text() == (
+        mart["compiled_sql"] + "\n"
+    )
+    assert "(select 1 as id union all select 2 as id)" in mart["compiled_sql"]
+    assert docs["manifest"]["stg_ids"]["config"]["materialized"] == "ephemeral"
+    assert [c["name"] for c in docs["catalog"]["mart_ids"]["columns"]] == ["n"]
+    assert "stg_ids" not in docs["catalog"]

@@ -296,3 +296,14 @@ def test_get_spark_refuses_a_runtime_conf_tune_would_reset(monkeypatch):
         s.get_spark(extra_conf={"spark.sql.adaptive.enabled": "false"})
     with pytest.raises(AssertionError, match="a session was built"):
         s.get_spark(extra_conf={"spark.sql.adaptive.enabled": "true"})
+
+
+def test_default_driver_memory_is_half_the_host_capped_at_24g():
+    """The local driver heap leaves half the host to the Python workers
+    and the OS, and stays at the 24 GiB cap on large hosts."""
+    from gcp_dbt_data_engineering_spark.session import default_driver_memory
+
+    assert default_driver_memory(16_456_384 * 1024) == "8035m"  # 15.7 GiB
+    assert default_driver_memory(8 << 30) == "4096m"
+    assert default_driver_memory(48 << 30) == "24576m"
+    assert default_driver_memory(128 << 30) == "24576m"

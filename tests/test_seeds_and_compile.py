@@ -666,3 +666,76 @@ def test_seed_csv_quoted_newlines_and_doubled_quotes(spark, tmp_path):
     assert got == want
     assert ("US", "United\nStates") in got
     assert ("FR", 'France "la belle"') in got
+
+
+def test_build_records_an_undeclared_source_and_builds_siblings(
+    spark, tmp_path
+):
+    """A model that fails to RENDER (an undeclared source()) is an
+    `error` row like any other node failure: its dependents are
+    skipped and the rest of the graph still builds."""
+    g = ModelGraph(
+        {
+            "ok": "select 1 as a",
+            "bad_src": "select v from {{ source('lake', 'missing') }}",
+            "child_of_bad": "select * from {{ ref('bad_src') }}",
+            "ok_child": "select a from {{ ref('ok') }}",
+        },
+        warehouse_dir=str(tmp_path / "wh"),
+        sources={"lake": {}},
+    )
+    by = {r["node"]: r for r in g.build(spark)}
+    assert by["bad_src"]["status"] == "error"
+    assert "missing" in by["bad_src"]["detail"]
+    assert by["child_of_bad"]["status"] == "skipped"
+    assert by["ok"]["status"] == "success"
+    assert by["ok_child"]["status"] == "success"
+
+
+def test_run_builds_independent_nodes_then_raises_the_first_error(
+    spark, tmp_path, monkeypatch
+):
+    """dbt run's rule: a failing node does not stop the pass. Its
+    independent sibling (later in topo order) still materializes,
+    its dependent is skipped, target/ is written, and then run raises
+    the failing node's own exception object. A BaseException is not a
+    node failure: it stops the pass at once."""
+    import shutil
+
+    import pytest
+
+    wh, target = tmp_path / "wh", tmp_path / "target"
+    g = ModelGraph(
+        {
+            "bad": "select 1 as a",
+            "after_bad": "select * from {{ ref('bad') }}",
+            "sibling": "{{ config(materialized='table') }} select 7 as v",
+        },
+        warehouse_dir=str(wh),
+        target_dir=str(target),
+    )
+    order = g.topo_order()
+    assert order.index("bad") < order.index("sibling")
+    boom = RuntimeError("boom")
+    real = g._materialize
+
+    def materialize(spark, name, *args, **kwargs):
+        if name == "bad":
+            raise boom
+        return real(spark, name, *args, **kwargs)
+
+    monkeypatch.setattr(g, "_materialize", materialize)
+    spark.sql("DROP VIEW IF EXISTS after_bad")
+    with pytest.raises(RuntimeError) as info:
+        g.run(spark)
+    assert info.value is boom
+    assert (wh / "sibling").is_dir()
+    assert spark.table("sibling").collect()[0]["v"] == 7
+    assert not spark.catalog.tableExists("after_bad")
+    assert (target / "compiled" / "sibling.sql").exists()
+
+    shutil.rmtree(wh / "sibling")
+    boom = KeyboardInterrupt()
+    with pytest.raises(KeyboardInterrupt):
+        g.run(spark)
+    assert not (wh / "sibling").exists()

@@ -202,6 +202,26 @@ def test_staged_parts_concatenate_to_the_raw_table(spark, tmp_path, stage_dir):
     assert reg._stage_if_unsplittable(spark, many, "orders", sfn) == many
 
 
+def test_staged_split_is_keyed_on_its_part_count(tmp_path, stage_dir):
+    """A session with another core count stages its own layout: the
+    part count is in the staged path, and each layout has at least
+    that many parts. A repeat call with the same count reuses its
+    layout."""
+    from types import SimpleNamespace
+
+    sf = str(tmp_path / "sfcores")
+    path = _write_row_groups(sf, "orders", 1)
+    staged = {}
+    for cores in (2, 4):
+        session = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=cores)
+        )
+        staged[cores] = reg._stage_if_unsplittable(session, path, "orders", sf)
+        assert len(_parts(staged[cores])) >= cores
+    assert staged[2] != staged[4]
+    assert reg._stage_if_unsplittable(session, path, "orders", sf) == staged[4]
+
+
 def test_staged_nanos_nulls_and_lists_read_like_the_raw_file(
     spark, tmp_path, stage_dir
 ):
