@@ -1,29 +1,49 @@
 """Similarity search over the ``embeddings`` table.
 
 North-star [EXT] surface (SURVEY.md §2.3 J4, §2.6 F8): top-k nearest
-neighbours by cosine over ``embedding: array<float>`` — brute force as
-the correctness baseline, and a random-hyperplane (sign-LSH) bucketed
-variant as the scale path.
+neighbours by cosine over ``embedding: array<float>``.
+
+Every variant runs ONE filter-and-refine pipeline, built from the same
+steps: the query set (``_queries``: ``vec_id % QUERY_MOD == 0``), a
+candidate generator (``_pairs``: a broadcast query side meets a
+neighbour side on a join key), for the compressed variants a pre-rank
+cut to the re-rank budget (``_rerank_budget``: the first
+``max(RERANK_MIN, ceil(N/RERANK_DIV))`` per query), the exact re-rank
+(``_exact_rerank``) and the top-10 window (``_ann_topk``). The specs
+differ only in their candidate generator:
+
+- brute force (``similarity_topk_cosine``): every vector — the
+  correctness baseline;
+- sign-LSH (``similarity_ann_lsh``): vectors sharing a hyperplane-sign
+  band key with the query;
+- IVF-Flat (``similarity_ann_ivf``): the members of the query's
+  ``FLAT_PROBE`` nearest cells of a trained K=128 inverted file;
+- IVF-SQ8 (``similarity_ann_ivf_kmeans``): the members of
+  ``SQ8_PROBE`` cells, pre-ranked through int8 codes;
+- IVF-PQ (``similarity_pq_ivf``): the members of ``PQ_PROBE`` cells,
+  pre-ranked by PQ asymmetric distance (``_adc_dist``);
+- PQ-ADC (``similarity_pq_adc``): every vector, ranked by asymmetric
+  distance alone — its output is the distance, not a cosine.
 
 Determinism contract (same as ``dedup.py``): embeddings are quantized
 to int64 (``floor(x * 2^20)``), so dot products and norms are *exact
 integers* in both engines; cosine is then a fixed sequence of IEEE
-double ops. The LSH hyperplanes are themselves integer-arithmetic
-pseudo-random vectors, so bucket assignment — and therefore the ANN
-variant's entire output, including its recall misses — is bit-exactly
+double ops. The LSH hyperplanes, k-means seeds and codebooks are
+integer-arithmetic too, so candidate sets — and therefore every
+variant's entire output, including its recall misses — are bit-exactly
 reproduced by the DuckDB oracle.
 
 Scale posture (100 TB):
 
-- Brute force is O(|Q| x N): correct baseline, linear in N only
-  because |Q| is fixed — it exists to validate the ANN path and to
-  serve small query batches. The query side is broadcast; the big side
-  streams (no shuffle of the embedding table).
+- The query side is bounded (a fixed 1% sample, or its probed cells)
+  and always broadcast; the corpus side streams with no shuffle of the
+  embedding table. Brute force is O(|Q| x N): it exists to validate the
+  ANN paths and to serve small query batches.
 - Sign-LSH: one projection pass computes 448 hyperplane sign bits per
-  vector (integer arithmetic, no shuffle); 56 bands of 8 bits generate
-  candidates via an equi-join on (band_idx, band_key). Exact re-rank
-  only touches candidates. At 100 TB the bucket table is the thing
-  you bucket/partition the lake by.
+  vector (integer arithmetic, no shuffle); the bands generate
+  candidates via an equi-join on (band_idx, band_key). At 100 TB the
+  bucket table is the thing you bucket/partition the lake by; for IVF
+  it is the inverted-file assignment.
 - The r9 recall work: the original hyperplane family
   ``(j*DIM+d) * 2654435761 mod P`` is a multiplicative LATTICE — the
   exact degeneracy the r8 MinHash fix removed from ``texthash.py``.
@@ -198,24 +218,42 @@ def _cosine(dot: str, na: str, nb: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# brute-force top-k (correctness baseline)
+# the search pipeline steps every spec (and tools/ann_*.py) composes
 # ---------------------------------------------------------------------------
 
-def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 cosine neighbours for each query vector.
+def _queries(base: DataFrame) -> DataFrame:
+    """(query_id, qa, na): the query set, every vector with
+    ``vec_id % QUERY_MOD == 0``. ``QUERY_MOD`` is read per call, so a
+    measurement can densify the queries; the indexes are corpus-side
+    and do not change with it."""
+    return base.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
+        "vec_id AS query_id", "q AS qa", "nn AS na"
+    )
 
-    Queries (vec_id % 100 == 0) are broadcast against the full table;
-    the integer dot product runs as a JVM higher-order fold; ranking is
-    one window per query with a total-order tiebreak (vec_id).
-    """
-    base = _quantized(spark, sf_dir)
-    queries = base.filter(
-        (F.col("vec_id") % QUERY_MOD) == 0
-    ).selectExpr("vec_id AS query_id", "q AS qa", "nn AS na")
-    pairs = F.broadcast(queries).crossJoin(
-        base.selectExpr("vec_id AS neighbor_id", "q AS qb", "nn AS nb")
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.selectExpr(
+
+def _neighbors(base: DataFrame) -> DataFrame:
+    """(neighbor_id, qb, nb): the corpus side of the exact re-rank."""
+    return base.selectExpr("vec_id AS neighbor_id", "q AS qb", "nn AS nb")
+
+
+def _pairs(qside: DataFrame, nside: DataFrame, on=None) -> DataFrame:
+    """Candidate pairs: each row of the broadcast query side
+    (``query_id``, …) with every row of the neighbour side
+    (``neighbor_id``, …) it shares the ``on`` columns with — every row
+    when ``on`` is None — bar the query itself. The query side is
+    bounded (the query set, its probed cells or its candidate ids), so
+    the corpus side streams map-side."""
+    q = F.broadcast(qside)
+    joined = q.crossJoin(nside) if on is None else q.join(nside, on)
+    return joined.filter(F.col("query_id") != F.col("neighbor_id"))
+
+
+def _exact_rerank(qside: DataFrame, nside: DataFrame, on=None) -> DataFrame:
+    """(query_id, neighbor_id, cosine): the exact cosine of the
+    ``_pairs`` of a query side carrying ``qa``/``na`` and a neighbour
+    side carrying ``qb``/``nb`` — the integer dot product runs as a JVM
+    higher-order fold."""
+    return _pairs(qside, nside, on).selectExpr(
         "query_id",
         "neighbor_id",
         _cosine(
@@ -226,6 +264,42 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + " AS cosine",
     )
+
+
+def _adc_dist(qside: DataFrame, nside: DataFrame, on=None) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist): PQ asymmetric distance of the
+    ``_pairs`` — exact int64 squared L2 from the full-precision query
+    ``qa`` to the neighbour's reconstruction ``centers``."""
+    return _pairs(qside, nside, on).selectExpr(
+        "query_id",
+        "neighbor_id",
+        "aggregate(zip_with(qa, centers, (a, b) -> (a - b) * (a - b)),"
+        " CAST(0 AS BIGINT), (a, x) -> a + x) AS adc_dist",
+    )
+
+
+def _rerank_budget(pre: DataFrame, order, base: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id): each query's first
+    ``max(RERANK_MIN, ceil(N/RERANK_DIV))`` candidates of ``pre`` by the
+    compressed pre-rank ``order`` (ties to the smaller neighbor_id) —
+    the bounded exact-math budget. N = |base| comes from a one-row
+    count relation crossJoined in-plan: no driver collect."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    ncnt = base.agg(F.count(F.lit(1)).alias("n_corpus"))
+    return (
+        pre.withColumn("prn", F.row_number().over(w))
+        .crossJoin(F.broadcast(ncnt))
+        .filter(F.expr(
+            f"prn <= GREATEST({RERANK_MIN},"
+            f" (n_corpus + {RERANK_DIV - 1}) DIV {RERANK_DIV})"
+        ))
+        .select("query_id", "neighbor_id")
+    )
+
+
+def _ann_topk(scored: DataFrame) -> DataFrame:
+    """Top-10 by (cosine desc, neighbor_id) per query — the same total
+    order in every spec and oracle."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
@@ -234,6 +308,17 @@ def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
+
+
+# ---------------------------------------------------------------------------
+# brute-force top-k (correctness baseline)
+# ---------------------------------------------------------------------------
+
+def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-10 cosine neighbours for each query vector: every
+    vector is a candidate (the broadcast queries cross the corpus)."""
+    base = _quantized(spark, sf_dir)
+    return _ann_topk(_exact_rerank(_queries(base), _neighbors(base)))
 
 
 ORACLE_TOPK_COSINE = f"""
@@ -326,43 +411,17 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     qc = chunks.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
         "vec_id AS query_id", "c", "ck"
     )
-    # narrow candidate join (ids only); vectors re-attach afterwards so
+    # narrow candidate join (ids only); vectors attach afterwards so
     # the distinct shuffles 16-byte rows, not embedding arrays.
     cand = (
-        F.broadcast(qc)
-        .join(chunks.selectExpr("vec_id AS neighbor_id", "c", "ck"),
-              ["c", "ck"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+        _pairs(qc, chunks.selectExpr("vec_id AS neighbor_id", "c", "ck"),
+               ["c", "ck"])
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    scored = cand.join(
-        F.broadcast(
-            base.selectExpr("vec_id AS query_id", "q AS qa", "nn AS na")
-        ),
-        "query_id",
-    ).join(
-        base.selectExpr("vec_id AS neighbor_id", "q AS qb", "nn AS nb"),
-        "neighbor_id",
-    ).selectExpr(
-        "query_id",
-        "neighbor_id",
-        _cosine(
-            "aggregate(zip_with(qa, qb, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)",
-            "na",
-            "nb",
-        )
-        + " AS cosine",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _ann_topk(_exact_rerank(
+        _queries(base), cand.join(_neighbors(base), "neighbor_id"), "query_id"
+    ))
 
 
 #: vectorized plane-sign computation: the lambda form (one 512x64
@@ -637,17 +696,17 @@ def _ivf_probes(queries: DataFrame, cents: DataFrame,
     )
 
 
-def _ann_topk(scored: DataFrame) -> DataFrame:
-    """Shared exact-re-rank tail: top-10 by (cosine desc, neighbor_id)
-    per query — the same total order in every ANN spec and oracle."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+def _ivf_flat(base: DataFrame, cents: DataFrame,
+              members: DataFrame) -> DataFrame:
+    """IVF-Flat search over the inverted file (``cents``, ``members``):
+    each query's ``FLAT_PROBE`` nearest cells, every member of them
+    exactly re-ranked. ``similarity_ann_ivf`` runs it on the spec's
+    index; tools/ann_recall.py on indexes of other K."""
+    probes = _ivf_probes(_queries(base), cents, FLAT_PROBE)
+    nside = members.selectExpr("vec_id AS neighbor_id", "cid").join(
+        _neighbors(base), "neighbor_id"
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _ann_topk(_exact_rerank(probes, nside, "cid"))
 
 
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,28 +723,11 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     final assignment is what you bucket the lake by, and the probe
     count is the recall/cost knob (``N_PROBE*N/K`` candidates/query).
     """
-    base = _quantized(spark, sf_dir)
-    queries = base.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
-        "vec_id AS query_id", "q AS qa", "nn AS na"
+    return _ivf_flat(
+        _quantized(spark, sf_dir),
+        _ivf_cents(spark, sf_dir),
+        _ivf_members(spark, sf_dir),
     )
-    probes = _ivf_probes(queries, _ivf_cents(spark, sf_dir), FLAT_PROBE)
-    scored = F.broadcast(probes).join(
-        _ivf_members(spark, sf_dir).join(base, "vec_id").selectExpr(
-            "vec_id AS neighbor_id", "q AS qb", "nn AS nb", "cid"
-        ),
-        "cid",
-    ).filter(F.col("query_id") != F.col("neighbor_id")).selectExpr(
-        "query_id",
-        "neighbor_id",
-        _cosine(
-            "aggregate(zip_with(qa, qb, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)",
-            "na",
-            "nb",
-        )
-        + " AS cosine",
-    )
-    return _ann_topk(scored)
 
 
 def _sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -741,63 +783,31 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = _quantized(spark, sf_dir)
     codes = _sq8_codes(spark, sf_dir)
-    queries = base.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
-        "vec_id AS query_id", "q AS qa", "nn AS na"
-    )
+    queries = _queries(base)
     probes = _ivf_probes(
         queries, _ivf_cents(spark, sf_dir), SQ8_PROBE
     ).select("query_id", "cid")
     qcodes = codes.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
         "vec_id AS query_id", "c8 AS q8", "n8 AS qn8"
     )
-    pre = (
-        F.broadcast(probes.join(qcodes, "query_id"))
-        .join(
-            _ivf_members(spark, sf_dir).join(codes, "vec_id").selectExpr(
-                "vec_id AS neighbor_id", "c8", "n8", "cid"
-            ),
-            "cid",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "CAST(aggregate(zip_with(q8, c8, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE)"
-            " / (sqrt(CAST(qn8 AS DOUBLE)) * sqrt(CAST(n8 AS DOUBLE)))"
-            " AS s8",
-        )
-    )
-    ncnt = _quantized(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n_corpus")
-    )
-    wpre = Window.partitionBy("query_id").orderBy(
-        F.desc("s8"), F.asc("neighbor_id")
-    )
-    rr = (
-        pre.withColumn("prn", F.row_number().over(wpre))
-        .crossJoin(F.broadcast(ncnt))
-        .filter(F.expr(
-            f"prn <= GREATEST({RERANK_MIN},"
-            f" (n_corpus + {RERANK_DIV - 1}) DIV {RERANK_DIV})"
-        ))
-        .select("query_id", "neighbor_id")
-    )
-    scored = rr.join(F.broadcast(queries), "query_id").join(
-        base.selectExpr("vec_id AS neighbor_id", "q AS qb", "nn AS nb"),
-        "neighbor_id",
+    pre = _pairs(
+        probes.join(qcodes, "query_id"),
+        _ivf_members(spark, sf_dir).join(codes, "vec_id").selectExpr(
+            "vec_id AS neighbor_id", "c8", "n8", "cid"
+        ),
+        "cid",
     ).selectExpr(
         "query_id",
         "neighbor_id",
-        _cosine(
-            "aggregate(zip_with(qa, qb, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)",
-            "na",
-            "nb",
-        )
-        + " AS cosine",
+        "CAST(aggregate(zip_with(q8, c8, (x, y) -> x * y),"
+        " CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE)"
+        " / (sqrt(CAST(qn8 AS DOUBLE)) * sqrt(CAST(n8 AS DOUBLE)))"
+        " AS s8",
     )
-    return _ann_topk(scored)
+    rr = _rerank_budget(pre, F.desc("s8"), base)
+    return _ann_topk(_exact_rerank(
+        queries, rr.join(_neighbors(base), "neighbor_id"), "query_id"
+    ))
 
 
 def _sql_lloyd_iteration(t: int, prev: str) -> str:
@@ -905,6 +915,31 @@ _SQL_ANN_TAIL = f"""ranked AS (
   FROM scored)
 SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
 FROM ranked WHERE rank <= {TOP_K}"""
+
+
+def _sql_budget_rerank(pre_order: str) -> str:
+    """Oracle twin of ``_rerank_budget`` + ``_exact_rerank`` +
+    ``_ann_topk`` over a ``pre(query_id, neighbor_id, …)`` CTE
+    pre-ranked by ``pre_order``."""
+    return f"""rr AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY {pre_order}, neighbor_id) AS prn
+    FROM pre)
+  WHERE prn <= (SELECT GREATEST({RERANK_MIN},
+                  (COUNT(*) + {RERANK_DIV - 1}) // {RERANK_DIV})
+                FROM qn)),
+scored AS (
+  SELECT r.query_id, r.neighbor_id,
+         {_cosine(
+             "list_reduce(list_transform(generate_series(1, len(a.qv)),"
+             " i -> a.qv[i] * b.qv[i]), (x, y) -> x + y)",
+             "a.nn", "b.nn")} AS cosine
+  FROM rr r
+  JOIN qn a ON a.vec_id = r.query_id
+  JOIN qn b ON b.vec_id = r.neighbor_id),
+{_SQL_ANN_TAIL}"""
 
 
 ORACLE_ANN_IVF = f"""
@@ -1061,25 +1096,7 @@ pre AS (
   JOIN af m ON m.cid = p.cid AND m.vec_id != p.query_id
   JOIN i8n bq ON bq.vec_id = p.query_id
   JOIN i8n bn ON bn.vec_id = m.vec_id),
-rr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY s8 DESC, neighbor_id) AS prn
-    FROM pre)
-  WHERE prn <= (SELECT GREATEST({RERANK_MIN},
-                  (COUNT(*) + {RERANK_DIV - 1}) // {RERANK_DIV})
-                FROM qn)),
-scored AS (
-  SELECT r.query_id, r.neighbor_id,
-         {_cosine(
-             "list_reduce(list_transform(generate_series(1, len(a.qv)),"
-             " i -> a.qv[i] * b.qv[i]), (x, y) -> x + y)",
-             "a.nn", "b.nn")} AS cosine
-  FROM rr r
-  JOIN qn a ON a.vec_id = r.query_id
-  JOIN qn b ON b.vec_id = r.neighbor_id),
-{_SQL_ANN_TAIL}
+{_sql_budget_rerank("s8 DESC")}
 """
 
 
@@ -1153,20 +1170,10 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness sits on the gate's critical path.
     """
     base = _quantized(spark, sf_dir)
-    enc = _pq_centers(spark, sf_dir)
-    queries = base.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
-        "vec_id AS query_id", "q AS qa"
-    )
-    pairs = (
-        F.broadcast(queries)
-        .crossJoin(enc.selectExpr("vec_id AS neighbor_id", "centers"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "aggregate(zip_with(qa, centers, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (a, x) -> a + x) AS adc_dist",
-        )
+    pairs = _adc_dist(
+        _queries(base),
+        _pq_centers(spark, sf_dir).selectExpr("vec_id AS neighbor_id",
+                                              "centers"),
     )
     w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
     return (
@@ -1256,54 +1263,18 @@ def similarity_pq_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row count relation crossJoined in-plan — no driver collect.
     """
     base = _quantized(spark, sf_dir)
-    queries = base.filter((F.col("vec_id") % QUERY_MOD) == 0).selectExpr(
-        "vec_id AS query_id", "q AS qa", "nn AS na"
+    queries = _queries(base)
+    pre = _adc_dist(
+        _ivf_probes(queries, _ivf_cents(spark, sf_dir), PQ_PROBE),
+        _ivf_members(spark, sf_dir)
+        .join(_pq_centers(spark, sf_dir), "vec_id")
+        .selectExpr("vec_id AS neighbor_id", "centers", "cid"),
+        "cid",
     )
-    probes = _ivf_probes(queries, _ivf_cents(spark, sf_dir), PQ_PROBE)
-    pre = (
-        F.broadcast(probes)
-        .join(
-            _ivf_members(spark, sf_dir)
-            .join(_pq_centers(spark, sf_dir), "vec_id")
-            .selectExpr("vec_id AS neighbor_id", "centers", "cid"),
-            "cid",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            "aggregate(zip_with(qa, centers, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (a, x) -> a + x) AS adc_dist",
-        )
-    )
-    ncnt = base.agg(F.count(F.lit(1)).alias("n_corpus"))
-    wpre = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    rr = (
-        pre.withColumn("prn", F.row_number().over(wpre))
-        .crossJoin(F.broadcast(ncnt))
-        .filter(F.expr(
-            f"prn <= GREATEST({RERANK_MIN},"
-            f" (n_corpus + {RERANK_DIV - 1}) DIV {RERANK_DIV})"
-        ))
-        .select("query_id", "neighbor_id")
-    )
-    scored = rr.join(F.broadcast(queries), "query_id").join(
-        base.selectExpr("vec_id AS neighbor_id", "q AS qb", "nn AS nb"),
-        "neighbor_id",
-    ).selectExpr(
-        "query_id",
-        "neighbor_id",
-        _cosine(
-            "aggregate(zip_with(qa, qb, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)",
-            "na",
-            "nb",
-        )
-        + " AS cosine",
-    )
-    return _ann_topk(scored)
+    rr = _rerank_budget(pre, F.asc("adc_dist"), base)
+    return _ann_topk(_exact_rerank(
+        queries, rr.join(_neighbors(base), "neighbor_id"), "query_id"
+    ))
 
 
 ORACLE_PQ_IVF = f"""
@@ -1321,25 +1292,7 @@ pre AS (
   JOIN qrys q ON q.query_id = p.query_id
   JOIN af m ON m.cid = p.cid AND m.vec_id != p.query_id
   JOIN dec d ON d.vec_id = m.vec_id),
-rr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY adc_dist ASC, neighbor_id) AS prn
-    FROM pre)
-  WHERE prn <= (SELECT GREATEST({RERANK_MIN},
-                  (COUNT(*) + {RERANK_DIV - 1}) // {RERANK_DIV})
-                FROM qn)),
-scored AS (
-  SELECT r.query_id, r.neighbor_id,
-         {_cosine(
-             "list_reduce(list_transform(generate_series(1, len(a.qv)),"
-             " i -> a.qv[i] * b.qv[i]), (x, y) -> x + y)",
-             "a.nn", "b.nn")} AS cosine
-  FROM rr r
-  JOIN qn a ON a.vec_id = r.query_id
-  JOIN qn b ON b.vec_id = r.neighbor_id),
-{_SQL_ANN_TAIL}
+{_sql_budget_rerank("adc_dist ASC")}
 """
 
 

@@ -121,8 +121,10 @@ HLL_PREFACTOR = (
 _HLL_PF = f"{HLL_PREFACTOR:.17e}"
 
 
-def hll_registers(df: DataFrame, key: str) -> DataFrame:
-    """(bucket → max rank) HLL register state for ``df[key]``.
+def hll_registers(df: DataFrame, key: str, *groups: str) -> DataFrame:
+    """(group…, bucket → max rank) HLL register state for ``df[key]``,
+    one register table per value of the ``groups`` columns (none: one
+    table).
 
     Works identically over a batch DataFrame and a streaming one (max
     is a supported streaming aggregate; with complete output mode the
@@ -132,18 +134,20 @@ def hll_registers(df: DataFrame, key: str) -> DataFrame:
     """
     h = _hll_hash(key, "spark")
     return (
-        df.selectExpr(f"{h} AS h")
+        df.selectExpr(*groups, f"{h} AS h")
         .selectExpr(
+            *groups,
             f"h % {HLL_M} AS bucket",
             # 23-bit remainder; rank = leading zeros + 1 = 24 - bitlen
             f"CAST(h / {HLL_M} AS BIGINT) AS rem",
         )
         .selectExpr(
+            *groups,
             "bucket",
             "CASE WHEN rem = 0 THEN 24 ELSE 24 - length(bin(rem)) END"
             " AS rank",
         )
-        .groupBy("bucket")
+        .groupBy(*groups, "bucket")
         .agg(F.max("rank").alias("m_j"))
     )
 
@@ -240,25 +244,13 @@ def sketch_hll_merge_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     its raw estimate and the exact distinct count for error inspection.
     """
     ev = load_table(spark, sf_dir, "events").where("user_id IS NOT NULL")
-    h = _hll_hash("user_id", "spark")
-    per_src = (
+    per_src = hll_registers(
         ev.selectExpr(
             "CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END AS src",
-            f"{h} AS h",
-        )
-        .selectExpr(
-            "src",
-            f"h % {HLL_M} AS bucket",
-            f"CAST(h / {HLL_M} AS BIGINT) AS rem",
-        )
-        .selectExpr(
-            "src",
-            "bucket",
-            "CASE WHEN rem = 0 THEN 24 ELSE 24 - length(bin(rem)) END"
-            " AS rank",
-        )
-        .groupBy("src", "bucket")
-        .agg(F.max("rank").alias("m_j"))
+            "user_id",
+        ),
+        "user_id",
+        "src",
     )
     merged = (
         per_src.groupBy("bucket")
@@ -364,23 +356,7 @@ def sketch_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     error inspection. Same integer-only estimator as the global spec.
     """
     ev = load_table(spark, sf_dir, "events").where("user_id IS NOT NULL")
-    h = _hll_hash("user_id", "spark")
-    regs = (
-        ev.selectExpr("event_type", f"{h} AS h")
-        .selectExpr(
-            "event_type",
-            f"h % {HLL_M} AS bucket",
-            f"CAST(h / {HLL_M} AS BIGINT) AS rem",
-        )
-        .selectExpr(
-            "event_type",
-            "bucket",
-            "CASE WHEN rem = 0 THEN 24 ELSE 24 - length(bin(rem)) END"
-            " AS rank",
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rank").alias("m_j"))
-    )
+    regs = hll_registers(ev, "user_id", "event_type")
     types = ev.select("event_type").distinct()
     buckets = types.crossJoin(
         spark.range(HLL_M).selectExpr("CAST(id AS BIGINT) AS bucket")
@@ -805,22 +781,8 @@ def sketch_hll_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     inspection (the expensive half — drop it at 100 TB).
     """
     ev = load_table(spark, sf_dir, "events")
-    h = _hll_hash("user_id", "spark")
-    per_day = (
-        ev.selectExpr("CAST(ts AS DATE) AS d", f"{h} AS hh")
-        .selectExpr(
-            "d",
-            f"hh % {HLL_M} AS bucket",
-            f"CAST(hh / {HLL_M} AS BIGINT) AS rem",
-        )
-        .selectExpr(
-            "d",
-            "bucket",
-            "CASE WHEN rem = 0 THEN 24 ELSE 24 - length(bin(rem)) END"
-            " AS rank",
-        )
-        .groupBy("d", "bucket")
-        .agg(F.max("rank").alias("m_j"))
+    per_day = hll_registers(
+        ev.selectExpr("CAST(ts AS DATE) AS d", "user_id"), "user_id", "d"
     )
     days = per_day.select("d").distinct()
     buckets = spark.range(HLL_M).selectExpr("CAST(id AS BIGINT) AS bucket")

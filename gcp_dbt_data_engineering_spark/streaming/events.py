@@ -917,19 +917,10 @@ def run_bloom_word_stream(
     algebras under streaming state: the filter stays queryable
     mid-stream as a live membership pre-filter.
     """
-    from ..operators.sketch import BLOOM_WORD, bloom_positions
+    from ..operators.sketch import bloom_words
 
-    words = (
-        bloom_positions(
-            _event_stream(spark, sf_dir).select("user_id"), "user_id"
-        )
-        .selectExpr(
-            f"CAST(pos / {BLOOM_WORD} AS BIGINT) AS word",
-            f"shiftleft(CAST(1 AS BIGINT), CAST(pos % {BLOOM_WORD} AS INT))"
-            " AS bit",
-        )
-        .groupBy("word")
-        .agg(F.expr("bit_or(bit)").alias("bits"))
+    words = bloom_words(
+        _event_stream(spark, sf_dir), "user_id", distinct=False
     )
     return _drain_to_memory(words, query_name, "complete")
 

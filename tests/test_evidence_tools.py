@@ -10,6 +10,9 @@
   two concurrent holders. The rename-to-tombstone break admits exactly
   one winner; the mutual-exclusion invariant is asserted under a real
   thread race against a pre-staled lock.
+- ``tools/ann_recall.py`` / ``tools/ann_candidates.py`` call the
+  similarity specs' own search steps with the index they build; the
+  last test pins that they still measure the spec.
 """
 
 from __future__ import annotations
@@ -132,3 +135,34 @@ def test_table_lock_stale_break_single_winner(tmp_path):
     # no tombstone leftovers from the break
     leftovers = [p for p in os.listdir(tmp_path) if ".stale." in p]
     assert leftovers == []
+
+
+def test_ann_tools_measure_the_spec_pipeline(spark):
+    """The ANN evidence tools measure the specs' own search pipeline:
+    the recall tool's K-parameterized IVF-Flat path, run at K = IVF_K,
+    returns exactly the rows of ``similarity_ann_ivf``, and the
+    candidate audit's probe step yields the spec's (query, cell) pairs
+    on the spec's index."""
+    from ann_candidates import _probes, ivf_index
+    from ann_recall import _ivf_flat_k
+
+    from gcp_dbt_data_engineering_spark.operators import similarity as S
+
+    sf = "/root/testdata/sf0.01"
+    spec_rows = sorted(
+        S.SPECS["similarity_ann_ivf"].spark(spark, sf).collect()
+    )
+    assert spec_rows
+    assert sorted(_ivf_flat_k(spark, sf, S.IVF_K).collect()) == spec_rows
+
+    base = S._quantized(spark, sf)
+    cents, _ = ivf_index(base, S.IVF_K)
+    for n_probe in (S.FLAT_PROBE, S.SQ8_PROBE):
+        tool = {tuple(r) for r in _probes(base, cents, n_probe).collect()}
+        spec = {
+            tuple(r)
+            for r in S._ivf_probes(
+                S._queries(base), S._ivf_cents(spark, sf), n_probe
+            ).select("query_id", "cid").collect()
+        }
+        assert tool and tool == spec

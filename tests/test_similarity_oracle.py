@@ -76,7 +76,7 @@ def test_ann_recall_vs_bruteforce(spark):
 #: near-random corpus RISES with N (0.300 at n=500 -> 0.352 at
 #: n=2000), and sign-LSH band collision tracks it. r11 engineered the
 #: floor away with size-adaptive banding (similarity.band_geometry:
-#: the same 448 planes regroup into 64x7 below SMALL_N=5000 vectors),
+#: the same 448 planes regroup into 64x7 below SMALL_N=1000 vectors),
 #: re-measured: lsh 0.805 @ sf0.001 and 0.855 @ sf0.01 — both above
 #: the VERDICT r10 item-4 target of 0.7, oracle still hash-exact at
 #: every SF (the geo CTE derives the identical split from COUNT(*)).

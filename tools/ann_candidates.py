@@ -19,9 +19,10 @@ Variants:
   audit shows linear-in-N growth: the published knob is band
   count/width, not corpus-side magic.
 - ``ivf_flat``: rows in the FLAT_PROBE probed cells (minus self when
-  the query's own cell is probed) — probes replayed with the spec's
-  exact rule (avalanched-seed k-means, int64 L2, ties to the smaller
-  cid). All of these rows get exact math.
+  the query's own cell is probed) — the spec's own query set and
+  probe step (``similarity._queries`` / ``_ivf_probes``) over an index
+  trained with the spec's fit and assignment. All of these rows get
+  exact math.
 - ``ivf_sq8``: rows in the SQ8_PROBE probed cells — but these are
   scanned through 4x int8 codes; the exact-math budget is only the
   compressed top max(RERANK_MIN, N/RERANK_DIV) per query, reported
@@ -49,8 +50,10 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from gcp_dbt_data_engineering_spark.session import get_spark  # noqa: E402
-from gcp_dbt_data_engineering_spark.sources import load_table  # noqa: E402
+from gcp_dbt_data_engineering_spark.session import (  # noqa: E402
+    clear_caches,
+    get_spark,
+)
 from gcp_dbt_data_engineering_spark.operators.similarity import (  # noqa: E402
     BAND_BITS,
     FLAT_PROBE,
@@ -63,8 +66,10 @@ from gcp_dbt_data_engineering_spark.operators.similarity import (  # noqa: E402
     RERANK_MIN,
     SQ8_PROBE,
     _assign_cids,
+    _ivf_probes,
     _kmeans_cents_df,
     _quantized,
+    _queries,
     _spark_chunks,
     band_geometry,
 )
@@ -92,22 +97,22 @@ def _stats(perq: DataFrame, n_corpus: int) -> dict:
     }
 
 
-def _l2_probes(queries: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
-    """(vec_id, cid) rows for each query's n_probe nearest centroids —
-    the spec's probe rule: exact int64 L2, ties to the smaller cid."""
-    from pyspark.sql import Window
-
-    l2 = queries.crossJoin(F.broadcast(cents)).selectExpr(
-        "vec_id",
-        "cid",
-        "aggregate(zip_with(q, cv, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v) AS l2",
+def ivf_index(base: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """(cents, members): a ``k``-cell inverted file trained with the
+    spec's Lloyd fit and assignment — at ``k = IVF_K`` the spec's own
+    ``_ivf_cents`` / ``_ivf_members``."""
+    cents = _kmeans_cents_df(base, k, IVF_ITERS)
+    members = _assign_cids(
+        base.select("vec_id", "q"), cents, extra_cols=("vec_id",)
     )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("l2"), F.asc("cid"))
-    return (
-        l2.withColumn("pr", F.row_number().over(w))
-        .filter(F.col("pr") <= n_probe)
-        .select("vec_id", "cid")
+    return cents, members
+
+
+def _probes(base: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """(vec_id, cid): the spec's queries and their ``n_probe`` probed
+    cells of the index ``cents`` — the spec's own probe step."""
+    return _ivf_probes(_queries(base), cents, n_probe).selectExpr(
+        "query_id AS vec_id", "cid"
     )
 
 
@@ -177,7 +182,7 @@ def main() -> int:
     out: dict[str, dict] = {}
     for sf_dir in sys.argv[1:]:
         sf_dir = os.path.abspath(sf_dir)
-        base = _quantized(spark, sf_dir).select("vec_id", "q").persist()
+        base = _quantized(spark, sf_dir)
         n = base.count()
         rec: dict[str, object] = {"n_vectors": n}
 
@@ -195,16 +200,10 @@ def main() -> int:
         rec["lsh"] = _stats(perq, n)
         chunks.unpersist()
 
-        queries = base.filter((F.col("vec_id") % QUERY_MOD) == 0)
-
         # --- trained IVF (shared by both IVF specs), K sweep ----------
         for k in K_SWEEP:
-            cents = _kmeans_cents_df(base, k, IVF_ITERS)
-            assigned = (
-                _assign_cids(base, cents, extra_cols=("vec_id",))
-                .withColumnRenamed("cid", "own_cid")
-                .persist()
-            )
+            cents, members = ivf_index(base, k)
+            assigned = members.withColumnRenamed("cid", "own_cid").persist()
             sizes = (
                 assigned.groupBy("own_cid").agg(F.count("*").alias("sz"))
                 .withColumnRenamed("own_cid", "cid")
@@ -212,11 +211,11 @@ def main() -> int:
             if k == IVF_K:
                 # the two spec probing styles over the spec's index
                 rec["ivf_flat"] = _probed_stats(
-                    _l2_probes(queries, cents, FLAT_PROBE),
+                    _probes(base, cents, FLAT_PROBE),
                     sizes, assigned, n,
                 )
                 sq8 = _probed_stats(
-                    _l2_probes(queries, cents, SQ8_PROBE),
+                    _probes(base, cents, SQ8_PROBE),
                     sizes, assigned, n,
                 )
                 sq8["note"] = (
@@ -230,7 +229,7 @@ def main() -> int:
                 )
                 rec["ivf_sq8"] = sq8
                 pq = _probed_stats(
-                    _l2_probes(queries, cents, PQ_PROBE),
+                    _probes(base, cents, PQ_PROBE),
                     sizes, assigned, n,
                 )
                 pq["note"] = (
@@ -245,7 +244,7 @@ def main() -> int:
                 rec["pq_ivf"] = pq
             else:
                 rec[f"ivf_flat_k{k}"] = _probed_stats(
-                    _l2_probes(queries, cents, FLAT_PROBE),
+                    _probes(base, cents, FLAT_PROBE),
                     sizes, assigned, n,
                 )
             assigned.unpersist()
@@ -255,7 +254,7 @@ def main() -> int:
                          "note": "compressed (8x) full scan by design"}
         rec["topk_cosine"] = {"mean": n - 1, "frac_of_corpus": 1.0,
                               "note": "exact brute-force baseline"}
-        base.unpersist()
+        clear_caches(spark)
         out[os.path.basename(sf_dir)] = rec
         print(os.path.basename(sf_dir), json.dumps(rec), flush=True)
         # checkpoint after EVERY sf: a dying multi-hour run keeps the

@@ -56,7 +56,7 @@ OUT_PATH = os.path.join(REPO, "ANN_RECALL.json")
 
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from ann_candidates import write_merged  # noqa: E402  (merge-then-write)
+from ann_candidates import ivf_index, write_merged  # noqa: E402
 
 
 def _topk_sets(df) -> dict[int, set]:
@@ -74,45 +74,12 @@ def _recall(ann_df, bf: dict[int, set], n_pairs: int) -> float:
 
 
 def _ivf_flat_k(spark, sf_dir: str, k: int):
-    """The similarity_ann_ivf pipeline with a parameterized K: same
-    quantized base, same Lloyd fit (iters/seed rules), same FLAT_PROBE
-    probing and exact re-rank — only the cell count varies."""
-    from pyspark.sql import functions as F
-
+    """The similarity_ann_ivf pipeline (``similarity._ivf_flat``) over a
+    freshly trained K-cell index — only the cell count varies."""
     from gcp_dbt_data_engineering_spark.operators import similarity as S
 
     base = S._quantized(spark, sf_dir)
-    cents = S._kmeans_cents_df(base, k, S.IVF_ITERS)
-    members = S._assign_cids(
-        base.select("vec_id", "q"), cents, extra_cols=("vec_id",)
-    )
-    queries = base.filter(
-        (F.col("vec_id") % S.QUERY_MOD) == 0
-    ).selectExpr("vec_id AS query_id", "q AS qa", "nn AS na")
-    probes = S._ivf_probes(queries, cents, S.FLAT_PROBE)
-    scored = (
-        F.broadcast(probes)
-        .join(
-            members.join(base, "vec_id").selectExpr(
-                "vec_id AS neighbor_id", "q AS qb", "nn AS nb", "cid"
-            ),
-            "cid",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            S._cosine(
-                "aggregate(zip_with(qa, qb, (x, y) -> x * y),"
-                " CAST(0 AS BIGINT), (acc, v) -> acc + v)",
-                "na",
-                "nb",
-            )
-            + " AS cosine",
-        )
-    )
-    return S._ann_topk(scored)
-
+    return S._ivf_flat(base, *ivf_index(base, k))
 
 
 def _dedup_gt_recall(spark, sf_dir: str, names, max_queries: int = 200):
@@ -133,31 +100,16 @@ def _dedup_gt_recall(spark, sf_dir: str, names, max_queries: int = 200):
 
     base = S._quantized(spark, sf_dir)
     qmod = S.QUERY_MOD
-    nq = base.filter((F.col("vec_id") % qmod) == 0).count()
+    nq = S._queries(base).count()
     stride = max(1, -(-nq // max_queries))
-    qpred = (F.col("vec_id") % (qmod * stride)) == 0
     ck = base.selectExpr("vec_id", "xxhash64(q) AS ck").persist()
-    queries = base.filter(qpred).selectExpr(
-        "vec_id AS query_id", "q AS qa", "nn AS na"
+    queries = S._queries(base).filter(
+        (F.col("query_id") % (qmod * stride)) == 0
     )
     qck = ck.withColumnRenamed("vec_id", "query_id").withColumnRenamed(
         "ck", "qck"
     )
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(base.selectExpr(
-            "vec_id AS neighbor_id", "q AS qb", "nn AS nb"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            S._cosine(
-                "aggregate(zip_with(qa, qb, (x, y) -> x * y),"
-                " CAST(0 AS BIGINT), (acc, v) -> acc + v)",
-                "na", "nb",
-            ) + " AS cosine",
-        )
-    )
+    scored = S._exact_rerank(queries, S._neighbors(base))
     grouped = (
         scored
         .join(ck.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
